@@ -444,7 +444,7 @@ def q_assemble_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_extension.py::test_fully_packed_pipeline_matches_string_rank)
     counts = count_kmers_packed(
         _dna(spark, sf_dir), k, min_coverage=2, decode=False
-    ).withColumnRenamed("packed", "kid").localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     pruned = prune_forks_packed(
         expand_orientations_packed(counts, k, input_canonical=True), k
     )

@@ -18,14 +18,13 @@ ASCII string (~56 B); at k=95 it is 4 longs (~56 B) vs ~104 B. All
 block manipulation (reverse complement, sub-k-mer keys, decode) is pure
 Catalyst shift/mask expressions generated per (k, overlap) at plan
 time — no Python in the hot path; only the counting encode crosses to
-numpy, Arrow-batched, one column per block.
+numpy, Arrow-batched, one column per block (the shared counting kernel,
+:func:`reflexiv_spark.operators._codec.count_ids`; the assembly stages run
+over these ids through :data:`reflexiv_spark.operators._codec.BLOCKS`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,8 +32,11 @@ from reflexiv_spark.operators.counter import (
     DEFAULT_MAX_COVERAGE,
     DEFAULT_MIN_COVERAGE,
 )
-from reflexiv_spark.operators.counter_packed import _CODE, _M2, _M4, _M8, _M16
-from reflexiv_spark.plans.layout import spread
+from reflexiv_spark.operators.counter_packed import (
+    kmer_to_packed,
+    packed_to_kmer,
+    revcomp_packed,
+)
 
 BASES_PER_BLOCK = 31
 
@@ -43,52 +45,6 @@ def block_lens(k: int) -> list[int]:
     """Per-block digit counts: [31, 31, ..., remainder]."""
     nb = (k + BASES_PER_BLOCK - 1) // BASES_PER_BLOCK
     return [BASES_PER_BLOCK] * (nb - 1) + [k - BASES_PER_BLOCK * (nb - 1)]
-
-
-def _pack_batch_blocks(seqs, k: int) -> np.ndarray:
-    """All canonical k-mers of a batch as an (n, n_blocks) int64 matrix.
-
-    Same one-buffer rolling-encode strategy as the scalar
-    ``_pack_batch``, run once per block; the reverse complement reuses
-    the complemented-reversed buffer (window i's RC starts at position
-    m-k-i there, which is the same rolling array read backwards).
-    """
-    lens = block_lens(k)
-    nb = len(lens)
-    joined = b"\x00".join(s.encode() for s in seqs if s)
-    if len(joined) < k:
-        return np.empty((0, nb), dtype=np.int64)
-    codes = _CODE[np.frombuffer(joined, dtype=np.uint8)]
-    n = len(codes) - k + 1
-
-    valid = (codes != 255).astype(np.int64)
-    run = np.cumsum(valid)
-    ok = (run[k - 1 :] - np.concatenate(([0], run[: n - 1]))) == k
-    if not ok.any():
-        return np.empty((0, nb), dtype=np.int64)
-
-    c = np.where(codes == 255, 0, codes).astype(np.int64)
-    c2 = (3 - c)[::-1]
-    fwd = np.empty((n, nb), dtype=np.int64)
-    rc = np.empty((n, nb), dtype=np.int64)
-    for j in range(nb):
-        start = BASES_PER_BLOCK * j
-        facc = np.zeros(n, dtype=np.int64)
-        racc = np.zeros(n, dtype=np.int64)
-        for t in range(lens[j]):
-            idx = start + t
-            facc = (facc << 2) | c[idx : idx + n]
-            racc = (racc << 2) | c2[idx : idx + n]
-        fwd[:, j] = facc
-        rc[:, j] = racc[::-1]
-
-    # canonical = lexicographic min over the block columns
-    use_rc = np.zeros(n, dtype=bool)
-    decided = np.zeros(n, dtype=bool)
-    for j in range(nb):
-        use_rc |= ~decided & (rc[:, j] < fwd[:, j])
-        decided |= fwd[:, j] != rc[:, j]
-    return np.where(use_rc[:, None], rc, fwd)[ok]
 
 
 # ---------------------------------------------------------------------------
@@ -164,20 +120,8 @@ def _drop_digits(
 
 def _chunks_to_str(chunks: list[tuple[Column, int]]) -> Column:
     """Digit chunks → A/C/G/T string (JVM-side conv/lpad/translate)."""
-    parts = [
-        F.translate(F.lpad(F.conv(expr, 10, 4), ln, "0"), "0123", "ACGT")
-        for expr, ln in chunks
-    ]
+    parts = [packed_to_kmer(expr, ln) for expr, ln in chunks]
     return parts[0] if len(parts) == 1 else F.concat(*parts)
-
-
-def _bitrev2(x: Column) -> Column:
-    """Reverse the 32 2-bit groups of a 64-bit word (mask-swap)."""
-    for mask, n in ((_M2, 2), (_M4, 4), (_M8, 8), (_M16, 16)):
-        x = F.shiftleft(x.bitwiseAND(F.lit(mask)), n).bitwiseOR(
-            F.shiftrightunsigned(x, n).bitwiseAND(F.lit(mask))
-        )
-    return F.shiftleft(x, 32).bitwiseOR(F.shiftrightunsigned(x, 32))
 
 
 def kmer_to_blocks(col: Column | str, k: int) -> Column:
@@ -186,13 +130,7 @@ def kmer_to_blocks(col: Column | str, k: int) -> Column:
     parts = []
     pos = 1
     for ln in block_lens(k):
-        parts.append(
-            F.conv(
-                F.translate(c.substr(F.lit(pos), F.lit(ln)), "ACGT", "0123"),
-                4,
-                10,
-            ).cast("long")
-        )
+        parts.append(kmer_to_packed(c.substr(F.lit(pos), F.lit(ln)), ln))
         pos += ln
     return F.array(*parts)
 
@@ -203,17 +141,11 @@ def blocks_to_kmer(col: Column | str, k: int) -> Column:
 
 
 def revcomp_blocks(col: Column | str, k: int) -> Column:
-    """Reverse complement over block arrays — per-block complement +
-    2-bit-group reversal, then one cross-block rechunk. Pure Catalyst
-    (the multi-long analogue of ``revcomp_packed``)."""
-    lens = block_lens(k)
-    rev_chunks: list[tuple[Column, int]] = []
-    for j in range(len(lens) - 1, -1, -1):
-        e, ln = _chunks_of(col, k)[j]
-        x = e.bitwiseXOR(F.lit((1 << (2 * ln)) - 1))
-        x = F.shiftrightunsigned(_bitrev2(x), 64 - 2 * ln)
-        rev_chunks.append((x, ln))
-    return F.array(*_rechunk(rev_chunks, lens))
+    """Reverse complement over block arrays — ``revcomp_packed`` of each
+    block in reverse block order, then one cross-block rechunk. Pure
+    Catalyst."""
+    rev = [(revcomp_packed(e, ln), ln) for e, ln in _chunks_of(col, k)[::-1]]
+    return F.array(*_rechunk(rev, block_lens(k)))
 
 
 def canonical_blocks(col: Column | str, k: int) -> Column:
@@ -263,29 +195,6 @@ def count_kmers_blocks(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    nb = len(block_lens(k))
-    cols = [f"b{j}" for j in range(nb)]
+    from reflexiv_spark.operators._codec import BLOCKS, count_ids
 
-    def encode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            m = _pack_batch_blocks(pdf["seq"], k)
-            yield pd.DataFrame({c: m[:, j] for j, c in enumerate(cols)})
-
-    src = spread(reads.select(F.col(seq_col).alias("seq")))
-    packed = src.mapInPandas(
-        encode, schema=", ".join(f"{c} long" for c in cols)
-    )
-    counts = (
-        packed.select(F.array(*cols).alias("kid"))
-        .groupBy("kid")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-    if min_coverage is not None and min_coverage > 1:
-        counts = counts.where(F.col("count") >= min_coverage)
-    if max_coverage is not None:
-        counts = counts.where(F.col("count") <= max_coverage)
-    if not decode:
-        return counts
-    return counts.select(blocks_to_kmer("kid", k).alias("kmer"), "count")
+    return count_ids(BLOCKS, reads, k, seq_col, min_coverage, max_coverage, decode)

@@ -1,16 +1,18 @@
-"""2-bit packed k-mer counting — the optional fast path (k ≤ 31).
+"""2-bit packed k-mer ids for k ≤ 31 — one signed long per k-mer.
 
 The reference packs k-mers into longs inside Java ``mapPartitions``
 closures (2 bits/base, canonical pick = numeric min of forward/RC,
-``ReflexivDataFrameCounter.java:448-525``). The default engine path
-(:mod:`reflexiv_spark.operators.counter`) keeps k-mers as strings so the
-whole pipeline stays in Catalyst codegen; this module is the SURVEY.md
-§1.3 "fast-later" variant: an Arrow-batched pandas UDF emits canonical
-packed ``bigint`` k-mers (vectorized numpy rolling encode — one pass over
-a batch-concatenated byte buffer, no per-row Python), the count is a
+``ReflexivDataFrameCounter.java:448-525``). This module holds that
+format's column algebra — encode, decode, reverse complement, canonical
+pick — as JVM-side Catalyst expressions, and the ``count_kmers_packed``
+entry point of the shared counting kernel
+(:func:`reflexiv_spark.operators._codec.count_ids`): an Arrow-batched
+numpy rolling encode emits canonical packed ``bigint`` ids, the count is a
 ``groupBy`` over 8-byte longs (≈4× smaller shuffle than 31-char strings),
-and the decode back to A/C/G/T strings is JVM-side (``conv`` to base-4 +
-``translate``), so only the encode crosses into Python.
+and the decode back to A/C/G/T strings is ``conv`` to base 4 +
+``translate``, so only the encode crosses into Python. With
+``decode=False`` the ids flow on through the packed assembly stages
+(:data:`reflexiv_spark.operators._codec.PACKED`).
 
 Numeric canonical == lexicographic canonical because the 2-bit code
 A=00 < C=01 < G=10 < T=11 is order-isomorphic to the alphabet
@@ -19,58 +21,13 @@ A=00 < C=01 < G=10 < T=11 is order-isomorphic to the alphabet
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from reflexiv_spark.operators.counter import (
     DEFAULT_MAX_COVERAGE,
     DEFAULT_MIN_COVERAGE,
 )
-from reflexiv_spark.plans.layout import spread
-
-# byte value -> 2-bit code; 255 marks every non-ACGT byte (invalid)
-_CODE = np.full(256, 255, dtype=np.uint8)
-for _b, _c in zip(b"ACGT", range(4)):
-    _CODE[_b] = _c
-for _b, _c in zip(b"acgt", range(4)):
-    _CODE[_b] = _c
-
-
-def _pack_batch(seqs, k: int) -> np.ndarray:
-    """All canonical packed k-mers of a batch of sequences (int64).
-
-    Sequences are joined into ONE byte buffer with a separator so every
-    numpy op runs once per batch; windows crossing a separator or any
-    non-ACGT byte are masked out via a rolling validity count.
-    """
-    joined = b"\x00".join(s.encode() for s in seqs if s)
-    if len(joined) < k:
-        return np.empty(0, dtype=np.int64)
-    codes = _CODE[np.frombuffer(joined, dtype=np.uint8)]
-    n = len(codes) - k + 1
-
-    valid = (codes != 255).astype(np.int64)
-    run = np.cumsum(valid)
-    # window i (0-based) valid iff all k bytes are ACGT
-    ok = (run[k - 1 :] - np.concatenate(([0], run[: n - 1]))) == k
-    if not ok.any():
-        return np.empty(0, dtype=np.int64)
-
-    c = np.where(codes == 255, 0, codes).astype(np.int64)
-    fwd = np.zeros(n, dtype=np.int64)
-    for j in range(k):
-        fwd = (fwd << 2) | c[j : j + n]
-    # reverse complement: encode the complemented, reversed buffer the
-    # same way; its window m-1-i is the RC of forward window i
-    rc_codes = (3 - c)[::-1]
-    rev = np.zeros(n, dtype=np.int64)
-    for j in range(k):
-        rev = (rev << 2) | rc_codes[j : j + n]
-    rc = rev[::-1]
-    return np.minimum(fwd, rc)[ok]
 
 
 def kmer_to_packed(col, k: int):
@@ -91,6 +48,15 @@ _M8 = 0x00FF00FF00FF00FF
 _M16 = 0x0000FFFF0000FFFF
 
 
+def _bitrev2(x: Column) -> Column:
+    """Reverse the 32 2-bit groups of a 64-bit word (mask-swap)."""
+    for mask, n in ((_M2, 2), (_M4, 4), (_M8, 8), (_M16, 16)):
+        x = F.shiftleft(x.bitwiseAND(F.lit(mask)), n).bitwiseOR(
+            F.shiftrightunsigned(x, n).bitwiseAND(F.lit(mask))
+        )
+    return F.shiftleft(x, 32).bitwiseOR(F.shiftrightunsigned(x, 32))
+
+
 def revcomp_packed(col, k: int):
     """Reverse complement of a packed k-mer — pure Catalyst bit ops (C3).
 
@@ -102,12 +68,7 @@ def revcomp_packed(col, k: int):
     """
     x = F.col(col) if isinstance(col, str) else col
     x = x.bitwiseXOR(F.lit((1 << (2 * k)) - 1))
-    for mask, n in ((_M2, 2), (_M4, 4), (_M8, 8), (_M16, 16)):
-        x = F.shiftleft(x.bitwiseAND(F.lit(mask)), n).bitwiseOR(
-            F.shiftrightunsigned(x, n).bitwiseAND(F.lit(mask))
-        )
-    x = F.shiftleft(x, 32).bitwiseOR(F.shiftrightunsigned(x, 32))
-    return F.shiftrightunsigned(x, 64 - 2 * k)
+    return F.shiftrightunsigned(_bitrev2(x), 64 - 2 * k)
 
 
 def canonical_packed(col, k: int):
@@ -138,31 +99,15 @@ def count_kmers_packed(
     max_coverage: int = DEFAULT_MAX_COVERAGE,
     decode: bool = True,
 ) -> DataFrame:
-    """Canonical k-mer counts via the packed fast path (k ≤ 31).
+    """Canonical k-mer counts over packed ids (k ≤ 31).
 
     Same semantics as :func:`reflexiv_spark.operators.counter.count_kmers`
     (canonical counting with coverage band); ``decode=False`` keeps the
-    packed ``bigint`` key (the shape downstream packed operators would
-    consume — and what a 100 TB shuffle wants to carry).
+    packed ``bigint`` id as DataFrame[kid, count] — the shape the packed
+    assembly stages consume, and what a 100 TB shuffle wants to carry.
     """
     if not 1 <= k <= 31:
         raise ValueError("packed path supports 1 <= k <= 31 (2 bits/base in int64)")
+    from reflexiv_spark.operators._codec import PACKED, count_ids
 
-    def encode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame({"packed": _pack_batch(pdf["seq"], k)})
-
-    src = spread(reads.select(F.col(seq_col).alias("seq")))
-    packed = src.mapInPandas(encode, schema="packed long")
-    counts = packed.groupBy("packed").agg(F.count(F.lit(1)).alias("count"))
-    # None bounds mean "no floor/ceiling", matching count_kmers — a literal
-    # None comparison would evaluate NULL and silently drop every row.
-    if min_coverage is not None and min_coverage > 1:
-        counts = counts.where(F.col("count") >= min_coverage)
-    if max_coverage is not None:
-        counts = counts.where(F.col("count") <= max_coverage)
-    if not decode:
-        return counts
-    return counts.select(packed_to_kmer("packed", k).alias("kmer"), "count")
+    return count_ids(PACKED, reads, k, seq_col, min_coverage, max_coverage, decode)

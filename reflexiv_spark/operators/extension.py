@@ -36,17 +36,32 @@ Scale notes (100 TB): per round = one hash exchange of surviving sequences
 replacing the reference's per-step SparkSession restarts + gzip-CSV
 barriers (``Pipelines.java:832-839``). Driver traffic is one scalar count
 per ``check_every`` rounds.
+
+The pointer-doubling alternative (:func:`rank_paths`) is ONE kernel over a
+k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII strings,
+2-bit packed longs (k ≤ 31) or long-block arrays (k > 31). The codec
+supplies the id column, the prefix/suffix join keys and the tail decode;
+``rank_paths_packed`` / ``rank_paths_blocks`` are its entry points over
+already-packed ids, and ``rank_paths`` picks the packed codec itself
+when its input is fixed-length pure ACGT.
 """
 
 from __future__ import annotations
 
 import math
-import os
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
+from reflexiv_spark.operators._codec import (
+    BLOCKS,
+    PACKED,
+    STRING,
+    KmerCodec,
+    codec_for,
+)
 
 # Reference iteration budget: DefaultParam.java:115.
 DEFAULT_MAX_ITERATIONS = 150
@@ -63,19 +78,11 @@ DEFAULT_MAX_ITERATIONS = 150
 # not an estimate (reset_stats deliberately discards the compounding
 # size stats, so Catalyst sees "unknown/huge" and would never broadcast
 # on its own), and it is scale-adaptive: a 100 TB run's billions of
-# rows exceed the gate and take the unchanged shuffle path. Default
-# 64 MB: a broadcast relation this size is comfortably inside guide-
-# class executor memory ("a few hundred MB is usually fine", far from
-# the 8 GB hard cap) while excluding any at-scale state; override with
-# SPARK_GRAFT_LOOP_BCAST_BYTES (0 disables).
-_LOOP_BCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LOOP_BCAST_BYTES", str(64 * 1024 * 1024))
-)
-
-# Escape hatch for the hashed loop-id proxy in rank_paths_blocks
-# (SPARK_GRAFT_HASHED_LOOP=0 pins the array-id loop; the injectivity
-# check below makes the two provably output-identical either way).
-_HASHED_LOOP_IDS = os.environ.get("SPARK_GRAFT_HASHED_LOOP", "1") != "0"
+# rows exceed the gate and take the unchanged shuffle path. 64 MB: a
+# broadcast relation this size is comfortably inside guide-class
+# executor memory ("a few hundred MB is usually fine", far from the
+# 8 GB hard cap) while excluding any at-scale state.
+_LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
 
 def _loop_broadcast_ok(n_rows: int | None, row_bytes: int | None) -> bool:
@@ -203,24 +210,19 @@ def rank_paths(
     a single aggregation buffer — same endgame footprint as the
     contraction scheme's final row carrying the whole contig string.
 
-    Shuffle representation: for k ≤ 31 over pure-ACGT fixed-length k-mers
-    (the common case after ``explode_kmers``' drop_invalid), ``packed``
+    Shuffle representation: over pure-ACGT fixed-length k-mers (the
+    common case after ``explode_kmers``' drop_invalid), ``packed``
     (auto-detected when None) swaps the per-round pointer columns from
-    ASCII k-mer strings to 2-bit-packed int64 ids — the reference's own
-    encoding (``ReflexivDataFrameCounter.java:513-525``) applied to the
-    dominant shuffle. Each round then exchanges three longs per row
-    (~24 B payload) instead of two k-byte strings, and strings are decoded
-    exactly once at final assembly via a long-keyed join back to the
-    (kmer, id) table. The packing is ``conv(translate(kmer,'ACGT','0123'),
-    4, 10)`` — injective for fixed-length ACGT, order-isomorphic to the
-    reference's numeric code — and the prefix/suffix join keys become
-    ``id >> 2*(k-o)`` / ``id & (4^o - 1)``: no string ops anywhere in the
-    loop, all whole-stage codegen.
+    ASCII k-mer strings to the reference's 2-bit encoding
+    (``ReflexivDataFrameCounter.java:513-525``): one int64 per k-mer for
+    k ≤ 31 (:func:`rank_paths_packed`), long blocks above
+    (:func:`rank_paths_blocks`). Each round then exchanges three longs per
+    row (~24 B payload) instead of two k-byte strings, the prefix/suffix
+    join keys are shift/mask ops, and strings are decoded exactly once at
+    final assembly.
     """
     o = (k - 1) if overlap is None else overlap
-    km = kmer_counts.select(
-        "kmer", F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)
+    km = _loop_input(kmer_counts, "kmer")
     # the lazy checkpoint sits BEFORE the packed guard so the guard's scan
     # materializes it and every later consumer (packed projection, or the
     # string path's pre/suc/decode-join) reads the barrier, not the
@@ -237,60 +239,16 @@ def rank_paths(
             .count()
         )
         packed = bad == 0 and 0 < o < k
-    if packed and k <= 31:
-        from reflexiv_spark.operators.counter_packed import kmer_to_packed
-
-        return rank_paths_packed(
-            km.select(kmer_to_packed("kmer", k).alias("kid"), "count"),
-            k,
-            max_rounds=max_rounds,
-            overlap=overlap,
-            checkpoint_every=checkpoint_every,
-        )
-    if packed:  # k > 31: long-block representation
-        from reflexiv_spark.operators.counter_blocks import kmer_to_blocks
-
-        return rank_paths_blocks(
-            km.select(kmer_to_blocks("kmer", k).alias("kid"), "count"),
-            k,
-            max_rounds=max_rounds,
-            overlap=overlap,
-            checkpoint_every=checkpoint_every,
-        )
-
-    # measured-count broadcast gate (see rank_paths_packed); string rows
-    # carry two k-char kmers + a long
-    n_km = km.count()
-    row_bytes = 2 * (k + 24) + 8
-    small = _loop_broadcast_ok(n_km, row_bytes)
-    pre = km.select(
-        F.col("kmer").alias("kid"), prefix_subkmer("kmer", o + 1).alias("__pk")
+    if not packed:
+        return _rank(STRING, km, k, overlap, max_rounds, checkpoint_every)
+    codec = codec_for(k, packed=True)
+    return codec.public(sys.modules[__name__], "rank_paths{}")(
+        km.select(codec.encode("kmer", k).alias("kid"), "count"),
+        k,
+        max_rounds=max_rounds,
+        overlap=overlap,
+        checkpoint_every=checkpoint_every,
     )
-    suc = km.select(
-        F.col("kmer").alias("__pred"), suffix_subkmer("kmer", o + 1).alias("__pk")
-    )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
-    state = _double_pointers(
-        state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
-    )
-    heads_j = F.broadcast(heads) if small else heads
-    done = state.join(heads_j, "anc", "left_semi")
-    km_j = km.select(F.col("kmer").alias("kid"), "kmer", "count")
-    if small:
-        km_j = F.broadcast(km_j)
-    parts = done.join(km_j, "kid").groupBy("anc").agg(
-        F.array_sort(
-            F.collect_list(F.struct("off", "kmer", "count"))
-        ).alias("xs")
-    )
-    rest_bases = F.array_join(
-        F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: x["kmer"].substr(F.lit(o + 1), F.length(x["kmer"])),
-        ),
-        "",
-    )
-    return _assemble_tail(parts, F.col("xs").getItem(0)["kmer"], rest_bases)
 
 
 def rank_paths_packed(
@@ -303,58 +261,10 @@ def rank_paths_packed(
     """:func:`rank_paths` over ALREADY-PACKED 2-bit bigint k-mer ids —
     DataFrame[kid: bigint, count] as produced by
     :func:`reflexiv_spark.operators.counter_packed.count_kmers_packed`
-    with ``decode=False``.
-
-    End-to-end string-free: prefix/suffix join keys are shift/mask ops,
-    every pointer round exchanges three longs per row, and bases are
-    decoded exactly once per surviving path segment at final assembly
-    (``conv``+``translate``, JVM-side). This is the 100 TB representation
-    the reference carries through its whole pipeline
-    (``ReflexivDataFrameCounter.java:513-525``).
-    """
-    o = (k - 1) if overlap is None else overlap
-    km = packed_counts.select(
-        "kid", F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)  # 3 consumers: pre, suc, final join
-    # ONE materializing count up front: runs the whole upstream pipeline
-    # into the checkpoint and gives the loop its exact row count (state
-    # rows == km rows under the fork-free precondition), so the doubling
-    # loop skips its own count job and the broadcast gate is driven by a
-    # measured size. State rows are 3 longs (~32 B unsafe); 64 B/row
-    # leaves 2x slack for the broadcast hash relation.
-    n_km = km.count()
-    row_bytes = 64
-    small = _loop_broadcast_ok(n_km, row_bytes)
-    pre = km.select("kid", F.shiftrightunsigned("kid", 2 * (k - o)).alias("__pk"))
-    suc = km.select(
-        F.col("kid").alias("__pred"),
-        F.col("kid").bitwiseAND(F.lit((1 << (2 * o)) - 1)).alias("__pk"),
-    )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
-    state = _double_pointers(
-        state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
-    )
-    heads_j = F.broadcast(heads) if small else heads
-    done = state.join(heads_j, "anc", "left_semi")
-    km_j = F.broadcast(km) if small else km
-    parts = done.join(km_j, "kid").groupBy("anc").agg(
-        F.array_sort(
-            F.collect_list(F.struct("off", "kid", "count"))
-        ).alias("xs")
-    )
-    from reflexiv_spark.operators.counter_packed import packed_to_kmer
-
-    low_mask = F.lit((1 << (2 * (k - o))) - 1)
-    rest_bases = F.array_join(
-        F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: packed_to_kmer(x["kid"].bitwiseAND(low_mask), k - o),
-        ),
-        "",
-    )
-    return _assemble_tail(
-        parts, packed_to_kmer(F.col("xs").getItem(0)["kid"], k), rest_bases
-    )
+    with ``decode=False``. End-to-end string-free: this is the 100 TB
+    representation the reference carries through its whole pipeline."""
+    km = _loop_input(packed_counts, "kid")
+    return _rank(PACKED, km, k, overlap, max_rounds, checkpoint_every)
 
 
 def rank_paths_blocks(
@@ -367,102 +277,96 @@ def rank_paths_blocks(
     """:func:`rank_paths` over long-block packed k-mers (k > 31) —
     DataFrame[kid: array<long>, count] as produced by
     :func:`reflexiv_spark.operators.counter_blocks.count_kmers_blocks`
-    with ``decode=False``.
-
-    The multi-long analogue of :func:`rank_paths_packed`: per round the
-    pointer exchange carries 2·⌈k/31⌉ longs + 1 per row (e.g. ~5 longs
-    at k=41 vs two 41-byte ASCII strings), join keys are plan-time
-    shift/mask rechunks, and bases decode exactly once at final
-    assembly. This is the reference's long-k array-of-longs encoding
+    with ``decode=False`` — the reference's long-k array-of-longs encoding
     (``ReflexivDSDynamicKmerRuduction.java:3220-3241``) carried through
-    the contraction loop.
-    """
-    from reflexiv_spark.operators.counter_blocks import (
-        blocks_to_kmer,
-        prefix_key_blocks,
-        suffix_key_blocks,
-        suffix_str_blocks,
-    )
+    the contraction loop."""
+    km = _loop_input(block_counts, "kid")
+    return _rank(BLOCKS, km, k, overlap, max_rounds, checkpoint_every)
 
+
+def _loop_input(counts: DataFrame, col: str) -> DataFrame:
+    # lazy barrier: three consumers (pre, suc, final join)
+    return counts.select(
+        col, F.col("count").cast("int").alias("count")
+    ).localCheckpoint(eager=False)
+
+
+def _rank(
+    codec: KmerCodec,
+    km: DataFrame,
+    k: int,
+    overlap: int | None,
+    max_rounds: int,
+    checkpoint_every: int,
+) -> DataFrame:
+    """The pointer-doubling kernel over ``codec`` ids: DataFrame[<codec.col>,
+    count] (checkpointed) → DataFrame[seq, left_cover, right_cover]."""
     o = (k - 1) if overlap is None else overlap
-    km = block_counts.select(
-        "kid", F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)  # 3 consumers: pre, suc, final join
-    # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
-    # instead of payloads"): every doubling round moves TWO array<long>
-    # pointers + an offset per row (~48+16·nb B unsafe at nb blocks),
-    # but the loop only ever tests pointer EQUALITY — the block digits
-    # are not consulted until final assembly. Riding the rounds on
-    # xxhash64(kid) collapses the per-round exchange/broadcast row to
-    # three longs (~4× fewer bytes at k=41, and scalar join hashing
-    # instead of array hashing), with the blocks re-attached by ONE
-    # hashed join at final assembly. Correctness is gated exactly, not
-    # probabilistically: one aggregation checks the hash is injective on
-    # THIS input (distinct hids == distinct kids); any collision — 2⁻⁶⁴
-    # birthday odds, but checked, not assumed — falls back to the
-    # array-id loop, so the result is provably identical either way.
-    kmh = km.select(
-        F.xxhash64("kid").alias("hid"),
-        F.col("kid").alias("bid"),
-        "count",
-    )
-    # ONE materializing pass computes both loop inputs: the exact row
-    # count (rounds bound + broadcast gate) and the injectivity witness
-    # — instead of a count job plus a separate distinct-agg job.
-    n_km, n_hid = kmh.agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("hid").alias("nh")
-    ).first()
-    hashed = _HASHED_LOOP_IDS and n_hid == n_km
-    row_bytes = 64 if hashed else 48 + 16 * ((k + 30) // 31)
-    small = _loop_broadcast_ok(n_km, row_bytes)
-    if hashed:
-        pre = kmh.select(
-            F.col("hid").alias("kid"),
-            prefix_key_blocks("bid", k, o).alias("__pk"),
-        )
-        suc = kmh.select(
-            F.col("hid").alias("__pred"),
-            suffix_key_blocks("bid", k, o).alias("__pk"),
-        )
+    c = codec.col
+    if codec.array_ids:
+        # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
+        # instead of payloads"): every doubling round would move TWO
+        # array<long> pointers + an offset per row (~48+16·nb B unsafe at
+        # nb blocks), but the loop only ever tests pointer EQUALITY — the
+        # block digits are not consulted until final assembly. Riding the
+        # rounds on xxhash64(kid) collapses the per-round exchange/
+        # broadcast row to three longs (~4× fewer bytes at k=41, and
+        # scalar join hashing instead of array hashing), with the blocks
+        # re-attached by ONE hashed join at final assembly. Correctness is
+        # gated exactly, not probabilistically: ONE materializing pass
+        # gives both the exact row count (rounds bound + broadcast gate)
+        # and the injectivity witness (distinct hids == rows); any
+        # collision — 2⁻⁶⁴ birthday odds, but checked, not assumed —
+        # falls back to the array-id loop, so the result is provably
+        # identical either way.
+        kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
+        n_km, n_hid = kmh.agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct("hid").alias("nh")
+        ).first()
+        hashed = n_hid == n_km
     else:
-        pre = km.select("kid", prefix_key_blocks("kid", k, o).alias("__pk"))
-        suc = km.select(
-            F.col("kid").alias("__pred"),
-            suffix_key_blocks("kid", k, o).alias("__pk"),
-        )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
+        # ONE materializing count up front: runs the whole upstream
+        # pipeline into the checkpoint and gives the loop its exact row
+        # count (state rows == km rows under the fork-free precondition),
+        # so the doubling loop skips its own count job and the broadcast
+        # gate is driven by a measured size
+        n_km, hashed = km.count(), False
+    src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
+    row_bytes = 64 if hashed else codec.row_bytes(k)
+    small = _loop_broadcast_ok(n_km, row_bytes)
+    pre = src.select(
+        F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
+    )
+    suc = src.select(
+        F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
+    )
+    state, heads = _init_pointers(pre, suc, broadcast_suc=small)
     state = _double_pointers(
         state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
     )
     heads_j = F.broadcast(heads) if small else heads
     done = state.join(heads_j, "anc", "left_semi")
-    if hashed:
-        km_j = F.broadcast(kmh) if small else kmh
-        parts = (
-            done.join(km_j, done["kid"] == km_j["hid"])
-            .groupBy("anc")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("off", F.col("bid").alias("kid"), "count"))
-                ).alias("xs")
-            )
-        )
-    else:
-        km_j = F.broadcast(km) if small else km
-        parts = done.join(km_j, "kid").groupBy("anc").agg(
-            F.array_sort(
-                F.collect_list(F.struct("off", "kid", "count"))
-            ).alias("xs")
-        )
+    # decode side: loop id as "kid" next to the codec id it stands for
+    km_j = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
+    if small:
+        km_j = F.broadcast(km_j)
+    parts = done.join(km_j, "kid").groupBy("anc").agg(
+        F.array_sort(
+            F.collect_list(F.struct("off", F.col(val).alias(c), "count"))
+        ).alias("xs")
+    )
+    xs = F.col("xs")
     rest_bases = F.array_join(
         F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: suffix_str_blocks(x["kid"], k, o),
+            F.slice(xs, 2, F.greatest(F.size(xs) - 1, F.lit(0))),
+            lambda x: codec.suffix_str(x[c], k, o),
         ),
         "",
     )
-    return _assemble_tail(
-        parts, blocks_to_kmer(F.col("xs").getItem(0)["kid"], k), rest_bases
+    return parts.select(
+        F.concat(codec.decode(xs.getItem(0)[c], k), rest_bases).alias("seq"),
+        xs.getItem(0)["count"].cast("int").alias("left_cover"),
+        F.element_at("xs", -1)["count"].cast("int").alias("right_cover"),
     )
 
 
@@ -470,7 +374,6 @@ def _init_pointers(
     pre: DataFrame,
     suc: DataFrame,
     broadcast_suc: bool = False,
-    eager: bool = True,
 ):
     """(state, heads) for the doubling loop: each k-mer points at its
     unique predecessor (fork-free input) or itself when it is a path head.
@@ -479,9 +382,8 @@ def _init_pointers(
 
     ``broadcast_suc`` joins the successor map as an explicit broadcast
     (callers set it from the measured-count gate — the init join then
-    rides the same narrow-stage path as the gated loop rounds).
-    ``eager=False`` leaves the state barrier lazy so the first consumer
-    (the caller's count, or the first loop window) materializes it in
+    rides the same narrow-stage path as the gated loop rounds). The
+    state barrier is lazy, so the first loop window materializes it in
     its own job instead of paying a dedicated checkpoint job."""
     from reflexiv_spark.plans.barriers import iteration_barrier
 
@@ -496,7 +398,7 @@ def _init_pointers(
             .cast("long")
             .alias("off"),
         ),
-        eager=eager,
+        eager=False,
     )
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
     return state, heads
@@ -506,7 +408,7 @@ def _double_pointers(
     state: DataFrame,
     max_rounds: int,
     checkpoint_every: int,
-    n_rows: int | None = None,
+    n_rows: int,
     row_bytes: int | None = None,
 ) -> DataFrame:
     """Pointer-doubling rounds over DataFrame[kid, anc, off].
@@ -514,11 +416,10 @@ def _double_pointers(
     Rounds are bounded by ceil(log2(n)): after that many doublings every
     head-reachable pointer has converged (path length ≤ n), so surviving
     CYCLES — whose members keep moving forever unless their length is a
-    power of two — cannot pin the loop at max_rounds. Callers that
-    already know the state row count pass ``n_rows`` (state rows == input
-    rows under the fork-free precondition) so the loop starts without
-    its own count job; otherwise the count materializes the (possibly
-    lazy) init barrier.
+    power of two — cannot pin the loop at max_rounds. Callers pass the
+    input row count as ``n_rows`` (state rows == input rows under the
+    fork-free precondition), so the loop starts without its own count
+    job.
 
     Every barrier is :func:`iteration_barrier` — plain
     ``localCheckpoint`` preserves the join's squared sizeInBytes
@@ -567,12 +468,8 @@ def _double_pointers(
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
-    # n_rows passed by the caller = fork-free CLAIM, verified at the
-    # first probe; n_rows measured here = ground truth, nothing to check
+    # n_rows is the caller's fork-free CLAIM, verified at the first probe
     claimed_rows = n_rows
-    if n_rows is None:
-        n_rows = state.count()
-        claimed_rows = None
     rounds = min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
     # measured-size broadcast gate (module docstring at _LOOP_BCAST_BYTES):
     # state row count is invariant across rounds (every kid keeps exactly
@@ -635,16 +532,6 @@ def _double_pointers(
         else:
             state = nxt.drop("__moved")
     return state
-
-
-def _assemble_tail(parts: DataFrame, first_bases, rest_bases) -> DataFrame:
-    first = F.col("xs").getItem(0)
-    last = F.element_at("xs", -1)
-    return parts.select(
-        F.concat(first_bases, rest_bases).alias("seq"),
-        first["count"].cast("int").alias("left_cover"),
-        last["count"].cast("int").alias("right_cover"),
-    )
 
 
 def extend_to_convergence(

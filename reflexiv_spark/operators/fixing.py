@@ -124,7 +124,7 @@ def fix_junctions(
         )
         .join(F.broadcast(unique_j), "__pk")
     )
-    state, heads = _init_pointers(pre, suc, eager=False)
+    state, heads = _init_pointers(pre, suc)
     state = _double_pointers(state, max_rounds, checkpoint_every=3, n_rows=n_cs)
     done = state.join(heads, "anc", "left_semi")
     parts = done.groupBy("anc").agg(

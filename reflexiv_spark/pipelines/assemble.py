@@ -10,6 +10,13 @@ Stages:
 5. contig canonicalization + min-length filter (F5) + dedup of the
    strand-duplicate contigs (both orientations were assembled)
 
+Stages 2-4 (with the pointer-doubling rank kernel) are each written once
+over a k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII
+strings, 2-bit packed longs (k ≤ 31) or long-block arrays (k > 31). The
+``*_packed`` / ``*_blocks`` names are that kernel's entry points over
+already-packed ids, and the pipelines reach every stage by its public
+name at call time.
+
 Output contig IDs are deterministic (dense_rank over (length desc, seq)) —
 the reference's ``zipWithIndex`` IDs are partition-order-dependent
 (FIXTURES.md §6).
@@ -17,19 +24,23 @@ the reference's ``zipWithIndex`` IDs are partition-order-dependent
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reflexiv_spark.functions.kmer import (
-    canonical_kmer,
-    prefix_subkmer,
-    reverse_complement,
-    suffix_subkmer,
+from reflexiv_spark.functions.kmer import canonical_kmer
+from reflexiv_spark.operators import extension
+from reflexiv_spark.operators._codec import (
+    BLOCKS,
+    PACKED,
+    STRING,
+    KmerCodec,
+    codec_for,
 )
 from reflexiv_spark.operators.counter import (
     DEFAULT_MAX_COVERAGE,
     DEFAULT_MIN_COVERAGE,
-    count_kmers,
 )
 from reflexiv_spark.operators.extension import extend_to_convergence, to_paths
 from reflexiv_spark.operators.fork import filter_forks
@@ -55,6 +66,18 @@ def _palindrome_free(k: int | None, input_canonical: bool) -> bool:
     return input_canonical and k is not None and k % 2 == 1
 
 
+def _expand(
+    codec: KmerCodec, counts: DataFrame, k: int | None, input_canonical: bool
+) -> DataFrame:
+    c = codec.col
+    rc = counts.select(codec.revcomp(c, k).alias(c), F.col("count"))
+    both = counts.unionByName(rc)
+    if _palindrome_free(k, input_canonical):
+        return both
+    # A palindromic k-mer equals its RC — dropDuplicates keeps one copy.
+    return both.dropDuplicates([c])
+
+
 def expand_orientations(
     kmer_counts: DataFrame,
     k: int | None = None,
@@ -68,15 +91,7 @@ def expand_orientations(
     elided (:func:`_palindrome_free`). Output rows are identical either
     way.
     """
-    fwd = kmer_counts
-    rc = kmer_counts.select(
-        reverse_complement("kmer").alias("kmer"), F.col("count")
-    )
-    both = fwd.unionByName(rc)
-    if _palindrome_free(k, input_canonical):
-        return both
-    # A palindromic k-mer equals its RC — dropDuplicates keeps one copy.
-    return both.dropDuplicates(["kmer"])
+    return _expand(STRING, kmer_counts, k, input_canonical)
 
 
 def expand_orientations_packed(
@@ -84,42 +99,8 @@ def expand_orientations_packed(
 ) -> DataFrame:
     """Step 2 over 2-bit packed bigint ids (DataFrame[kid, count]) — the
     RC is ~12 codegen'd integer ops instead of a string
-    reverse+translate, and the palindrome dedup shuffles 8-byte longs
-    (elided entirely for odd-k canonical input —
-    :func:`_palindrome_free`)."""
-    from reflexiv_spark.operators.counter_packed import revcomp_packed
-
-    fwd = packed_counts
-    rc = packed_counts.select(
-        revcomp_packed("kid", k).alias("kid"), F.col("count")
-    )
-    both = fwd.unionByName(rc)
-    if _palindrome_free(k, input_canonical):
-        return both
-    return both.dropDuplicates(["kid"])
-
-
-def prune_forks_packed(
-    packed: DataFrame, k: int, min_error_coverage: int | None = None
-) -> DataFrame:
-    """W1+W2 over packed ids: the forward sub-k-mer is ``kid >> 2`` and
-    the reflected one ``kid & (4^(k-1)-1)`` — both window shuffles carry
-    (long, long, int) rows. Tie-breaks on ``kid`` equal the string path's
-    ``kmer`` ties (the 2-bit code is order-isomorphic to A<C<G<T)."""
-    with_keys = packed.withColumn(
-        "fwd_key", F.shiftrightunsigned("kid", 2)
-    ).withColumn(
-        "refl_key", F.col("kid").bitwiseAND(F.lit((1 << (2 * (k - 1))) - 1))
-    )
-    pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    return pruned.drop("fwd_key", "refl_key")
+    reverse+translate, and the palindrome dedup shuffles 8-byte longs."""
+    return _expand(PACKED, packed_counts, k, input_canonical)
 
 
 def expand_orientations_blocks(
@@ -127,42 +108,22 @@ def expand_orientations_blocks(
 ) -> DataFrame:
     """Step 2 over long-block k-mer ids (DataFrame[kid: array<long>,
     count], k > 31) — the RC is plan-time shift/mask expressions and the
-    palindrome dedup shuffles ⌈k/31⌉ longs per row (elided entirely for
-    odd-k canonical input — :func:`_palindrome_free`)."""
-    from reflexiv_spark.operators.counter_blocks import revcomp_blocks
-
-    fwd = block_counts
-    rc = block_counts.select(
-        revcomp_blocks("kid", k).alias("kid"), F.col("count")
-    )
-    both = fwd.unionByName(rc)
-    if _palindrome_free(k, input_canonical):
-        return both
-    return both.dropDuplicates(["kid"])
+    palindrome dedup shuffles ⌈k/31⌉ longs per row."""
+    return _expand(BLOCKS, block_counts, k, input_canonical)
 
 
-def prune_forks_blocks(
-    blocks: DataFrame, k: int, min_error_coverage: int | None = None
+def _prune(
+    codec: KmerCodec, kmers: DataFrame, k: int, min_error_coverage: int | None
 ) -> DataFrame:
-    """W1+W2 over long-block ids: sub-k-mer keys are rechunked block
-    arrays; tie-breaks on ``kid`` equal the string path's ``kmer`` ties
-    because array order is digit-lexicographic for fixed k."""
-    from reflexiv_spark.operators.counter_blocks import (
-        prefix_key_blocks,
-        suffix_key_blocks,
-    )
-
-    with_keys = blocks.withColumn(
-        "fwd_key", prefix_key_blocks("kid", k, k - 1)
-    ).withColumn("refl_key", suffix_key_blocks("kid", k, k - 1))
-    pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
+    c = codec.col
+    pruned = kmers.withColumn(
+        "fwd_key", codec.prefix_key(c, k, k - 1)
+    ).withColumn("refl_key", codec.suffix_key(c, k, k - 1))
+    for key in ("fwd_key", "refl_key"):
+        pruned = filter_forks(
+            pruned, key, cover_col="count", tie_cols=(c,),
+            min_winner_cover=min_error_coverage,
+        )
     return pruned.drop("fwd_key", "refl_key")
 
 
@@ -178,18 +139,51 @@ def prune_forks(
     but has coverage below it is discarded as a likely sequencing-error
     branch; unforked k-mers are unaffected.
     """
-    with_keys = kmers.withColumn("fwd_key", prefix_subkmer("kmer", k)).withColumn(
-        "refl_key", suffix_subkmer("kmer", k)
+    return _prune(STRING, kmers, k, min_error_coverage)
+
+
+def prune_forks_packed(
+    packed: DataFrame, k: int, min_error_coverage: int | None = None
+) -> DataFrame:
+    """W1+W2 over packed ids: the forward sub-k-mer is ``kid >> 2`` and
+    the reflected one ``kid & (4^(k-1)-1)`` — both window shuffles carry
+    (long, long, int) rows. Tie-breaks on ``kid`` equal the string path's
+    ``kmer`` ties (the 2-bit code is order-isomorphic to A<C<G<T)."""
+    return _prune(PACKED, packed, k, min_error_coverage)
+
+
+def prune_forks_blocks(
+    blocks: DataFrame, k: int, min_error_coverage: int | None = None
+) -> DataFrame:
+    """W1+W2 over long-block ids: sub-k-mer keys are rechunked block
+    arrays; tie-breaks on ``kid`` equal the string path's ``kmer`` ties
+    because array order is digit-lexicographic for fixed k."""
+    return _prune(BLOCKS, blocks, k, min_error_coverage)
+
+
+def _assemble_ranked(
+    codec: KmerCodec,
+    counts: DataFrame,
+    k: int,
+    min_contig: int,
+    max_iterations: int,
+    min_error_coverage: int | None,
+    input_canonical: bool,
+) -> DataFrame:
+    """Counts keyed by ``codec`` ids → expand → prune → rank → contigs,
+    each stage through its public per-codec name (looked up at call
+    time)."""
+    here = sys.modules[__name__]
+    expanded = codec.public(here, "expand_orientations{}")(
+        counts, k, input_canonical=input_canonical
     )
-    pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kmer",),
-        min_winner_cover=min_error_coverage,
+    pruned = codec.public(here, "prune_forks{}")(
+        expanded, k, min_error_coverage=min_error_coverage
     )
-    pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kmer",),
-        min_winner_cover=min_error_coverage,
+    contracted = codec.public(extension, "rank_paths{}")(
+        pruned.select(codec.col, "count"), k, max_rounds=max_iterations
     )
-    return pruned.drop("fwd_key", "refl_key")
+    return _finalize_contigs(contracted, min_contig)
 
 
 def assemble_from_counts(
@@ -216,21 +210,19 @@ def assemble_from_counts(
     log-rounds — the 100 TB path — but cycles are dropped (anchored-paths
     semantics, identical to the SQL-oracle definition).
     """
+    if algorithm == "rank":
+        return _assemble_ranked(
+            STRING, kmer_counts, k, min_contig, max_iterations,
+            min_error_coverage, input_canonical,
+        )
+    if algorithm != "contract":
+        raise ValueError(f"unknown algorithm {algorithm!r}")
     expanded = expand_orientations(
         kmer_counts, k, input_canonical=input_canonical
     )
     pruned = prune_forks(expanded, k, min_error_coverage=min_error_coverage)
-    if algorithm == "rank":
-        from reflexiv_spark.operators.extension import rank_paths
-
-        contracted = rank_paths(
-            pruned.select("kmer", "count"), k, max_rounds=max_iterations
-        )
-    elif algorithm == "contract":
-        paths = to_paths(pruned.select("kmer", "count"))
-        contracted = extend_to_convergence(paths, k, max_iterations=max_iterations)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    paths = to_paths(pruned.select("kmer", "count"))
+    contracted = extend_to_convergence(paths, k, max_iterations=max_iterations)
     return _finalize_contigs(contracted, min_contig)
 
 
@@ -262,6 +254,13 @@ def _finalize_contigs(contracted: DataFrame, min_contig: int) -> DataFrame:
     )
 
 
+def _id_barrier(counts: DataFrame) -> DataFrame:
+    # lazy barrier: the RC expansion consumes the counts twice (forward +
+    # reflected branch); without it the Arrow-batched encode would rely on
+    # exchange reuse to run once
+    return counts.select("kid", "count").localCheckpoint(eager=False)
+
+
 def assemble_from_packed_counts(
     packed_counts: DataFrame,
     k: int,
@@ -276,23 +275,10 @@ def assemble_from_packed_counts(
     no k-mer strings anywhere until the one decode at final path assembly.
     Anchored-path (``algorithm="rank"``) semantics; identical output to
     the string pipeline (tests/test_extension.py proves equality)."""
-    from reflexiv_spark.operators.extension import rank_paths_packed
-
-    kid_col = "kid" if "kid" in packed_counts.columns else "packed"
-    # lazy barrier: the RC expansion consumes the counts twice (forward +
-    # reflected branch); without it the Arrow-batched encode would rely on
-    # exchange reuse to run once
-    packed_counts = packed_counts.select(
-        F.col(kid_col).alias("kid"), "count"
-    ).localCheckpoint(eager=False)
-    expanded = expand_orientations_packed(
-        packed_counts, k, input_canonical=input_canonical
+    return _assemble_ranked(
+        PACKED, _id_barrier(packed_counts), k, min_contig, max_iterations,
+        min_error_coverage, input_canonical,
     )
-    pruned = prune_forks_packed(expanded, k, min_error_coverage=min_error_coverage)
-    contracted = rank_paths_packed(
-        pruned.select("kid", "count"), k, max_rounds=max_iterations
-    )
-    return _finalize_contigs(contracted, min_contig)
 
 
 def assemble_from_blocks_counts(
@@ -308,21 +294,10 @@ def assemble_from_blocks_counts(
     contigs, every shuffle from counting through the contraction loop
     carrying long-block ids — the k>31 sibling of
     :func:`assemble_from_packed_counts`."""
-    from reflexiv_spark.operators.extension import rank_paths_blocks
-
-    block_counts = block_counts.select(
-        F.col("kid"), "count"
-    ).localCheckpoint(eager=False)
-    expanded = expand_orientations_blocks(
-        block_counts, k, input_canonical=input_canonical
+    return _assemble_ranked(
+        BLOCKS, _id_barrier(block_counts), k, min_contig, max_iterations,
+        min_error_coverage, input_canonical,
     )
-    pruned = prune_forks_blocks(
-        expanded, k, min_error_coverage=min_error_coverage
-    )
-    contracted = rank_paths_blocks(
-        pruned.select("kid", "count"), k, max_rounds=max_iterations
-    )
-    return _finalize_contigs(contracted, min_contig)
 
 
 def assemble(
@@ -341,85 +316,30 @@ def assemble(
 
     ``min_error_coverage`` defaults to 4× ``min_coverage`` like the
     reference (``DefaultParam.java:106``); pass 0/None semantics via an
-    explicit value to disable. ``packed=True`` uses the 2-bit fast-path
-    counter (scalar int64 for k ≤ 31, long-block ``array<long>`` above —
-    identical counts either way); with ``algorithm="rank"`` the packed
-    ids flow straight through expansion, pruning, and the contraction
-    loop with no string decode until final assembly
-    (:func:`assemble_from_packed_counts` /
-    :func:`assemble_from_blocks_counts`).
+    explicit value to disable. ``packed`` picks the k-mer codec: ASCII
+    strings by default, 2-bit ids with ``packed=True`` (scalar int64 for
+    k ≤ 31, long-block ``array<long>`` above — identical counts either
+    way). With ``algorithm="rank"`` the codec's ids flow straight through
+    expansion, pruning, and the contraction loop with no string decode
+    until final assembly (:func:`assemble_from_packed_counts` /
+    :func:`assemble_from_blocks_counts`); the randomized contraction
+    decodes the counts and runs on strings.
     """
     if min_error_coverage is None:
         min_error_coverage = 4 * min_coverage
-    if packed and k > 31:
-        from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
-
-        counts_b = count_kmers_blocks(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-            decode=algorithm != "rank",
-        )
-        if algorithm == "rank":
-            return assemble_from_blocks_counts(
-                counts_b,
-                k,
-                min_contig=min_contig,
-                max_iterations=max_iterations,
-                min_error_coverage=min_error_coverage,
-                input_canonical=True,
-            )
-        return assemble_from_counts(
-            counts_b,
-            k,
-            min_contig=min_contig,
-            max_iterations=max_iterations,
-            min_error_coverage=min_error_coverage,
-            algorithm=algorithm,
-            input_canonical=True,
-        )
-    if packed:
-        from reflexiv_spark.operators.counter_packed import count_kmers_packed
-
-        if algorithm == "rank":
-            return assemble_from_packed_counts(
-                count_kmers_packed(
-                    reads,
-                    k,
-                    seq_col=seq_col,
-                    min_coverage=min_coverage,
-                    max_coverage=max_coverage,
-                    decode=False,
-                ),
-                k,
-                min_contig=min_contig,
-                max_iterations=max_iterations,
-                min_error_coverage=min_error_coverage,
-                input_canonical=True,
-            )
-        counts = count_kmers_packed(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-        )
-    else:
-        counts = count_kmers(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-        )
-    return assemble_from_counts(
-        counts,
-        k,
+    codec = codec_for(k, packed)
+    counts = codec.count(
+        reads, k, seq_col=seq_col, min_coverage=min_coverage,
+        max_coverage=max_coverage,
+    )
+    kw = dict(
         min_contig=min_contig,
         max_iterations=max_iterations,
         min_error_coverage=min_error_coverage,
-        algorithm=algorithm,
         input_canonical=True,
     )
+    if packed and algorithm == "rank":
+        kernel = codec.public(sys.modules[__name__], "assemble_from{}_counts")
+        return kernel(counts, k, **kw)
+    strings = counts.select(codec.decode(codec.col, k).alias("kmer"), "count")
+    return assemble_from_counts(strings, k, algorithm=algorithm, **kw)

@@ -21,72 +21,28 @@ long-lived session.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reflexiv_spark.functions.kmer import explode_kmers
-from reflexiv_spark.operators.counter import count_kmers
+from reflexiv_spark.operators._codec import KmerCodec, codec_for
 from reflexiv_spark.operators.dedup import dedup_contigs
 from reflexiv_spark.operators.fixing import fix_junctions
-from reflexiv_spark.pipelines.assemble import assemble_from_counts
+
+# every rung's kernel is looked up by name in this module's namespace at
+# call time (KmerCodec.public), so patches on these aliases apply
+from reflexiv_spark.pipelines.assemble import (  # noqa: F401
+    assemble_from_blocks_counts,
+    assemble_from_counts,
+    assemble_from_packed_counts,
+)
 
 DEFAULT_META_KLIST = (23, 31, 41)
 
 
-def _combined_counts_packed(
-    reads: DataFrame,
-    contigs: DataFrame | None,
-    k: int,
-    min_coverage: int,
-    max_coverage: int,
-    seq_col: str,
-) -> DataFrame:
-    """:func:`_combined_counts` in packed space — scalar int64 ids for
-    k ≤ 31, long-block ``array<long>`` ids above (the reference's
-    long-k encoding, ``ReflexivDSDynamicKmerRuduction.java:3220-3241``).
-    The k=41..95 ladder rounds shuffle 2-bit blocks instead of ASCII
-    k-mers (~2 bits/base vs ~4 B/base), and the contig-boost union and
-    coverage floors run on the packed keys directly."""
-    if k <= 31:
-        from reflexiv_spark.operators.counter_packed import (
-            count_kmers_packed as counter,
-        )
-    else:
-        from reflexiv_spark.operators.counter_blocks import (
-            count_kmers_blocks as counter,
-        )
-
-    def norm(df: DataFrame) -> DataFrame:
-        kid = "packed" if "packed" in df.columns else "kid"
-        return df.select(F.col(kid).alias("kid"), "count")
-
-    read_counts = norm(
-        counter(
-            reads, k, seq_col=seq_col, min_coverage=1, max_coverage=None,
-            decode=False,
-        )
-    )
-    if contigs is None:
-        combined = read_counts
-    else:
-        contig_kmers = norm(
-            counter(
-                contigs, k, seq_col="seq", min_coverage=1,
-                max_coverage=None, decode=False,
-            )
-        ).select("kid", F.lit(min_coverage).cast("long").alias("count"))
-        combined = (
-            read_counts.unionByName(contig_kmers)
-            .groupBy("kid")
-            .agg(F.sum("count").alias("count"))
-        )
-    out = combined.where(F.col("count") >= min_coverage)
-    if max_coverage is not None:
-        out = out.where(F.col("count") <= max_coverage)
-    return out
-
-
 def _combined_counts(
+    codec: KmerCodec,
     reads: DataFrame,
     contigs: DataFrame | None,
     k: int,
@@ -94,27 +50,29 @@ def _combined_counts(
     max_coverage: int,
     seq_col: str,
 ) -> DataFrame:
-    """Read k-mer counts, boosted by previous-round contig k-mers.
+    """Read k-mer counts keyed by ``codec`` ids, boosted by previous-round
+    contig k-mers.
 
     Contig k-mers get weight ``min_coverage`` so connectivity already
     proven at the previous k survives this round's coverage floor even
     where raw read coverage is thin (the role the reference's reduction
-    ladder plays for shorter-k k-mers)."""
-    read_counts = count_kmers(
+    ladder plays for shorter-k k-mers). With a packed codec the k=41..95
+    ladder rounds shuffle 2-bit blocks instead of ASCII k-mers (~2
+    bits/base vs ~4 B/base), and the contig-boost union and coverage
+    floors run on the packed keys directly."""
+    c = codec.col
+    read_counts = codec.count(
         reads, k, seq_col=seq_col, min_coverage=1, max_coverage=None
     )
     if contigs is None:
         combined = read_counts
     else:
-        contig_kmers = explode_kmers(
-            contigs.select(F.col("seq")), k, seq_col="seq"
-        ).select("kmer").dropDuplicates()
-        contig_counts = contig_kmers.select(
-            "kmer", F.lit(min_coverage).cast("long").alias("count")
-        )
+        contig_kmers = codec.count(
+            contigs, k, seq_col="seq", min_coverage=1, max_coverage=None
+        ).select(c, F.lit(min_coverage).cast("long").alias("count"))
         combined = (
-            read_counts.unionByName(contig_counts)
-            .groupBy("kmer")
+            read_counts.unionByName(contig_kmers)
+            .groupBy(c)
             .agg(F.sum("count").alias("count"))
         )
     out = combined.where(F.col("count") >= min_coverage)
@@ -163,15 +121,8 @@ def meta_assemble(
     # materialized by rung 1's counting job and every later rung reads
     # the pinned blocks. Projected to the one column the ladder
     # consumes before it is pinned (§2.3 — the checkpoint holds seq
-    # bytes only). MEMORY_AND_DISK blocks spill gracefully at scale;
-    # SPARK_GRAFT_META_SHARED_READS=0 restores the re-scan shape for
-    # storage-constrained clusters where re-reading the source is
-    # cheaper than pinning it.
-    import os
-
-    if len(set(klist)) > 1 and os.environ.get(
-        "SPARK_GRAFT_META_SHARED_READS", "1"
-    ) != "0":
+    # bytes only). MEMORY_AND_DISK blocks spill gracefully at scale.
+    if len(set(klist)) > 1:
         reads = reads.select(seq_col).localCheckpoint(eager=False)
 
     contigs: DataFrame | None = None
@@ -179,40 +130,23 @@ def meta_assemble(
         def build(k: int = k, prev: DataFrame | None = contigs) -> DataFrame:
             # keep every path ≥ k+1 between rounds; the caller's
             # min_contig applies only to the final output
-            if packed:
-                from reflexiv_spark.pipelines.assemble import (
-                    assemble_from_blocks_counts,
-                    assemble_from_packed_counts,
-                )
-
-                pcounts = _combined_counts_packed(
-                    reads, prev, k, min_coverage, max_coverage, seq_col
-                )
-                kernel = (
-                    assemble_from_packed_counts
-                    if k <= 31
-                    else assemble_from_blocks_counts
-                )
-                # _combined_counts_packed ends in a canonical-keyed
-                # groupBy, so the odd-k palindrome-dedup elision applies
-                # (OPTIMIZATION_r13 #10)
-                return kernel(
-                    pcounts,
-                    k,
-                    min_contig=k + 1,
-                    min_error_coverage=4 * min_coverage,
-                    input_canonical=True,
-                ).select("contig_id", "seq")
+            codec = codec_for(k, packed)
             counts = _combined_counts(
-                reads, prev, k, min_coverage, max_coverage, seq_col
+                codec, reads, prev, k, min_coverage, max_coverage, seq_col
             )
-            return assemble_from_counts(
+            kernel = codec.public(sys.modules[__name__], "assemble_from{}_counts")
+            # packed rungs are rank-only (checked above); only the string
+            # kernel takes an algorithm
+            extra = {} if packed else {"algorithm": algorithm}
+            # _combined_counts ends in a canonical-keyed groupBy, so the
+            # odd-k palindrome-dedup elision applies (OPTIMIZATION_r13 #10)
+            return kernel(
                 counts,
                 k,
                 min_contig=k + 1,
                 min_error_coverage=4 * min_coverage,
-                algorithm=algorithm,
                 input_canonical=True,
+                **extra,
             ).select("contig_id", "seq")
 
         if workdir is not None:

@@ -148,7 +148,7 @@ def test_blocks_groupby_and_join_on_arrays(spark):
     assert j.count() == len(set(kmers))
 
 
-@pytest.mark.parametrize("k", [41, 62])
+@pytest.mark.parametrize("k", [33, 41, 62])
 def test_blocks_pipeline_matches_string_pipeline(spark, k):
     """assemble(packed=True) above k=31 — counting, RC expansion, fork
     pruning, and the pointer-doubling loop all on array<long> — must
@@ -288,15 +288,13 @@ def test_expand_orientations_input_canonical_skip(spark):
     pc = count_kmers_packed(reads, 15, min_coverage=1, max_coverage=None, decode=False)
     want_p = sorted(
         (r.kmer, r["count"])
-        for r in expand_orientations_packed(pc.withColumnRenamed("packed", "kid"), 15)
+        for r in expand_orientations_packed(pc, 15)
         .select(packed_to_kmer("kid", 15).alias("kmer"), "count")
         .collect()
     )
     got_p = sorted(
         (r.kmer, r["count"])
-        for r in expand_orientations_packed(
-            pc.withColumnRenamed("packed", "kid"), 15, input_canonical=True
-        )
+        for r in expand_orientations_packed(pc, 15, input_canonical=True)
         .select(packed_to_kmer("kid", 15).alias("kmer"), "count")
         .collect()
     )

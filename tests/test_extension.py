@@ -248,11 +248,14 @@ def test_assemble_from_counts_rank_matches_contract(spark):
     assert a == b and a  # linear genome: no cycles, identical contigs
 
 
-def test_rank_paths_blocks_hashed_ids_match_array_ids(spark):
+def test_rank_paths_blocks_hashed_ids_match_array_ids(spark, monkeypatch):
     """The r13 hashed loop-id proxy (xxhash64 pointer ids through the
     doubling rounds, blocks re-attached at final assembly) must produce
-    byte-identical contigs to the array-id loop — and the injectivity
-    gate must fall back cleanly when disabled."""
+    byte-identical contigs to the array-id loop. A constant proxy hash
+    collides on every row: the injectivity check must detect it and fall
+    back to the array-id loop, with the same contigs."""
+    from pyspark.sql.types import ArrayType, LongType
+
     from reflexiv_spark.operators import extension as ex
     from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
     from reflexiv_spark.operators.extension import rank_paths_blocks
@@ -265,19 +268,22 @@ def test_rank_paths_blocks_hashed_ids_match_array_ids(spark):
         reads, k, min_coverage=1, max_coverage=None, decode=False
     )
 
-    orig = ex._HASHED_LOOP_IDS
-    try:
-        ex._HASHED_LOOP_IDS = True
-        hashed = sorted(
-            tuple(r) for r in rank_paths_blocks(counts, k).collect()
-        )
-        ex._HASHED_LOOP_IDS = False
-        arr = sorted(
-            tuple(r) for r in rank_paths_blocks(counts, k).collect()
-        )
-    finally:
-        ex._HASHED_LOOP_IDS = orig
+    states = []
+    orig = ex._double_pointers
+
+    def spy(state, *a, **kw):
+        states.append(state.schema["kid"].dataType)
+        return orig(state, *a, **kw)
+
+    monkeypatch.setattr(ex, "_double_pointers", spy)
+    hashed = sorted(tuple(r) for r in rank_paths_blocks(counts, k).collect())
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
+    arr = sorted(tuple(r) for r in rank_paths_blocks(counts, k).collect())
     assert hashed == arr and hashed
+    # first run rode the proxy ids, the collided run the block arrays
+    assert states[0] == LongType()
+    assert isinstance(states[1], ArrayType)
+    assert states[1].elementType == LongType()
 
 
 def test_rank_paths_forked_input_fails_loudly(spark):

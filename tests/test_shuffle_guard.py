@@ -82,15 +82,14 @@ def test_blocks_rank_loop_state_is_three_longs_hashed(spark, monkeypatch):
 
 
 def test_blocks_rank_loop_array_fallback_is_long_blocks(spark, monkeypatch):
-    """With the hashed-id proxy pinned off (the injectivity-collision
-    fallback), the k>31 loop state must be long-block arrays — never
-    ASCII k-mers."""
-    import reflexiv_spark.operators.extension as ext
+    """When the hashed-id proxy collides (here: a constant hash, so the
+    injectivity check fails), the k>31 loop falls back to long-block
+    array ids — never ASCII k-mers."""
     from reflexiv_spark.operators.extension import rank_paths
 
     k = 41
     counts = _counts(spark, k, seed=23)
-    monkeypatch.setattr(ext, "_HASHED_LOOP_IDS", False)
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
     schema = _capture_loop_state(
         monkeypatch, lambda: rank_paths(counts, k).count()
     )

@@ -6,8 +6,8 @@ Usage: python tools/ab_queries.py QUERY [QUERY ...] [--trials N]
 Runs each named query ``--trials`` times round-robin with the bench
 harness's noop-sink methodology and prints min/med per query. For
 true A/B between two CODE variants, monkeypatch the module flag inside
-one session instead (see tools/ab_palindrome_skip.py) — cross-session
-comparisons are untrustworthy on this box.
+one session instead — cross-session comparisons are untrustworthy on a
+shared host.
 """
 
 from __future__ import annotations

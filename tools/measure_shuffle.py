@@ -2,13 +2,13 @@
 """Measure wall clock + total shuffle read/write bytes of the
 count→expand→prune→rank assembly pipeline in three representations:
 ``string`` (ASCII k-mers everywhere), ``loop_packed`` (strings up to the
-loop, rank_paths auto-packs internally), and ``fully_packed``
-(2-bit int64 ids from the counter onward, one decode at assembly).
-Sums per-stage shuffle metrics from the live Spark UI REST API between
-two marks, so only the measured section counts; best-of-2 alternating
-runs for JIT fairness.
+loop, rank_paths auto-packs internally), and ``fully_packed`` (2-bit ids
+from the counter onward, one decode at assembly — int64 ids for k ≤ 31,
+long-block arrays above, the codec picked by k). Sums per-stage shuffle
+metrics from the live Spark UI REST API between two marks, so only the
+measured section counts; best-of-2 alternating runs for JIT fairness.
 
-Usage: python tools/measure_shuffle.py [sf_dir]
+Usage: python tools/measure_shuffle.py [sf_dir] [k]   (default k=15)
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+K = int(sys.argv[2]) if len(sys.argv) > 2 else 15
 
 
 def _stages(ui: str):
@@ -44,17 +45,14 @@ def _totals(ui: str):
 
 
 def main():
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
+    from reflexiv_spark.operators import extension
+    from reflexiv_spark.operators._codec import codec_for
     from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_packed import count_kmers_packed
-    from reflexiv_spark.operators.extension import rank_paths, rank_paths_packed
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations,
-        expand_orientations_packed,
-        prune_forks,
-        prune_forks_packed,
-    )
+    from reflexiv_spark.operators.extension import rank_paths
+    from reflexiv_spark.pipelines import assemble
+    from reflexiv_spark.pipelines.assemble import expand_orientations, prune_forks
     from __spark_entry__ import _dna
 
     spark = (
@@ -66,7 +64,8 @@ def main():
         .getOrCreate()
     )
     ui = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}"
-    k = 15
+    k = K
+    codec = codec_for(k, packed=True)
     dna = _dna(spark, SF_DIR).localCheckpoint(eager=True)
     n = dna.count()
 
@@ -82,14 +81,12 @@ def main():
         return rank_paths(pruned.select("kmer", "count"), k, packed=True)
 
     def fully_packed():
-        counts = count_kmers_packed(dna, k, min_coverage=2, decode=False)
-        pruned = prune_forks_packed(
-            expand_orientations_packed(
-                counts.withColumnRenamed("packed", "kid"), k
-            ),
-            k,
+        counts = codec.count(dna, k, min_coverage=2)
+        expanded = codec.public(assemble, "expand_orientations{}")(counts, k)
+        pruned = codec.public(assemble, "prune_forks{}")(expanded, k)
+        return codec.public(extension, "rank_paths{}")(
+            pruned.select("kid", "count"), k
         )
-        return rank_paths_packed(pruned.select("kid", "count"), k)
 
     variants = {
         "string": string_pipeline,
@@ -114,6 +111,7 @@ def main():
         }
         if label not in out or cur["sec"] < out[label]["sec"]:
             out[label] = cur
+    out["k"] = k
     out["input_rows"] = n
     out["write_ratio_full"] = round(
         out["string"]["shuffle_write_mb"]
