@@ -144,7 +144,7 @@ def triangle_count(
     bounded by its ORIENTED out-degree — O(sqrt(m)) on any graph, which
     tames the celebrity-vertex hub that makes the naive wedge join
     quadratic. Two hash joins total: wedges (a→b ⋈ a→c), then a
-    closing-edge probe against the oriented edge set.
+    closing-edge probe against the undirected edge set (u < v).
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -186,8 +186,10 @@ def triangle_count(
     # + distinct; that distinct was provably a no-op (each undirected
     # edge yields exactly one oriented row, so the two union branches are
     # disjoint and internally duplicate-free) and the union re-scanned
-    # the oriented barrier twice — probing e drops one exchange and two
-    # scans (guide §2.4: a distinct on data that is already unique).
+    # the oriented barrier twice — probing e drops one scan and halves
+    # the closing probe's shuffle rows (m instead of 2m; the exchange
+    # count is unchanged) (guide §2.4: a distinct on data that is
+    # already unique).
     closing = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     tris = wedges.join(closing, ["x", "y"]).select("a", "x", "y")
     per_node = (

@@ -35,7 +35,7 @@ Scale notes (100 TB): per round = one hash exchange of surviving sequences
 + an eager ``localCheckpoint`` (executor-local storage) to cut lineage —
 replacing the reference's per-step SparkSession restarts + gzip-CSV
 barriers (``Pipelines.java:832-839``). Driver traffic is one scalar count
-per ``check_every`` rounds.
+per three rounds.
 
 The pointer-doubling alternative (:func:`rank_paths`) is ONE kernel over a
 k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII strings,
@@ -43,7 +43,9 @@ k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII strings,
 supplies the id column, the prefix/suffix join keys and the tail decode;
 ``rank_paths_packed`` / ``rank_paths_blocks`` are its entry points over
 already-packed ids, and ``rank_paths`` picks the packed codec itself
-when its input is fixed-length pure ACGT.
+when its input is fixed-length pure ACGT. The walk itself
+(:func:`walk_paths`) and the final concatenation (:func:`stitch_walk`)
+are shared with junction fixing, which walks contigs instead of k-mers.
 """
 
 from __future__ import annotations
@@ -51,7 +53,7 @@ from __future__ import annotations
 import math
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
@@ -65,6 +67,11 @@ from reflexiv_spark.operators._codec import (
 
 # Reference iteration budget: DefaultParam.java:115.
 DEFAULT_MAX_ITERATIONS = 150
+# Rounds per barrier + convergence probe, in both loops.
+_BARRIER_EVERY = 3
+# The randomized loop never stops earlier: the reference's
+# minimumIteration (DefaultParam.java:116).
+_MIN_ITERATIONS = 15
 
 # Broadcast gate for the pointer-doubling loop (optimization round r13,
 # guide §3.1): when the MEASURED state size (exact row count from the
@@ -84,14 +91,6 @@ DEFAULT_MAX_ITERATIONS = 150
 # 8 GB hard cap) while excluding any at-scale state.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
-
-def _loop_broadcast_ok(n_rows: int | None, row_bytes: int | None) -> bool:
-    return (
-        n_rows is not None
-        and row_bytes is not None
-        and n_rows * row_bytes <= _LOOP_BCAST_BYTES
-    )
-
 _PATH_STRUCT = ["seq", "left_cover", "right_cover"]
 
 
@@ -109,50 +108,27 @@ def to_paths(kmer_counts: DataFrame) -> DataFrame:
     )
 
 
-def extension_round(
-    paths: DataFrame,
-    k: int,
-    round_idx: int,
-    overlap: int | None = None,
-    allowed_keys: DataFrame | None = None,
-) -> DataFrame:
+def extension_round(paths: DataFrame, k: int, round_idx: int) -> DataFrame:
     """One randomized contraction round (W3 / J1): single hash-agg shuffle.
 
     ``paths``: DataFrame[seq, left_cover, right_cover]; every seq is a walk
-    in the k-order de Bruijn graph (length ≥ k). ``overlap`` (default k-1)
-    is the number of bases shared between a mergeable suffix/prefix pair —
-    the junction-fixing stage reuses this kernel with overlap = its fixed
-    31-mer size (``ReflexivDSDynamicKmerFixing.java:191-257``).
-    ``allowed_keys`` (DataFrame with one ``key`` column) restricts which
-    junction keys may contract; rows landing on other keys pass through
-    unchanged.
+    in the k-order de Bruijn graph (length ≥ k), and a mergeable
+    suffix/prefix pair shares k - 1 bases.
 
     Safety: a group is merged ONLY when it holds exactly one A-side and
     one B-side row; any other population (a violated fork-free
-    precondition, or an ambiguous junction under ``allowed_keys``) passes
-    every row through unchanged — never silently dropped. Each input row
-    is tagged onto exactly one (key, side), so pass-through cannot
-    duplicate rows.
+    precondition) passes every row through unchanged — never silently
+    dropped. Each input row is tagged onto exactly one (key, side), so
+    pass-through cannot duplicate rows.
     """
-    o = (k - 1) if overlap is None else overlap
     fwd = F.xxhash64("seq", F.lit(round_idx)) % 2 == 0
     tagged = paths.select(
-        F.when(fwd, prefix_subkmer("seq", o + 1)).otherwise(
-            suffix_subkmer("seq", o + 1)
+        F.when(fwd, prefix_subkmer("seq", k)).otherwise(
+            suffix_subkmer("seq", k)
         ).alias("key"),
         F.when(fwd, F.lit("B")).otherwise(F.lit("A")).alias("side"),
         F.struct(*_PATH_STRUCT).alias("row"),
     )
-    if allowed_keys is not None:
-        marked = tagged.join(
-            allowed_keys.select("key").withColumn("__ok", F.lit(True)),
-            "key",
-            "left",
-        )
-        bypass = marked.where(F.col("__ok").isNull()).select("row.*")
-        tagged = marked.where(F.col("__ok").isNotNull()).drop("__ok")
-    else:
-        bypass = None
     grouped = tagged.groupBy("key").agg(
         F.collect_list(F.when(F.col("side") == "A", F.col("row"))).alias("al"),
         F.collect_list(F.when(F.col("side") == "B", F.col("row"))).alias("bl"),
@@ -160,28 +136,25 @@ def extension_round(
     a = F.col("al").getItem(0)
     b = F.col("bl").getItem(0)
     merged = F.struct(
-        F.concat(a["seq"], F.expr(f"substring(bl[0].seq, {o + 1})")).alias("seq"),
+        F.concat(a["seq"], F.expr(f"substring(bl[0].seq, {k})")).alias("seq"),
         a["left_cover"].alias("left_cover"),
         b["right_cover"].alias("right_cover"),
     )
     out_rows = F.when(
         (F.size("al") == 1) & (F.size("bl") == 1), F.array(merged)
     ).otherwise(F.concat(F.col("al"), F.col("bl")))
-    out = grouped.select(F.explode(out_rows).alias("r")).select(
+    return grouped.select(F.explode(out_rows).alias("r")).select(
         F.col("r.seq").alias("seq"),
         F.col("r.left_cover").alias("left_cover"),
         F.col("r.right_cover").alias("right_cover"),
     )
-    return out if bypass is None else out.unionByName(bypass)
 
 
 def rank_paths(
     kmer_counts: DataFrame,
     k: int,
     max_rounds: int = 40,
-    overlap: int | None = None,
-    checkpoint_every: int = 3,
-    packed: bool | None = None,
+    packed: bool = True,
 ) -> DataFrame:
     """Pointer-doubling (list-ranking) contraction — the O(rows)-per-round
     alternative to :func:`extend_to_convergence` (VERDICT r3 item 5).
@@ -203,32 +176,29 @@ def rank_paths(
     in-degree-0 (k-1)-mer). Pure cycles have no head, never converge, and
     are dropped — the same order-free semantics the recursive-CTE oracles
     define, where the randomized scheme would emit a rotation-dependent
-    representative. Junction-restricted fusion (``allowed_keys``) stays on
-    the randomized kernel.
+    representative.
 
     Scale note: final assembly holds one path's (offset, k-mer) structs in
     a single aggregation buffer — same endgame footprint as the
     contraction scheme's final row carrying the whole contig string.
 
     Shuffle representation: over pure-ACGT fixed-length k-mers (the
-    common case after ``explode_kmers``' drop_invalid), ``packed``
-    (auto-detected when None) swaps the per-round pointer columns from
-    ASCII k-mer strings to the reference's 2-bit encoding
-    (``ReflexivDataFrameCounter.java:513-525``): one int64 per k-mer for
-    k ≤ 31 (:func:`rank_paths_packed`), long blocks above
-    (:func:`rank_paths_blocks`). Each round then exchanges three longs per
-    row (~24 B payload) instead of two k-byte strings, the prefix/suffix
-    join keys are shift/mask ops, and strings are decoded exactly once at
-    final assembly.
+    common case after ``explode_kmers``' drop_invalid), ``packed`` swaps
+    the per-round pointer columns from ASCII k-mer strings to the
+    reference's 2-bit encoding (``ReflexivDataFrameCounter.java:513-525``):
+    one int64 per k-mer for k ≤ 31 (:func:`rank_paths_packed`), long
+    blocks above (:func:`rank_paths_blocks`). Each round then exchanges
+    three longs per row (~24 B payload) instead of two k-byte strings, the
+    prefix/suffix join keys are shift/mask ops, and strings are decoded
+    exactly once at final assembly. Any other input falls back to the
+    string kernel; ``packed=False`` forces it.
     """
-    o = (k - 1) if overlap is None else overlap
     km = _loop_input(kmer_counts, "kmer")
     # the lazy checkpoint sits BEFORE the packed guard so the guard's scan
     # materializes it and every later consumer (packed projection, or the
     # string path's pre/suc/decode-join) reads the barrier, not the
-    # upstream lineage
-    if packed is None:
-        packed = 0 < o < k
+    # upstream lineage. Packed sub-k-mer keys need a non-empty overlap.
+    packed = packed and k >= 2
     if packed:
         # The packed id is injective only for fixed-length pure-ACGT rows;
         # one short-circuit scan guards the fallback (limit(1) stops at the
@@ -238,25 +208,19 @@ def rank_paths(
             .limit(1)
             .count()
         )
-        packed = bad == 0 and 0 < o < k
+        packed = bad == 0
     if not packed:
-        return _rank(STRING, km, k, overlap, max_rounds, checkpoint_every)
+        return _rank(STRING, km, k, max_rounds)
     codec = codec_for(k, packed=True)
     return codec.public(sys.modules[__name__], "rank_paths{}")(
         km.select(codec.encode("kmer", k).alias("kid"), "count"),
         k,
         max_rounds=max_rounds,
-        overlap=overlap,
-        checkpoint_every=checkpoint_every,
     )
 
 
 def rank_paths_packed(
-    packed_counts: DataFrame,
-    k: int,
-    max_rounds: int = 40,
-    overlap: int | None = None,
-    checkpoint_every: int = 3,
+    packed_counts: DataFrame, k: int, max_rounds: int = 40
 ) -> DataFrame:
     """:func:`rank_paths` over ALREADY-PACKED 2-bit bigint k-mer ids —
     DataFrame[kid: bigint, count] as produced by
@@ -264,15 +228,11 @@ def rank_paths_packed(
     with ``decode=False``. End-to-end string-free: this is the 100 TB
     representation the reference carries through its whole pipeline."""
     km = _loop_input(packed_counts, "kid")
-    return _rank(PACKED, km, k, overlap, max_rounds, checkpoint_every)
+    return _rank(PACKED, km, k, max_rounds)
 
 
 def rank_paths_blocks(
-    block_counts: DataFrame,
-    k: int,
-    max_rounds: int = 40,
-    overlap: int | None = None,
-    checkpoint_every: int = 3,
+    block_counts: DataFrame, k: int, max_rounds: int = 40
 ) -> DataFrame:
     """:func:`rank_paths` over long-block packed k-mers (k > 31) —
     DataFrame[kid: array<long>, count] as produced by
@@ -281,7 +241,7 @@ def rank_paths_blocks(
     (``ReflexivDSDynamicKmerRuduction.java:3220-3241``) carried through
     the contraction loop."""
     km = _loop_input(block_counts, "kid")
-    return _rank(BLOCKS, km, k, overlap, max_rounds, checkpoint_every)
+    return _rank(BLOCKS, km, k, max_rounds)
 
 
 def _loop_input(counts: DataFrame, col: str) -> DataFrame:
@@ -291,17 +251,10 @@ def _loop_input(counts: DataFrame, col: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-def _rank(
-    codec: KmerCodec,
-    km: DataFrame,
-    k: int,
-    overlap: int | None,
-    max_rounds: int,
-    checkpoint_every: int,
-) -> DataFrame:
+def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame:
     """The pointer-doubling kernel over ``codec`` ids: DataFrame[<codec.col>,
     count] (checkpointed) → DataFrame[seq, left_cover, right_cover]."""
-    o = (k - 1) if overlap is None else overlap
+    o = k - 1
     c = codec.col
     if codec.array_ids:
         # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
@@ -332,20 +285,14 @@ def _rank(
         # gate is driven by a measured size
         n_km, hashed = km.count(), False
     src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
-    row_bytes = 64 if hashed else codec.row_bytes(k)
-    small = _loop_broadcast_ok(n_km, row_bytes)
+    small = n_km * (64 if hashed else codec.row_bytes(k)) <= _LOOP_BCAST_BYTES
     pre = src.select(
         F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
     )
     suc = src.select(
         F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
     )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small)
-    state = _double_pointers(
-        state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
-    )
-    heads_j = F.broadcast(heads) if small else heads
-    done = state.join(heads_j, "anc", "left_semi")
+    done, _, _ = walk_paths(pre, suc, n_km, max_rounds, small=small)
     # decode side: loop id as "kid" next to the codec id it stands for
     km_j = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
     if small:
@@ -356,41 +303,46 @@ def _rank(
         ).alias("xs")
     )
     xs = F.col("xs")
-    rest_bases = F.array_join(
-        F.transform(
-            F.slice(xs, 2, F.greatest(F.size(xs) - 1, F.lit(0))),
-            lambda x: codec.suffix_str(x[c], k, o),
-        ),
-        "",
-    )
     return parts.select(
-        F.concat(codec.decode(xs.getItem(0)[c], k), rest_bases).alias("seq"),
+        stitch_walk(
+            xs,
+            lambda x: codec.decode(x[c], k),
+            lambda x: codec.suffix_str(x[c], k, o),
+        ).alias("seq"),
         xs.getItem(0)["count"].cast("int").alias("left_cover"),
         F.element_at("xs", -1)["count"].cast("int").alias("right_cover"),
     )
 
 
-def _init_pointers(
+def walk_paths(
     pre: DataFrame,
     suc: DataFrame,
-    broadcast_suc: bool = False,
+    n_rows: int,
+    max_rounds: int,
+    small: bool = False,
 ):
-    """(state, heads) for the doubling loop: each k-mer points at its
-    unique predecessor (fork-free input) or itself when it is a path head.
-    A self-loop k-mer has anc == itself but off == 1, so it is NOT a head
-    and correctly never converges.
+    """Pointer-doubling walk of a fork-free path graph → (done, state,
+    heads).
 
-    ``broadcast_suc`` joins the successor map as an explicit broadcast
-    (callers set it from the measured-count gate — the init join then
-    rides the same narrow-stage path as the gated loop rounds). The
-    state barrier is lazy, so the first loop window materializes it in
-    its own job instead of paying a dedicated checkpoint job."""
+    ``pre``: DataFrame[kid, __pk], every node once, keyed by the join key
+    of its head end; ``suc``: DataFrame[__pred, __pk], a node keyed by the
+    join key of its tail end. ``n_rows`` is the exact node count (the
+    loop's round bound and fork-free check). ``small`` joins the successor
+    map, the per-round jump map and the heads as broadcasts.
+
+    ``state`` is DataFrame[kid, anc, off] after the walk: each node's
+    path head and its offset from it. ``heads`` is DataFrame[anc] of
+    in-degree-0 nodes; ``done`` is the state of the nodes whose walk
+    reached one — cycle members (and self-loops, anc == kid with off == 1)
+    never do.
+    """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
-    if broadcast_suc:
-        suc = F.broadcast(suc)
+    # each node points at its unique predecessor, or at itself (off 0)
+    # when it heads a path; the lazy barrier is materialized by the
+    # first loop probe instead of a job of its own
     state = iteration_barrier(
-        pre.join(suc, "__pk", "left").select(
+        pre.join(F.broadcast(suc) if small else suc, "__pk", "left").select(
             "kid",
             F.coalesce("__pred", F.col("kid")).alias("anc"),
             F.when(F.col("__pred").isNull(), F.lit(0))
@@ -401,81 +353,46 @@ def _init_pointers(
         eager=False,
     )
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
-    return state, heads
+    state = _double_pointers(state, max_rounds, n_rows, small)
+    done = state.join(F.broadcast(heads) if small else heads, "anc", "left_semi")
+    return done, state, heads
+
+
+def stitch_walk(xs: Column, head, tail) -> Column:
+    """``head(xs[0]) || tail(xs[1]) || … || tail(xs[-1])`` over an
+    offset-sorted array of walk members."""
+    rest = F.array_join(
+        F.transform(F.slice(xs, 2, F.greatest(F.size(xs) - 1, F.lit(0))), tail),
+        "",
+    )
+    return F.concat(head(xs.getItem(0)), rest)
 
 
 def _double_pointers(
-    state: DataFrame,
-    max_rounds: int,
-    checkpoint_every: int,
-    n_rows: int,
-    row_bytes: int | None = None,
+    state: DataFrame, max_rounds: int, n_rows: int, small: bool
 ) -> DataFrame:
     """Pointer-doubling rounds over DataFrame[kid, anc, off].
 
-    Rounds are bounded by ceil(log2(n)): after that many doublings every
-    head-reachable pointer has converged (path length ≤ n), so surviving
-    CYCLES — whose members keep moving forever unless their length is a
-    power of two — cannot pin the loop at max_rounds. Callers pass the
-    input row count as ``n_rows`` (state rows == input rows under the
-    fork-free precondition), so the loop starts without its own count
-    job.
+    Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
+    head-reachable pointer has converged by then, so surviving CYCLES
+    cannot pin the loop at ``max_rounds``.
 
-    Every barrier is :func:`iteration_barrier` — plain
-    ``localCheckpoint`` preserves the join's squared sizeInBytes
-    estimate and the compounding BigInt turns plan time exponential
-    (see ``plans/barriers.py``).
+    Fork-free guard: ``n_rows`` claims state rows == input rows. An
+    in-degree-2 key fans the init join out, the real state is larger and
+    the bound could cut long paths short, so the first probe counts state
+    rows and raises on a mismatch (the count is loop-invariant).
 
-    Job economy (r9): the convergence probe runs ONLY at barrier rounds,
-    and the barrier is LAZY — the probe's full-scan mover-count
-    aggregate is the action that materializes the checkpoint, so each
-    barrier costs ONE job (the old shape paid an eager-checkpoint job
-    plus a probe job EVERY round: 2·rounds jobs; now it is
-    rounds/checkpoint_every).
-
-    Fork-free guard (r14, VERDICT r13 "What's wrong #4"): when the
-    caller passes ``n_rows`` it is asserting state rows == input rows —
-    the fork-free precondition. A caller that skipped pruning hands the
-    init join fan-out (an in-degree-2 (k-1)-mer matches two predecessor
-    rows), the real state is LARGER than ``n_rows``, and the
-    ceil(log2(n_rows)) bound can cut the loop before long paths
-    converge — silently wrong output. The FIRST probe round therefore
-    counts state rows alongside the mover count (one extra aggregate
-    column in a job that runs anyway — the state row count is invariant
-    across rounds, so one check covers the loop) and raises instead of
-    converging early. Out-degree-only forks (two successors, every
-    in-degree still ≤ 1) keep state rows == input rows and converge to
-    a merged grouping — that is the documented caller contract
-    (prune_forks first), unchanged; the guard targets the rounds-bound
-    hazard, which is exactly the fan-out case.
-
-    Cycle-proof early exit (r9): the old probe stopped only when NO
-    pointer moved — but cycle members move FOREVER, so one cycle
-    anywhere in the input pinned the loop at the full log2(total-rows)
-    bound even though every path had converged rounds earlier. The
-    probe now counts movers: an unconverged PATH pointer always moves
-    (its jump is strictly head-ward) and then never moves again, so the
-    path-mover count is strictly decreasing while nonzero, and the
-    cycle-mover count is NON-INCREASING — not constant: a cycle whose
-    length divides 2^r collapses to self-loops after log2(c) doubling
-    rounds and its members stop moving too. The exit therefore relies
-    only on both deltas being ≤ 0 with the path delta strictly negative
-    until exhausted: two consecutive probes with EQUAL mover counts
-    prove no path pointer remains unconverged (whatever mix of live
-    cycles and self-looped cycles makes up the residue) → stop. Identical fixed point for path rows (extra rounds are
-    identity jumps); cycle rows are dropped by the callers' head
-    semi-join regardless of how many extra laps they ran.
+    Exit: every ``_BARRIER_EVERY`` rounds a lazy barrier is materialized
+    by a full-scan mover count. An unconverged path pointer always moves
+    and then never moves again, while cycle movers are non-increasing, so
+    two consecutive probes with equal mover counts prove every path has
+    converged. Extra rounds are identity jumps for path rows.
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
     # n_rows is the caller's fork-free CLAIM, verified at the first probe
     claimed_rows = n_rows
     rounds = min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
-    # measured-size broadcast gate (module docstring at _LOOP_BCAST_BYTES):
-    # state row count is invariant across rounds (every kid keeps exactly
-    # one row), so one gate decision holds for the whole loop
-    small = _loop_broadcast_ok(n_rows, row_bytes)
-
     prev_movers = None
     for r in range(1, rounds + 1):
         jump = state.select(
@@ -499,7 +416,7 @@ def _double_pointers(
             (F.col("off") + F.col("__off2")).alias("off"),
             (F.col("__anc2") != F.col("anc")).alias("__moved"),
         )
-        if r % checkpoint_every == 0 or r == rounds:
+        if r % _BARRIER_EVERY == 0 or r == rounds:
             nxt = iteration_barrier(nxt, eager=False)
             # full-scan aggregate (not limit(1)): computes EVERY
             # partition, so the lazy checkpoint materializes completely
@@ -535,31 +452,27 @@ def _double_pointers(
 
 
 def extend_to_convergence(
-    paths: DataFrame,
-    k: int,
-    max_iterations: int = DEFAULT_MAX_ITERATIONS,
-    check_every: int = 3,
-    min_iterations: int = 15,
-    overlap: int | None = None,
-    allowed_keys: DataFrame | None = None,
-    checkpoint_every: int = 3,
+    paths: DataFrame, k: int, max_iterations: int = DEFAULT_MAX_ITERATIONS
 ) -> DataFrame:
     """Drive contraction rounds until the row count stops shrinking (I1/I2).
 
     Mirrors the reference's convergence loop (``ReflexivDSMain.java:
-    297-330``): count every ``check_every`` rounds, stop when unchanged.
-    Eager ``localCheckpoint`` every ``checkpoint_every`` rounds keeps the
-    logical plan O(1) deep; skipped rounds re-execute from the previous
+    297-330``): every ``_BARRIER_EVERY`` rounds, an eager
+    ``localCheckpoint`` keeps the logical plan O(1) deep and a count
+    checks for convergence. Skipped rounds re-execute from the previous
     checkpoint but reuse persisted shuffle files, so batching 3 rounds
     per checkpoint cuts working-set materializations 3× for ~zero
     recompute (measured ~20% faster end-to-end).
 
     A remaining joinable pair survives one random-orientation round with
-    probability 3/4, so a single unchanged ``check_every`` window is weak
-    evidence of convergence ((3/4)^3 ≈ 42%). We therefore require TWO
-    consecutive unchanged windows ((3/4)^6 ≈ 18% false-stop per straggling
-    pair) and never stop before ``min_iterations`` (the reference gates the
-    same check behind minimumIteration = 15, ``DefaultParam.java:116``).
+    probability 3/4, so a single unchanged window is weak evidence of
+    convergence ((3/4)^3 ≈ 42%). We therefore require TWO consecutive
+    unchanged windows ((3/4)^6 ≈ 18% false-stop per straggling pair) and
+    never stop before ``_MIN_ITERATIONS`` rounds.
+
+    This is the ``algorithm="contract"`` kernel: unlike
+    :func:`rank_paths` it keeps a representative of every pure cycle, as
+    the reference does.
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
@@ -567,16 +480,13 @@ def extend_to_convergence(
     prev_count = current.count()
     unchanged_windows = 0
     for i in range(1, max_iterations + 1):
-        current = extension_round(
-            current, k, i, overlap=overlap, allowed_keys=allowed_keys
-        )
-        if i % checkpoint_every == 0 or i % check_every == 0:
+        current = extension_round(current, k, i)
+        if i % _BARRIER_EVERY == 0:
             current = iteration_barrier(current)
-        if i % check_every == 0:
             n = current.count()
             if n == prev_count:
                 unchanged_windows += 1
-                if unchanged_windows >= 2 and i >= min_iterations:
+                if unchanged_windows >= 2 and i >= _MIN_ITERATIONS:
                     break
             else:
                 unchanged_windows = 0

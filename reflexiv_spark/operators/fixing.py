@@ -9,10 +9,9 @@ extension loop so contigs that share a *unique* junction 31-mer fuse
 (``ReflexivDSDynamicKmerFixing.java:191-257``).
 
 Spark-first: junction support is a hash aggregate; uniqueness is a fork
-filter (window argmax / count-per-key); the merge rounds reuse the
-randomized-contraction kernel with overlap = fix_k
-(:func:`reflexiv_spark.operators.extension.extension_round`) — one hash
-shuffle per round instead of a global sort per round.
+filter (support == 1 at both ends); the merge is the pointer-doubling
+walk of :func:`reflexiv_spark.operators.extension.walk_paths` at contig
+granularity — log2(longest chain) rounds instead of a fixed 18 sorts.
 """
 
 from __future__ import annotations
@@ -20,10 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reflexiv_spark.operators.extension import (
-    _double_pointers,
-    _init_pointers,
-)
+from reflexiv_spark.operators.extension import stitch_walk, walk_paths
 
 # Reference fixes junctions with 31-mers regardless of the assembly k.
 DEFAULT_FIX_K = 31
@@ -72,21 +68,12 @@ def fix_junctions(
     filters with error correction play the same role). Under that
     filter every contig has at most ONE junction-successor and ONE
     junction-predecessor, so the fusion graph is a disjoint union of
-    simple paths and simple cycles — exactly the fork-free
-    precondition of the DETERMINISTIC pointer-doubling kernel. The
-    merge therefore reuses ``extension._init_pointers`` /
-    ``_double_pointers`` at contig granularity (round 11; previously
-    the shared randomized-contraction loop, whose probabilistic
-    convergence test forces >= 15 rounds of eager barriers even on a
-    two-link chain — 8.8 s of the sf0.1 meta ladder against ~1 s for
-    the rank form; the reference's fixed 18 sort+merge rounds,
-    ``ReflexivDSDynamicKmerFixing.java:234-245``, are the same
-    safety margin paid unconditionally). Chains converge in
-    log2(longest chain) rounds with the mover-probe early exit;
-    junction CYCLES (every member in/out-degree 1) pass through
-    UNFUSED — the anchored-path semantics the meta-ladder oracle's
-    unique-junction walk defines (a walk from in-degree-0 anchors
-    never enters a cycle).
+    simple paths and simple cycles — the fork-free precondition of the
+    deterministic pointer-doubling walk, which fuses chains in
+    log2(longest chain) rounds. Junction CYCLES (every member
+    in/out-degree 1) pass through UNFUSED — the anchored-path semantics
+    the meta-ladder oracle's unique-junction walk defines (a walk from
+    in-degree-0 anchors never enters a cycle).
 
     Returns DataFrame[seq] of fixed (possibly fused) contigs.
     """
@@ -102,15 +89,8 @@ def fix_junctions(
         .localCheckpoint(eager=False)  # pre, suc, and the pass-through
     )
     # ONE materializing count: runs the dedup into the checkpoint and
-    # hands the doubling loop its round bound up front (r14, the
-    # rank_paths job-economy pattern — the old shape paid an EAGER init
-    # barrier job plus the loop's own state.count() job; now the init
-    # barrier is lazy and the loop starts counted: 2 driver-blocking
-    # jobs → 1). state rows == cs rows is GUARANTEED here, not assumed:
-    # suc is filtered to unique junctions (n_ends == 1 ⇒ each __pk is
-    # the tail of exactly one contig), so the init left join matches at
-    # most one predecessor per contig — the loop's first-probe
-    # fork-free guard re-verifies it anyway.
+    # hands the walk its node count (state rows == cs rows by the suc
+    # filter below; the walk's first probe re-verifies it)
     n_cs = cs.count()
     # pre: EVERY contig, keyed by its head fix_k-mer (so every contig
     # appears in the pointer state exactly once); suc: only tails that
@@ -124,21 +104,17 @@ def fix_junctions(
         )
         .join(F.broadcast(unique_j), "__pk")
     )
-    state, heads = _init_pointers(pre, suc)
-    state = _double_pointers(state, max_rounds, checkpoint_every=3, n_rows=n_cs)
-    done = state.join(heads, "anc", "left_semi")
+    # contig ids vary in length: no row-size gate, the walk shuffles
+    done, state, heads = walk_paths(pre, suc, n_cs, max_rounds)
     parts = done.groupBy("anc").agg(
         F.array_sort(F.collect_list(F.struct("off", "kid"))).alias("xs")
     )
-    rest = F.array_join(
-        F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: F.substring(x["kid"], fix_k + 1, F.length(x["kid"])),
-        ),
-        "",
-    )
     fused = parts.select(
-        F.concat(F.col("xs").getItem(0)["kid"], rest).alias("seq")
+        stitch_walk(
+            F.col("xs"),
+            lambda x: x["kid"],
+            lambda x: F.substring(x["kid"], fix_k + 1, F.length(x["kid"])),
+        ).alias("seq")
     )
     # cycle members never reach a head — they pass through unfused
     # (with the head-anchored walk they are exactly the state rows the

@@ -107,9 +107,8 @@ def test_rank_paths_drops_cycles_keeps_paths(spark):
 
 def test_rank_paths_packed_matches_string_path(spark):
     """The 2-bit packed-long pointer representation (k ≤ 31) and the string
-    fallback produce identical anchored paths, including non-default
-    overlap; mixed-length / non-ACGT inputs auto-fall back and stay
-    correct."""
+    fallback produce identical anchored paths; mixed-length / non-ACGT
+    inputs auto-fall back and stay correct."""
     from reflexiv_spark.operators.extension import rank_paths
 
     g = random_genome(700, seed=31)
@@ -123,11 +122,6 @@ def test_rank_paths_packed_matches_string_path(spark):
     p = key(rank_paths(df, k, packed=True).collect())
     s = key(rank_paths(df, k, packed=False).collect())
     assert p == s and {x for x, _, _ in p} == set(frags)
-
-    # non-default overlap: adjacent rows share o=28 bases
-    po = key(rank_paths(df, k, overlap=28, packed=True).collect())
-    so = key(rank_paths(df, k, overlap=28, packed=False).collect())
-    assert po == so
 
     # an N-containing k-mer defeats injective packing: auto-detect must
     # fall back to strings and match the explicit string path (the N^k row

@@ -185,8 +185,9 @@ class TestFixing:
         anchored-walk semantics the meta-ladder oracle defines (the
         old randomized contraction loop could fuse cycle members).
         Covers both a 2-contig and a 3-contig cycle, plus a normal
-        chain in the same frame to pin that anchored paths still
-        fuse."""
+        chain and a 12-contig chain in the same frame to pin that
+        anchored paths still fuse — the long one needs more doubling
+        rounds than fit before the first barrier probe."""
         j1, j2 = random_genome(31, seed=41), random_genome(31, seed=42)
         mid2 = random_genome(40, seed=43)
         # 2-cycle: A = j1 … j2, B = j2 … j1 (A's tail is B's head and
@@ -202,8 +203,15 @@ class TestFixing:
         j3 = random_genome(31, seed=51)
         up = random_genome(60, seed=52) + j3
         down = j3 + random_genome(60, seed=53)
+        # 12-contig chain over 11 unique junctions
+        js = [random_genome(31, seed=60 + i) for i in range(11)]
+        ends = [random_genome(40, seed=80)] + js + [random_genome(40, seed=81)]
+        chain = [
+            ends[i] + random_genome(30, seed=90 + i) + ends[i + 1]
+            for i in range(12)
+        ]
         df = spark.createDataFrame(
-            [(s,) for s in (cyc_a, cyc_b, cyc_c, cyc_d, cyc_e, up, down)],
+            [(s,) for s in (cyc_a, cyc_b, cyc_c, cyc_d, cyc_e, up, down, *chain)],
             "seq string",
         )
         out = {r.seq for r in fix_junctions(df, max_rounds=12).collect()}
@@ -211,5 +219,7 @@ class TestFixing:
         assert {cyc_a, cyc_b, cyc_c, cyc_d, cyc_e} <= out
         fused = up + down[31:]
         assert fused in out and up not in out and down not in out
+        long_fused = chain[0] + "".join(c[31:] for c in chain[1:])
+        assert long_fused in out and not set(chain) & out
         # nothing beyond the expected survivors (no duplicated fusions)
-        assert out == {cyc_a, cyc_b, cyc_c, cyc_d, cyc_e, fused}
+        assert out == {cyc_a, cyc_b, cyc_c, cyc_d, cyc_e, fused, long_fused}

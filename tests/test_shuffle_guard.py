@@ -24,9 +24,9 @@ def _capture_loop_state(monkeypatch, run):
     captured = {}
     orig = ext._double_pointers
 
-    def spy(state, max_rounds, checkpoint_every, **kw):
+    def spy(state, *a, **kw):
         captured["schema"] = state.schema
-        return orig(state, max_rounds, checkpoint_every, **kw)
+        return orig(state, *a, **kw)
 
     monkeypatch.setattr(ext, "_double_pointers", spy)
     run()
