@@ -35,7 +35,10 @@ Scale notes (100 TB): per round = one hash exchange of surviving sequences
 + an eager ``localCheckpoint`` (executor-local storage) to cut lineage —
 replacing the reference's per-step SparkSession restarts + gzip-CSV
 barriers (``Pipelines.java:832-839``). Driver traffic is one scalar count
-per three rounds.
+per three rounds. The pointer-doubling walk below keeps that shape (a
+shuffle join per round, a probe every three) only above the one-task gate
+``_LOOP_BCAST_BYTES``: a measured state under it is walked whole inside
+one executor task, where per-job cost, not data, would set the wall.
 
 The pointer-doubling alternative (:func:`rank_paths`) is ONE kernel over a
 k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII strings,
@@ -50,11 +53,13 @@ are shared with junction fixing, which walks contigs instead of k-mers.
 
 from __future__ import annotations
 
+import functools
 import math
 import sys
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
 from reflexiv_spark.operators._codec import (
@@ -73,22 +78,18 @@ _BARRIER_EVERY = 3
 # minimumIteration (DefaultParam.java:116).
 _MIN_ITERATIONS = 15
 
-# Broadcast gate for the pointer-doubling loop (optimization round r13,
-# guide §3.1): when the MEASURED state size (exact row count from the
-# loop's own count × a conservative per-row estimate) fits under this
-# many bytes, the per-round jump relation — and the final-assembly
-# heads/count relations, which are never larger — are joined as explicit
-# broadcasts instead of shuffle joins. Each doubling round then runs as
-# a narrow map over the checkpointed state (0 exchanges) instead of 2
-# hash exchanges, and the fixed per-stage latency that dominates small
-# iterative states disappears. The gate is driven by a measured count,
-# not an estimate (reset_stats deliberately discards the compounding
-# size stats, so Catalyst sees "unknown/huge" and would never broadcast
-# on its own), and it is scale-adaptive: a 100 TB run's billions of
-# rows exceed the gate and take the unchanged shuffle path. 64 MB: a
-# broadcast relation this size is comfortably inside guide-class
-# executor memory ("a few hundred MB is usually fine", far from the
-# 8 GB hard cap) while excluding any at-scale state.
+# One-task gate for the pointer-doubling walk: when the MEASURED state
+# size (an exact row count × a conservative per-row estimate) fits under
+# this many bytes, :func:`walk_paths` doubles every pointer in numpy inside
+# ONE executor task — one job instead of a broadcast-join job per round
+# plus a probe job every ``_BARRIER_EVERY`` rounds — and the init join and
+# final-assembly decode join are broadcasts. The gate is driven by a
+# measured count, not an estimate (reset_stats deliberately discards the
+# compounding size stats, so Catalyst sees "unknown/huge" and would never
+# broadcast on its own), and it is scale-adaptive: a 100 TB run's billions
+# of rows exceed it and take the shuffle path. 64 MB is ~1M scalar-id rows:
+# far inside one task's memory ("a few hundred MB is usually fine", far
+# from the 8 GB hard cap), and well under a second of numpy doubling.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
 _PATH_STRUCT = ["seq", "left_cover", "right_cover"]
@@ -262,16 +263,16 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
         # array<long> pointers + an offset per row (~48+16·nb B unsafe at
         # nb blocks), but the loop only ever tests pointer EQUALITY — the
         # block digits are not consulted until final assembly. Riding the
-        # rounds on xxhash64(kid) collapses the per-round exchange/
-        # broadcast row to three longs (~4× fewer bytes at k=41, and
-        # scalar join hashing instead of array hashing), with the blocks
-        # re-attached by ONE hashed join at final assembly. Correctness is
-        # gated exactly, not probabilistically: ONE materializing pass
-        # gives both the exact row count (rounds bound + broadcast gate)
-        # and the injectivity witness (distinct hids == rows); any
-        # collision — 2⁻⁶⁴ birthday odds, but checked, not assumed —
-        # falls back to the array-id loop, so the result is provably
-        # identical either way.
+        # rounds on xxhash64(kid) collapses the per-round exchange row
+        # to three longs (~4× fewer bytes at k=41, and scalar hashing
+        # instead of array hashing, in a join or the one-task walk's
+        # index), with the blocks re-attached by ONE hashed join at final
+        # assembly. Correctness is gated exactly, not probabilistically:
+        # ONE materializing pass gives both the exact row count (rounds
+        # bound + one-task gate) and the injectivity witness (distinct
+        # hids == rows); any collision — 2⁻⁶⁴ birthday odds, but checked,
+        # not assumed — falls back to the array-id loop, so the result is
+        # provably identical either way.
         kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
         n_km, n_hid = kmh.agg(
             F.count(F.lit(1)).alias("n"), F.count_distinct("hid").alias("nh")
@@ -281,11 +282,11 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
         # ONE materializing count up front: runs the whole upstream
         # pipeline into the checkpoint and gives the loop its exact row
         # count (state rows == km rows under the fork-free precondition),
-        # so the doubling loop skips its own count job and the broadcast
+        # so the doubling loop skips its own count job and the one-task
         # gate is driven by a measured size
         n_km, hashed = km.count(), False
     src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
-    small = n_km * (64 if hashed else codec.row_bytes(k)) <= _LOOP_BCAST_BYTES
+    small = fits_one_task(n_km * (64 if hashed else codec.row_bytes(k)))
     pre = src.select(
         F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
     )
@@ -314,6 +315,13 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
     )
 
 
+def fits_one_task(state_bytes: int) -> bool:
+    """The one-task gate: a walk state of ``state_bytes`` (measured rows ×
+    a per-row estimate) is small enough for :func:`walk_paths`' local
+    walk and for broadcast joins around it."""
+    return state_bytes <= _LOOP_BCAST_BYTES
+
+
 def walk_paths(
     pre: DataFrame,
     suc: DataFrame,
@@ -327,8 +335,15 @@ def walk_paths(
     ``pre``: DataFrame[kid, __pk], every node once, keyed by the join key
     of its head end; ``suc``: DataFrame[__pred, __pk], a node keyed by the
     join key of its tail end. ``n_rows`` is the exact node count (the
-    loop's round bound and fork-free check). ``small`` joins the successor
-    map, the per-round jump map and the heads as broadcasts.
+    walk's round bound and fork-free check). ``small`` (see
+    :func:`fits_one_task`) broadcasts the successor map and walks the
+    whole state in ONE task (:func:`_walk_local`); otherwise every round
+    is a shuffle join (:func:`_double_pointers`).
+
+    Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
+    head-reachable pointer has converged by then, so surviving CYCLES
+    cannot pin the walk at ``max_rounds``. Both walks raise on a state row
+    count other than ``n_rows`` (the fork-free guard).
 
     ``state`` is DataFrame[kid, anc, off] after the walk: each node's
     path head and its offset from it. ``heads`` is DataFrame[anc] of
@@ -339,22 +354,39 @@ def walk_paths(
     from reflexiv_spark.plans.barriers import iteration_barrier
 
     # each node points at its unique predecessor, or at itself (off 0)
-    # when it heads a path; the lazy barrier is materialized by the
-    # first loop probe instead of a job of its own
-    state = iteration_barrier(
-        pre.join(F.broadcast(suc) if small else suc, "__pk", "left").select(
-            "kid",
-            F.coalesce("__pred", F.col("kid")).alias("anc"),
-            F.when(F.col("__pred").isNull(), F.lit(0))
-            .otherwise(F.lit(1))
-            .cast("long")
-            .alias("off"),
-        ),
-        eager=False,
+    # when it heads a path
+    state = pre.join(F.broadcast(suc) if small else suc, "__pk", "left").select(
+        "kid",
+        F.coalesce("__pred", F.col("kid")).alias("anc"),
+        F.when(F.col("__pred").isNull(), F.lit(0))
+        .otherwise(F.lit(1))
+        .cast("long")
+        .alias("off"),
     )
+    rounds = min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
+    if small:
+        # coalesce(1) is narrow: no exchange, the init join runs in the
+        # walk's one task; three consumers read the lazy barrier
+        walked = iteration_barrier(
+            state.coalesce(1).mapInArrow(
+                functools.partial(_walk_local, n_rows=n_rows, rounds=rounds),
+                StructType(
+                    state.schema.fields
+                    + [StructField("__done", BooleanType(), False)]
+                ),
+            ),
+            eager=False,
+        )
+        state = walked.drop("__done")
+        done = walked.where("__done").drop("__done")
+        heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
+        return done, state, heads
+    # the lazy barrier is materialized by the first loop probe instead of
+    # a job of its own
+    state = iteration_barrier(state, eager=False)
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
-    state = _double_pointers(state, max_rounds, n_rows, small)
-    done = state.join(F.broadcast(heads) if small else heads, "anc", "left_semi")
+    state = _double_pointers(state, rounds, n_rows)
+    done = state.join(heads, "anc", "left_semi")
     return done, state, heads
 
 
@@ -368,14 +400,72 @@ def stitch_walk(xs: Column, head, tail) -> Column:
     return F.concat(head(xs.getItem(0)), rest)
 
 
-def _double_pointers(
-    state: DataFrame, max_rounds: int, n_rows: int, small: bool
-) -> DataFrame:
-    """Pointer-doubling rounds over DataFrame[kid, anc, off].
+def _fork_free_error(detail: str) -> ValueError:
+    return ValueError(
+        f"rank_paths: fork-free precondition violated — {detail} (an "
+        "in-degree>1 (k-1)-mer fans the init join out, and the log2(n) "
+        "round bound derived from the input count would terminate the "
+        "contraction early with wrong output). Run prune_forks / "
+        "min_error_coverage pruning first."
+    )
 
-    Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
-    head-reachable pointer has converged by then, so surviving CYCLES
-    cannot pin the loop at ``max_rounds``.
+
+def _id_keys(ids):
+    """Hashable numpy keys of an Arrow id column: the values themselves for
+    long and string ids, one fixed-width ``np.void`` per row for
+    ``array<long>`` block ids (every row holds the same block count)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not pa.types.is_list(ids.type):
+        return ids.to_numpy(zero_copy_only=False)
+    blocks = ids.flatten().to_numpy().reshape(len(ids), -1)
+    return blocks.view(np.dtype((np.void, 8 * blocks.shape[1]))).ravel()
+
+
+def _walk_local(batches, n_rows: int, rounds: int):
+    """mapInArrow body: the whole (kid, anc, off) state of one task →
+    (kid, anc, off, __done), doubling row positions in numpy.
+
+    Same walk as :func:`_double_pointers`: at most ``rounds`` rounds,
+    stopping once no pointer moves. ``__done``: the final pointer is an
+    ``off == 0`` head. Raises on a row count other than ``n_rows`` or a
+    duplicate ``kid`` (the fork-free guard).
+    """
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    batches = list(batches)
+    n = sum(b.num_rows for b in batches)
+    if n != n_rows:
+        raise _fork_free_error(
+            f"pointer state has {n} rows for {n_rows} input k-mers"
+        )
+    if n == 0:
+        return
+    t = pa.Table.from_batches(batches)
+    kid = t.column("kid").combine_chunks()
+    index = pd.Index(_id_keys(kid))
+    if not index.is_unique:
+        raise _fork_free_error(f"pointer state repeats a node id in {n} rows")
+    ptr = index.get_indexer(_id_keys(t.column("anc").combine_chunks()))
+    off = t.column("off").to_numpy()
+    for _ in range(rounds):
+        nxt = ptr[ptr]
+        if np.array_equal(nxt, ptr):
+            break
+        off = off + off[ptr]
+        ptr = nxt
+    yield pa.RecordBatch.from_arrays(
+        [kid, kid.take(pa.array(ptr)), pa.array(off), pa.array(off[ptr] == 0)],
+        names=["kid", "anc", "off", "__done"],
+    )
+
+
+def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
+    """Pointer-doubling rounds over DataFrame[kid, anc, off], one shuffle
+    join per round.
 
     Fork-free guard: ``n_rows`` claims state rows == input rows. An
     in-degree-2 key fans the init join out, the real state is larger and
@@ -392,7 +482,6 @@ def _double_pointers(
 
     # n_rows is the caller's fork-free CLAIM, verified at the first probe
     claimed_rows = n_rows
-    rounds = min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
     prev_movers = None
     for r in range(1, rounds + 1):
         jump = state.select(
@@ -400,13 +489,6 @@ def _double_pointers(
             F.col("anc").alias("__anc2"),
             F.col("off").alias("__off2"),
         )
-        if small:
-            # gated: the jump map fits comfortably in memory, so each
-            # round is a broadcast-hash join (no exchange of the state;
-            # measured 2x faster per window than the shuffle pair at
-            # sub-gate sizes). At scale the gate stays closed and the
-            # shuffle join below is unchanged.
-            jump = F.broadcast(jump)
         # the join key "anc" is the OLD pointer: __moved compares it to the
         # jumped pointer in the same pass — no second self-join for the
         # convergence test
@@ -427,15 +509,9 @@ def _double_pointers(
                     F.count(F.lit(1)).alias("n"),
                 ).first()
                 if n_state != claimed_rows:
-                    raise ValueError(
-                        "rank_paths: fork-free precondition violated — "
+                    raise _fork_free_error(
                         f"pointer state has {n_state} rows for "
-                        f"{claimed_rows} input k-mers (an in-degree>1 "
-                        "(k-1)-mer fans the init join out, and the "
-                        "log2(n) round bound derived from the input "
-                        "count would terminate the contraction early "
-                        "with wrong output). Run prune_forks / "
-                        "min_error_coverage pruning first."
+                        f"{claimed_rows} input k-mers"
                     )
                 claimed_rows = None  # row count is loop-invariant
             else:

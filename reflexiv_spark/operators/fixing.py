@@ -11,7 +11,8 @@ extension loop so contigs that share a *unique* junction 31-mer fuse
 Spark-first: junction support is a hash aggregate; uniqueness is a fork
 filter (support == 1 at both ends); the merge is the pointer-doubling
 walk of :func:`reflexiv_spark.operators.extension.walk_paths` at contig
-granularity — log2(longest chain) rounds instead of a fixed 18 sorts.
+granularity — log2(longest chain) rounds instead of a fixed 18 sorts, all
+in one task while the contig set fits the walk's one-task gate.
 """
 
 from __future__ import annotations
@@ -19,7 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reflexiv_spark.operators.extension import stitch_walk, walk_paths
+from reflexiv_spark.operators.extension import (
+    fits_one_task,
+    stitch_walk,
+    walk_paths,
+)
 
 # Reference fixes junctions with 31-mers regardless of the assembly k.
 DEFAULT_FIX_K = 31
@@ -88,10 +93,15 @@ def fix_junctions(
         .dropDuplicates(["kid"])
         .localCheckpoint(eager=False)  # pre, suc, and the pass-through
     )
-    # ONE materializing count: runs the dedup into the checkpoint and
+    # ONE materializing aggregate: runs the dedup into the checkpoint and
     # hands the walk its node count (state rows == cs rows by the suc
-    # filter below; the walk's first probe re-verifies it)
-    n_cs = cs.count()
+    # filter below; the walk re-verifies it) and the id bytes for the
+    # one-task gate: 64 B per state row plus each contig id twice (kid
+    # and its anc pointer)
+    n_cs, id_bytes = cs.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.length("kid")), F.lit(0))
+    ).first()
+    small = fits_one_task(64 * n_cs + 2 * id_bytes)
     # pre: EVERY contig, keyed by its head fix_k-mer (so every contig
     # appears in the pointer state exactly once); suc: only tails that
     # are unique junctions — a unique key is the tail of exactly one
@@ -104,8 +114,7 @@ def fix_junctions(
         )
         .join(F.broadcast(unique_j), "__pk")
     )
-    # contig ids vary in length: no row-size gate, the walk shuffles
-    done, state, heads = walk_paths(pre, suc, n_cs, max_rounds)
+    done, state, heads = walk_paths(pre, suc, n_cs, max_rounds, small=small)
     parts = done.groupBy("anc").agg(
         F.array_sort(F.collect_list(F.struct("off", "kid"))).alias("xs")
     )

@@ -270,6 +270,8 @@ def test_rank_paths_blocks_hashed_ids_match_array_ids(spark, monkeypatch):
         return orig(state, *a, **kw)
 
     monkeypatch.setattr(ex, "_double_pointers", spy)
+    # shut the one-task gate so both runs reach the shuffle rounds
+    monkeypatch.setattr(ex, "_LOOP_BCAST_BYTES", 0)
     hashed = sorted(tuple(r) for r in rank_paths_blocks(counts, k).collect())
     monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
     arr = sorted(tuple(r) for r in rank_paths_blocks(counts, k).collect())

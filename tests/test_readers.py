@@ -197,11 +197,12 @@ def test_python_datasource_matches_mapinpandas_reader(spark, tmp_path):
     fa_mp = sorted(map(tuple, read_fasta(spark, str(fa)).collect()))
     assert fa_ds == fa_mp and len(fa_ds) == 2
 
-    # gzip example from the reference keeps working through the API
-    via_gz = (
-        spark.read.format("fastq")
-        .load("/root/reference/example/paired_dat1.fq.gz")
-        .count()
-    )
-    gz_mp = read_fastq(spark, "/root/reference/example/paired_dat1.fq.gz").count()
+    # a gzip FASTQ keeps working through the API
+    gz = tmp_path / "paired_1.fq.gz"
+    with gzip.open(gz, "wt") as f:
+        for i in range(50):
+            seq = random_genome(100, seed=300 + i)
+            f.write(f"@pair{i}/1\n{seq}\n+\n{'I' * len(seq)}\n")
+    via_gz = spark.read.format("fastq").load(str(gz)).count()
+    gz_mp = read_fastq(spark, str(gz)).count()
     assert via_gz == gz_mp > 0

@@ -29,6 +29,9 @@ def _capture_loop_state(monkeypatch, run):
         return orig(state, *a, **kw)
 
     monkeypatch.setattr(ext, "_double_pointers", spy)
+    # pin the at-scale payload: a sub-gate state is walked in one task
+    # and never reaches the shuffle rounds
+    monkeypatch.setattr(ext, "_LOOP_BCAST_BYTES", 0)
     run()
     return captured["schema"]
 
