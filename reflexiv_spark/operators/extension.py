@@ -87,9 +87,15 @@ _MIN_ITERATIONS = 15
 # measured count, not an estimate (reset_stats deliberately discards the
 # compounding size stats, so Catalyst sees "unknown/huge" and would never
 # broadcast on its own), and it is scale-adaptive: a 100 TB run's billions
-# of rows exceed it and take the shuffle path. 64 MB is ~1M scalar-id rows:
+# of rows exceed it and take the shuffle path. 64 MB is ~1M scalar-id rows,
 # far inside one task's memory ("a few hundred MB is usually fine", far
-# from the 8 GB hard cap), and well under a second of numpy doubling.
+# from the 8 GB hard cap). The size was inherited from the old broadcast
+# gate; measured for the one-task walk at the gate itself (interleaved,
+# 3 runs per arm, local[4] on a 4-vCPU host, tools/ab_walk_gate.py), the
+# one-task walk is still the faster one: rank_paths_packed over 1M k-mers
+# 3.6-5.1 s vs 14.3-17.4 s, rank_paths_blocks (k=41) 5.5-6.0 s vs
+# 19.1-22.0 s, fix_junctions over 60k 500-base contigs 3.1-4.6 s vs
+# 9.0-10.1 s. Larger states were not measured, so the gate stays here.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
 _PATH_STRUCT = ["seq", "left_cover", "right_cover"]
@@ -260,18 +266,19 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
     if codec.array_ids:
         # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
         # instead of payloads"): every doubling round would move TWO
-        # array<long> pointers + an offset per row (~48+16·nb B unsafe at
-        # nb blocks), but the loop only ever tests pointer EQUALITY — the
-        # block digits are not consulted until final assembly. Riding the
-        # rounds on xxhash64(kid) collapses the per-round exchange row
-        # to three longs (~4× fewer bytes at k=41, and scalar hashing
-        # instead of array hashing, in a join or the one-task walk's
-        # index), with the blocks re-attached by ONE hashed join at final
-        # assembly. Correctness is gated exactly, not probabilistically:
-        # ONE materializing pass gives both the exact row count (rounds
-        # bound + one-task gate) and the injectivity witness (distinct
-        # hids == rows); any collision — 2⁻⁶⁴ birthday odds, but checked,
-        # not assumed — falls back to the array-id loop, so the result is
+        # array<long> pointers + an offset per row (~48+16·nb B unsafe at nb
+        # blocks), but the loop only ever tests pointer EQUALITY — the block
+        # digits are not consulted until final assembly. Riding the rounds
+        # on xxhash64(kid) collapses the per-round exchange row to three
+        # longs (~4× fewer bytes at k=41, and scalar join hashing instead of
+        # array hashing), with the blocks re-attached by ONE hashed join at
+        # final assembly; under the one-task gate there are no per-round
+        # exchanges and this pass is not measured against array ids there.
+        # Correctness is gated exactly, not probabilistically: ONE
+        # materializing pass gives both the exact row count (rounds bound +
+        # one-task gate) and the injectivity witness (distinct hids ==
+        # rows); any collision — 2⁻⁶⁴ birthday odds, but checked, not
+        # assumed — falls back to the array-id loop, so the result is
         # provably identical either way.
         kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
         n_km, n_hid = kmh.agg(
@@ -293,7 +300,7 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
     suc = src.select(
         F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
     )
-    done, _, _ = walk_paths(pre, suc, n_km, max_rounds, small=small)
+    done, _ = walk_paths(pre, suc, n_km, max_rounds, small=small)
     # decode side: loop id as "kid" next to the codec id it stands for
     km_j = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
     if small:
@@ -329,8 +336,7 @@ def walk_paths(
     max_rounds: int,
     small: bool = False,
 ):
-    """Pointer-doubling walk of a fork-free path graph → (done, state,
-    heads).
+    """Pointer-doubling walk of a fork-free path graph → (done, rest).
 
     ``pre``: DataFrame[kid, __pk], every node once, keyed by the join key
     of its head end; ``suc``: DataFrame[__pred, __pk], a node keyed by the
@@ -345,11 +351,11 @@ def walk_paths(
     cannot pin the walk at ``max_rounds``. Both walks raise on a state row
     count other than ``n_rows`` (the fork-free guard).
 
-    ``state`` is DataFrame[kid, anc, off] after the walk: each node's
-    path head and its offset from it. ``heads`` is DataFrame[anc] of
-    in-degree-0 nodes; ``done`` is the state of the nodes whose walk
-    reached one — cycle members (and self-loops, anc == kid with off == 1)
-    never do.
+    Both are DataFrame[kid, anc, off] after the walk: each node's last
+    pointer and its offset from it. ``done`` holds the nodes whose walk
+    reached an in-degree-0 head (``anc`` is that head); ``rest`` holds the
+    others — cycle members (and self-loops, anc == kid with off == 1)
+    never reach one.
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
@@ -377,17 +383,19 @@ def walk_paths(
             ),
             eager=False,
         )
-        state = walked.drop("__done")
-        done = walked.where("__done").drop("__done")
-        heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
-        return done, state, heads
+        return (
+            walked.where("__done").drop("__done"),
+            walked.where(~F.col("__done")).drop("__done"),
+        )
     # the lazy barrier is materialized by the first loop probe instead of
     # a job of its own
     state = iteration_barrier(state, eager=False)
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
     state = _double_pointers(state, rounds, n_rows)
-    done = state.join(heads, "anc", "left_semi")
-    return done, state, heads
+    return (
+        state.join(heads, "anc", "left_semi"),
+        state.join(heads, "anc", "left_anti"),
+    )
 
 
 def stitch_walk(xs: Column, head, tail) -> Column:

@@ -114,7 +114,7 @@ def fix_junctions(
         )
         .join(F.broadcast(unique_j), "__pk")
     )
-    done, state, heads = walk_paths(pre, suc, n_cs, max_rounds, small=small)
+    done, rest = walk_paths(pre, suc, n_cs, max_rounds, small=small)
     parts = done.groupBy("anc").agg(
         F.array_sort(F.collect_list(F.struct("off", "kid"))).alias("xs")
     )
@@ -126,11 +126,7 @@ def fix_junctions(
         ).alias("seq")
     )
     # cycle members never reach a head — they pass through unfused
-    # (with the head-anchored walk they are exactly the state rows the
-    # semi-join dropped)
-    cycles = state.join(heads, "anc", "left_anti").select(
-        F.col("kid").alias("seq")
-    )
+    cycles = rest.select(F.col("kid").alias("seq"))
     short = contigs.where(F.length(seq_col) < fix_k).select(
         F.col(seq_col).alias("seq")
     )
