@@ -108,9 +108,10 @@ def _sql_pruned_edges(
 
 def _sql_walk(k: int, edges: str = "edges", name: str = "walk") -> str:
     """Recursive-CTE unitig walk over ``edges(src, dst, kmer, count)`` —
-    the order-free definition of what the randomized contraction loop
-    converges to (anchored paths; cycles are unreachable from in-degree-0
-    starts and excluded on both sides). Requires WITH RECURSIVE."""
+    the order-free definition of what the pointer-doubling contraction
+    gives with ``algorithm="rank"`` (anchored paths; cycles are
+    unreachable from in-degree-0 starts and excluded on both sides).
+    Requires WITH RECURSIVE."""
     return (
         f"{name}(cur, seq, left_cover, right_cover) AS ("
         f"SELECT e.dst, e.kmer, e.count, e.count FROM {edges} e"
@@ -426,9 +427,9 @@ def q_assemble_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme's O(corpus bytes) of growing sequences, deterministic
     ceil(log2(longest path)) rounds instead of the randomized-pairing
     minimum-iteration floor, sequences assembled once at the end. Output
-    is plan-invariant (tests/test_extension.py proves equality with
-    extend_to_convergence) — the same anchored maximal paths the
-    recursive-CTE oracle walks; cycles have no head on either side.
+    is the anchored maximal paths the recursive-CTE oracle walks
+    (``algorithm="rank"``: cycles have no head and are dropped;
+    tests/test_local_walk.py checks both walks against a Python walk).
     """
     from reflexiv_spark.operators.counter_packed import count_kmers_packed
     from reflexiv_spark.operators.extension import rank_paths_packed

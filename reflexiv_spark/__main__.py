@@ -77,12 +77,14 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--min-cov", type=int, default=2)
     r.add_argument("--min-contig", type=int, default=500)
     r.add_argument("--packed", action="store_true",
-                   help="2-bit packed counting fast path (k <= 31)")
+                   help="2-bit packed k-mer ids from counting to final"
+                        " assembly (one long for k <= 31, long blocks"
+                        " above)")
     r.add_argument("--algorithm", choices=("contract", "rank"),
                    default="contract",
-                   help="contraction kernel: reference-parity randomized"
-                        " contraction, or pointer-doubling rank (with"
-                        " --packed: fully string-free pipeline)")
+                   help="cycle rule of the pointer-doubling contraction:"
+                        " 'contract' keeps one contig per circular genome,"
+                        " 'rank' keeps anchored paths only")
 
     d = add("reduce", help="multi-k reduction ladder (reflexiv reduce)")
     d.add_argument("--klist", default="23,31,41,53,67,81,95")

@@ -12,41 +12,41 @@ deterministic 1↔2 alternation — ``ReflexivDSDynamicKmerFirstFour.java:
 814-815,1056-1058``) so every adjacent pair has ≥1/4 probability of
 contracting per round → expected O(log n) rounds (randomized list ranking).
 
-Spark-first re-expression — ONE hash shuffle per round, no global sort:
-
-1. orientation = ``xxhash64(seq, round) % 2`` (deterministic, reproducible,
-   fresh each round — same role as the reference's alternation);
-2. key = leading (k-1)-mer for forward rows, trailing (k-1)-mer for
-   reflected rows; union both sides tagged A (reflected, path *ends* at
-   key) / B (forward, path *starts* at key);
-3. ``groupBy(key)`` hash aggregate picks the (unique) A and B row per key:
-   both present → emit the contraction ``A || substr(B, k)``; one present →
-   pass through. Map-side partial aggregation halves shuffle bytes; AQE
-   coalesces post-shuffle partitions as the working set shrinks
-   geometrically.
+Spark-first re-expression — DETERMINISTIC list ranking (pointer doubling,
+:func:`rank_paths`): rows are the fixed-width k-mer ids themselves, each
+carrying a pointer toward its path head and an offset from it; per round
+every pointer jumps to its target's pointer. Rounds are ceil(log2(longest
+path)), every round moves fixed-width rows however long the contigs grow,
+and sequences are assembled exactly once at the end.
 
 PRECONDITION: the input graph is fork-free — every (k-1)-mer has in/out
 degree ≤ 1 (run :func:`reflexiv_spark.pipelines.assemble.prune_forks`
-first, the reference's W1/W2 stage). Fork-freeness is invariant under
-contraction, so no per-round re-checking is needed (the reference re-sorts
-and re-scans every round; we don't have to).
+first, the reference's W1/W2 stage). The walk checks it: a fork fans the
+pointer state out and raises.
 
-Scale notes (100 TB): per round = one hash exchange of surviving sequences
-+ an eager ``localCheckpoint`` (executor-local storage) to cut lineage —
-replacing the reference's per-step SparkSession restarts + gzip-CSV
-barriers (``Pipelines.java:832-839``). Driver traffic is one scalar count
-per three rounds. The pointer-doubling walk below keeps that shape (a
-shuffle join per round, a probe every three) only above the one-task gate
-``_LOOP_BCAST_BYTES``: a measured state under it is walked whole inside
-one executor task, where per-job cost, not data, would set the wall.
+Cycles (circular genomes, plasmids) have no head. ``algorithm="rank"``
+drops them — the anchored-path semantics the recursive-CTE oracles
+define. ``algorithm="contract"`` keeps ONE contig per ring, like the
+reference: the walk labels every unresolved row with its cycle; of a
+ring's two strands (each other's reverse complement) only the one holding
+the smallest id of either survives, and it is cut just before that id and
+walked again as a path (:func:`_walk_cycles`).
 
-The pointer-doubling alternative (:func:`rank_paths`) is ONE kernel over a
-k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII strings,
-2-bit packed longs (k ≤ 31) or long-block arrays (k > 31). The codec
-supplies the id column, the prefix/suffix join keys and the tail decode;
-``rank_paths_packed`` / ``rank_paths_blocks`` are its entry points over
-already-packed ids, and ``rank_paths`` picks the packed codec itself
-when its input is fixed-length pure ACGT. The walk itself
+Scale notes (100 TB): above the one-task gate ``_LOOP_BCAST_BYTES`` every
+round is one shuffle join of (id, pointer, offset) rows, with a lazy
+``localCheckpoint`` and one scalar probe every three rounds — replacing
+the reference's per-step SparkSession restarts + gzip-CSV barriers
+(``Pipelines.java:832-839``). A measured state under the gate is walked
+whole inside one executor task, where per-job cost, not data, would set
+the wall.
+
+The walk is ONE kernel over a k-mer codec
+(:mod:`reflexiv_spark.operators._codec`): ASCII strings, 2-bit packed
+longs (k ≤ 31) or long-block arrays (k > 31). The codec supplies the id
+column, the prefix/suffix join keys, the reverse complement and the tail
+decode; ``rank_paths_packed`` / ``rank_paths_blocks`` are its entry
+points over already-packed ids, and ``rank_paths`` picks the packed codec
+itself when its input is fixed-length pure ACGT. The walk itself
 (:func:`walk_paths`) and the final concatenation (:func:`stitch_walk`)
 are shared with junction fixing, which walks contigs instead of k-mers.
 """
@@ -57,11 +57,10 @@ import functools
 import math
 import sys
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
 from reflexiv_spark.operators._codec import (
     BLOCKS,
     PACKED,
@@ -70,13 +69,8 @@ from reflexiv_spark.operators._codec import (
     codec_for,
 )
 
-# Reference iteration budget: DefaultParam.java:115.
-DEFAULT_MAX_ITERATIONS = 150
-# Rounds per barrier + convergence probe, in both loops.
+# Rounds per barrier + convergence probe in the shuffle walk.
 _BARRIER_EVERY = 3
-# The randomized loop never stops earlier: the reference's
-# minimumIteration (DefaultParam.java:116).
-_MIN_ITERATIONS = 15
 
 # One-task gate for the pointer-doubling walk: when the MEASURED state
 # size (an exact row count × a conservative per-row estimate) fits under
@@ -98,96 +92,39 @@ _MIN_ITERATIONS = 15
 # 9.0-10.1 s. Larger states were not measured, so the gate stays here.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
-_PATH_STRUCT = ["seq", "left_cover", "right_cover"]
-
-
-def to_paths(kmer_counts: DataFrame) -> DataFrame:
-    """kmer counts → path rows (seq, left_cover, right_cover).
-
-    Covers start as the k-mer's own count (the reference packs marker/left/
-    right into one long — C6 ``ReflexivDSDynamicKmerRuduction.java:3250-3280``;
-    we keep real int columns, SURVEY.md §1.3).
-    """
-    return kmer_counts.select(
-        F.col("kmer").alias("seq"),
-        F.col("count").cast("int").alias("left_cover"),
-        F.col("count").cast("int").alias("right_cover"),
-    )
-
-
-def extension_round(paths: DataFrame, k: int, round_idx: int) -> DataFrame:
-    """One randomized contraction round (W3 / J1): single hash-agg shuffle.
-
-    ``paths``: DataFrame[seq, left_cover, right_cover]; every seq is a walk
-    in the k-order de Bruijn graph (length ≥ k), and a mergeable
-    suffix/prefix pair shares k - 1 bases.
-
-    Safety: a group is merged ONLY when it holds exactly one A-side and
-    one B-side row; any other population (a violated fork-free
-    precondition) passes every row through unchanged — never silently
-    dropped. Each input row is tagged onto exactly one (key, side), so
-    pass-through cannot duplicate rows.
-    """
-    fwd = F.xxhash64("seq", F.lit(round_idx)) % 2 == 0
-    tagged = paths.select(
-        F.when(fwd, prefix_subkmer("seq", k)).otherwise(
-            suffix_subkmer("seq", k)
-        ).alias("key"),
-        F.when(fwd, F.lit("B")).otherwise(F.lit("A")).alias("side"),
-        F.struct(*_PATH_STRUCT).alias("row"),
-    )
-    grouped = tagged.groupBy("key").agg(
-        F.collect_list(F.when(F.col("side") == "A", F.col("row"))).alias("al"),
-        F.collect_list(F.when(F.col("side") == "B", F.col("row"))).alias("bl"),
-    )
-    a = F.col("al").getItem(0)
-    b = F.col("bl").getItem(0)
-    merged = F.struct(
-        F.concat(a["seq"], F.expr(f"substring(bl[0].seq, {k})")).alias("seq"),
-        a["left_cover"].alias("left_cover"),
-        b["right_cover"].alias("right_cover"),
-    )
-    out_rows = F.when(
-        (F.size("al") == 1) & (F.size("bl") == 1), F.array(merged)
-    ).otherwise(F.concat(F.col("al"), F.col("bl")))
-    return grouped.select(F.explode(out_rows).alias("r")).select(
-        F.col("r.seq").alias("seq"),
-        F.col("r.left_cover").alias("left_cover"),
-        F.col("r.right_cover").alias("right_cover"),
-    )
-
-
 def rank_paths(
     kmer_counts: DataFrame,
     k: int,
     max_rounds: int = 40,
     packed: bool = True,
+    algorithm: str = "rank",
 ) -> DataFrame:
-    """Pointer-doubling (list-ranking) contraction — the O(rows)-per-round
-    alternative to :func:`extend_to_convergence` (VERDICT r3 item 5).
+    """Pointer-doubling (list-ranking) contraction of fork-free k-mer
+    counts DataFrame[kmer, count] → DataFrame[seq, left_cover,
+    right_cover].
 
-    The randomized contraction shuffles every row's FULL growing sequence
-    each round — O(corpus bytes) exchanged per round, O(rounds × corpus)
-    total. Here rows are the fixed-width k-mers themselves: each k-mer
-    carries an ancestor pointer (toward its path head) and an offset, and
-    per round the pointer jumps to its ancestor's ancestor (classic
-    pointer doubling / list ranking) — per-round exchange is
-    O(rows × ~40 B) regardless of how long paths grow, rounds are
-    ceil(log2(longest path)) DETERMINISTICALLY (no randomized-pairing
-    minimum-iteration floor), and sequences are assembled exactly once at
-    the end (one groupBy over (head, offset, k-mer)).
+    Rows are the fixed-width k-mers themselves: each k-mer carries an
+    ancestor pointer (toward its path head) and an offset, and per round
+    the pointer jumps to its ancestor's ancestor (classic pointer doubling
+    / list ranking) — per-round exchange is O(rows × ~40 B) regardless of
+    how long paths grow, rounds are ceil(log2(longest path))
+    DETERMINISTICALLY, and sequences are assembled exactly once at the end
+    (one groupBy over (head, offset, k-mer)).
 
-    PRECONDITION: fork-free graph (run prune_forks first), like
-    :func:`extension_round`. Returns DataFrame[seq, left_cover,
-    right_cover] — exactly the ANCHORED maximal paths (each starting at an
-    in-degree-0 (k-1)-mer). Pure cycles have no head, never converge, and
-    are dropped — the same order-free semantics the recursive-CTE oracles
-    define, where the randomized scheme would emit a rotation-dependent
-    representative.
+    PRECONDITION: fork-free graph (run prune_forks first). With
+    ``algorithm="rank"`` the output is exactly the ANCHORED maximal paths
+    (each starting at an in-degree-0 (k-1)-mer); pure cycles have no head
+    and are dropped — the order-free semantics the recursive-CTE oracles
+    define. ``algorithm="contract"`` adds one contig per kept cycle: of a
+    cycle and its reverse-complement twin, the one whose smallest id is
+    also the smallest canonical id over its members, cut just before that
+    id (a self-loop is a 1-cycle; a cycle that is its own reverse
+    complement is kept once). Ids order like their k-mer strings on every
+    codec, so the rotation is codec-independent.
 
     Scale note: final assembly holds one path's (offset, k-mer) structs in
-    a single aggregation buffer — same endgame footprint as the
-    contraction scheme's final row carrying the whole contig string.
+    a single aggregation buffer — the whole contig in one row, as in the
+    reference's final contraction row.
 
     Shuffle representation: over pure-ACGT fixed-length k-mers (the
     common case after ``explode_kmers``' drop_invalid), ``packed`` swaps
@@ -200,6 +137,7 @@ def rank_paths(
     exactly once at final assembly. Any other input falls back to the
     string kernel; ``packed=False`` forces it.
     """
+    keep = _keeps_cycles(algorithm)
     km = _loop_input(kmer_counts, "kmer")
     # the lazy checkpoint sits BEFORE the packed guard so the guard's scan
     # materializes it and every later consumer (packed projection, or the
@@ -217,17 +155,18 @@ def rank_paths(
         )
         packed = bad == 0
     if not packed:
-        return _rank(STRING, km, k, max_rounds)
+        return _rank(STRING, km, k, max_rounds, keep)
     codec = codec_for(k, packed=True)
     return codec.public(sys.modules[__name__], "rank_paths{}")(
         km.select(codec.encode("kmer", k).alias("kid"), "count"),
         k,
         max_rounds=max_rounds,
+        algorithm=algorithm,
     )
 
 
 def rank_paths_packed(
-    packed_counts: DataFrame, k: int, max_rounds: int = 40
+    packed_counts: DataFrame, k: int, max_rounds: int = 40, algorithm: str = "rank"
 ) -> DataFrame:
     """:func:`rank_paths` over ALREADY-PACKED 2-bit bigint k-mer ids —
     DataFrame[kid: bigint, count] as produced by
@@ -235,11 +174,11 @@ def rank_paths_packed(
     with ``decode=False``. End-to-end string-free: this is the 100 TB
     representation the reference carries through its whole pipeline."""
     km = _loop_input(packed_counts, "kid")
-    return _rank(PACKED, km, k, max_rounds)
+    return _rank(PACKED, km, k, max_rounds, _keeps_cycles(algorithm))
 
 
 def rank_paths_blocks(
-    block_counts: DataFrame, k: int, max_rounds: int = 40
+    block_counts: DataFrame, k: int, max_rounds: int = 40, algorithm: str = "rank"
 ) -> DataFrame:
     """:func:`rank_paths` over long-block packed k-mers (k > 31) —
     DataFrame[kid: array<long>, count] as produced by
@@ -248,7 +187,13 @@ def rank_paths_blocks(
     (``ReflexivDSDynamicKmerRuduction.java:3220-3241``) carried through
     the contraction loop."""
     km = _loop_input(block_counts, "kid")
-    return _rank(BLOCKS, km, k, max_rounds)
+    return _rank(BLOCKS, km, k, max_rounds, _keeps_cycles(algorithm))
+
+
+def _keeps_cycles(algorithm: str) -> bool:
+    if algorithm not in ("contract", "rank"):
+        raise ValueError(f"unknown algorithm {algorithm!r}")
+    return algorithm == "contract"
 
 
 def _loop_input(counts: DataFrame, col: str) -> DataFrame:
@@ -258,9 +203,12 @@ def _loop_input(counts: DataFrame, col: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame:
+def _rank(
+    codec: KmerCodec, km: DataFrame, k: int, max_rounds: int, keep: bool
+) -> DataFrame:
     """The pointer-doubling kernel over ``codec`` ids: DataFrame[<codec.col>,
-    count] (checkpointed) → DataFrame[seq, left_cover, right_cover]."""
+    count] (checkpointed) → DataFrame[seq, left_cover, right_cover];
+    ``keep`` adds the kept cycles (:func:`_walk_cycles`)."""
     o = k - 1
     c = codec.col
     if codec.array_ids:
@@ -293,18 +241,21 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
         # gate is driven by a measured size
         n_km, hashed = km.count(), False
     src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
-    small = fits_one_task(n_km * (64 if hashed else codec.row_bytes(k)))
+    row_bytes = 64 if hashed else codec.row_bytes(k)
+    small = fits_one_task(n_km * row_bytes)
     pre = src.select(
         F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
     )
     suc = src.select(
         F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
     )
-    done, _ = walk_paths(pre, suc, n_km, max_rounds, small=small)
+    done, rest = walk_paths(pre, suc, n_km, max_rounds, small=small, cycles=keep)
     # decode side: loop id as "kid" next to the codec id it stands for
     km_j = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
     if small:
         km_j = F.broadcast(km_j)
+    if keep:
+        done = _walk_cycles(codec, done, rest, km_j, val, k, max_rounds, row_bytes)
     parts = done.join(km_j, "kid").groupBy("anc").agg(
         F.array_sort(
             F.collect_list(F.struct("off", F.col(val).alias(c), "count"))
@@ -322,6 +273,50 @@ def _rank(codec: KmerCodec, km: DataFrame, k: int, max_rounds: int) -> DataFrame
     )
 
 
+def _walk_cycles(
+    codec: KmerCodec, done: DataFrame, rest: DataFrame, ids: DataFrame,
+    val: str, k: int, max_rounds: int, row_bytes: int,
+) -> DataFrame:
+    """``done`` plus the kept cycles of ``rest``, each cut into a path and
+    walked again → DataFrame[kid, anc, off].
+
+    ``rest`` holds the walk's unresolved rows with ``anc`` a per-cycle
+    label; ``ids`` maps the walk id ``kid`` to the codec id ``val``. A
+    ring sits in the graph as two cycles, one per strand, whose members
+    are each other's reverse complements. Both have the same smallest
+    canonical id min(id, revcomp(id)), and only the strand holding it has
+    it as its own smallest id, so exactly one passes; a cycle that is its
+    own reverse complement passes once. The kept cycle's smallest member
+    loses its predecessor and heads the path."""
+    o = k - 1
+    cycle = Window.partitionBy("anc")
+    canon = F.least(F.col(val), codec.revcomp(val, k))
+    kept = (
+        rest.join(ids, "kid")
+        .withColumns({
+            "__cut": F.min(val).over(cycle),
+            "__canon": F.min(canon).over(cycle),
+        })
+        .where(F.col("__cut") == F.col("__canon"))
+        .localCheckpoint(eager=False)  # the count, pre and suc
+    )
+    n = kept.count()
+    if n == 0:
+        return done
+    pre = kept.select(
+        "kid",
+        F.when(F.col(val) != F.col("__cut"), codec.prefix_key(val, k, o))
+        .alias("__pk"),
+    )
+    suc = kept.select(
+        F.col("kid").alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
+    )
+    cycles, _ = walk_paths(
+        pre, suc, n, max_rounds, small=fits_one_task(n * row_bytes)
+    )
+    return done.unionByName(cycles)
+
+
 def fits_one_task(state_bytes: int) -> bool:
     """The one-task gate: a walk state of ``state_bytes`` (measured rows ×
     a per-row estimate) is small enough for :func:`walk_paths`' local
@@ -335,6 +330,7 @@ def walk_paths(
     n_rows: int,
     max_rounds: int,
     small: bool = False,
+    cycles: bool = False,
 ):
     """Pointer-doubling walk of a fork-free path graph → (done, rest).
 
@@ -347,15 +343,19 @@ def walk_paths(
     is a shuffle join (:func:`_double_pointers`).
 
     Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
-    head-reachable pointer has converged by then, so surviving CYCLES
-    cannot pin the walk at ``max_rounds``. Both walks raise on a state row
+    head-reachable pointer and every cycle label has converged by then,
+    so surviving CYCLES cannot pin the walk at ``max_rounds``. Both walks raise on a state row
     count other than ``n_rows`` (the fork-free guard).
 
     Both are DataFrame[kid, anc, off] after the walk: each node's last
     pointer and its offset from it. ``done`` holds the nodes whose walk
     reached an in-degree-0 head (``anc`` is that head); ``rest`` holds the
-    others — cycle members (and self-loops, anc == kid with off == 1)
-    never reach one.
+    others — cycle members (and self-loops) never reach one. With
+    ``cycles``, a ``rest`` row's ``anc`` is instead its cycle's label: one
+    member, the same for the whole cycle. Each row doubles a running
+    minimum beside its pointer; the one-task walk always does (over row
+    positions, at no extra pass), the shuffle walk only with ``cycles``
+    (over the ids) and then runs until no label changes.
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
@@ -387,15 +387,18 @@ def walk_paths(
             walked.where("__done").drop("__done"),
             walked.where(~F.col("__done")).drop("__done"),
         )
+    if cycles:
+        state = state.withColumn("lbl", F.col("kid"))
     # the lazy barrier is materialized by the first loop probe instead of
     # a job of its own
     state = iteration_barrier(state, eager=False)
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
     state = _double_pointers(state, rounds, n_rows)
-    return (
-        state.join(heads, "anc", "left_semi"),
-        state.join(heads, "anc", "left_anti"),
-    )
+    rest = state.join(heads, "anc", "left_anti")
+    if cycles:
+        state = state.drop("lbl")
+        rest = rest.select("kid", F.col("lbl").alias("anc"), "off")
+    return state.join(heads, "anc", "left_semi"), rest
 
 
 def stitch_walk(xs: Column, head, tail) -> Column:
@@ -437,8 +440,12 @@ def _walk_local(batches, n_rows: int, rounds: int):
 
     Same walk as :func:`_double_pointers`: at most ``rounds`` rounds,
     stopping once no pointer moves. ``__done``: the final pointer is an
-    ``off == 0`` head. Raises on a row count other than ``n_rows`` or a
-    duplicate ``kid`` (the fork-free guard).
+    ``off == 0`` head. A cycle's pointers stop moving only once 2^r
+    steps is a whole number of turns round it (otherwise the walk runs
+    all ``rounds``, see :func:`walk_paths`), so the running minimum row
+    position doubled beside them covers the cycle by then: the other
+    rows take that row as their ``anc`` label. Raises on a row count
+    other than ``n_rows`` or a duplicate ``kid`` (the fork-free guard).
     """
     import numpy as np
     import pandas as pd
@@ -459,14 +466,18 @@ def _walk_local(batches, n_rows: int, rounds: int):
         raise _fork_free_error(f"pointer state repeats a node id in {n} rows")
     ptr = index.get_indexer(_id_keys(t.column("anc").combine_chunks()))
     off = t.column("off").to_numpy()
+    lab = np.arange(n)
     for _ in range(rounds):
         nxt = ptr[ptr]
         if np.array_equal(nxt, ptr):
             break
         off = off + off[ptr]
+        lab = np.minimum(lab, lab[ptr])
         ptr = nxt
+    done = off[ptr] == 0
+    anc = kid.take(pa.array(np.where(done, ptr, lab)))
     yield pa.RecordBatch.from_arrays(
-        [kid, kid.take(pa.array(ptr)), pa.array(off), pa.array(off[ptr] == 0)],
+        [kid, anc, pa.array(off), pa.array(done)],
         names=["kid", "anc", "off", "__done"],
     )
 
@@ -485,9 +496,23 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
     and then never moves again, while cycle movers are non-increasing, so
     two consecutive probes with equal mover counts prove every path has
     converged. Extra rounds are identity jumps for path rows.
+
+    A ``lbl`` column is a running minimum doubled beside the pointer. A
+    round in which no label drops proves every cycle's labels equal its
+    minimum (each label is then no larger than the one 2^r members on,
+    all the way round), so the probe also counts drops and the walk
+    stops on equal mover counts only once none is left.
     """
     from reflexiv_spark.plans.barriers import iteration_barrier
 
+    cycles = "lbl" in state.columns
+    lbl2, relabel = [], []
+    if cycles:
+        lbl2 = [F.col("lbl").alias("__lbl2")]
+        relabel = [
+            F.least("lbl", "__lbl2").alias("lbl"),
+            (F.col("__lbl2") < F.col("lbl")).alias("__drop"),
+        ]
     # n_rows is the caller's fork-free CLAIM, verified at the first probe
     claimed_rows = n_rows
     prev_movers = None
@@ -496,6 +521,7 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
             F.col("kid").alias("anc"),
             F.col("anc").alias("__anc2"),
             F.col("off").alias("__off2"),
+            *lbl2,
         )
         # the join key "anc" is the OLD pointer: __moved compares it to the
         # jumped pointer in the same pass — no second self-join for the
@@ -505,74 +531,32 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
             F.col("__anc2").alias("anc"),
             (F.col("off") + F.col("__off2")).alias("off"),
             (F.col("__anc2") != F.col("anc")).alias("__moved"),
+            *relabel,
         )
         if r % _BARRIER_EVERY == 0 or r == rounds:
             nxt = iteration_barrier(nxt, eager=False)
             # full-scan aggregate (not limit(1)): computes EVERY
             # partition, so the lazy checkpoint materializes completely
             # in this one job and downstream rounds reuse the blocks
+            probe = {"m": F.count_if(F.col("__moved"))}
             if claimed_rows is not None:
-                movers, n_state = nxt.agg(
-                    F.count_if(F.col("__moved")).alias("m"),
-                    F.count(F.lit(1)).alias("n"),
-                ).first()
-                if n_state != claimed_rows:
+                probe["n"] = F.count(F.lit(1))
+            if cycles:
+                probe["d"] = F.count_if(F.col("__drop"))
+            got = nxt.agg(*(v.alias(a) for a, v in probe.items())).first()
+            if claimed_rows is not None:
+                if got["n"] != claimed_rows:
                     raise _fork_free_error(
-                        f"pointer state has {n_state} rows for "
+                        f"pointer state has {got['n']} rows for "
                         f"{claimed_rows} input k-mers"
                     )
                 claimed_rows = None  # row count is loop-invariant
-            else:
-                movers = nxt.agg(
-                    F.count_if(F.col("__moved")).alias("m")
-                ).first()[0]
-            state = nxt.drop("__moved")
-            if movers == 0 or movers == prev_movers:
+            movers, drops = got["m"], got["d"] if cycles else 0
+            state = nxt.drop("__moved", "__drop")
+            if movers == 0 or (movers == prev_movers and drops == 0):
                 break
             prev_movers = movers
         else:
-            state = nxt.drop("__moved")
+            state = nxt.drop("__moved", "__drop")
     return state
 
-
-def extend_to_convergence(
-    paths: DataFrame, k: int, max_iterations: int = DEFAULT_MAX_ITERATIONS
-) -> DataFrame:
-    """Drive contraction rounds until the row count stops shrinking (I1/I2).
-
-    Mirrors the reference's convergence loop (``ReflexivDSMain.java:
-    297-330``): every ``_BARRIER_EVERY`` rounds, an eager
-    ``localCheckpoint`` keeps the logical plan O(1) deep and a count
-    checks for convergence. Skipped rounds re-execute from the previous
-    checkpoint but reuse persisted shuffle files, so batching 3 rounds
-    per checkpoint cuts working-set materializations 3× for ~zero
-    recompute (measured ~20% faster end-to-end).
-
-    A remaining joinable pair survives one random-orientation round with
-    probability 3/4, so a single unchanged window is weak evidence of
-    convergence ((3/4)^3 ≈ 42%). We therefore require TWO consecutive
-    unchanged windows ((3/4)^6 ≈ 18% false-stop per straggling pair) and
-    never stop before ``_MIN_ITERATIONS`` rounds.
-
-    This is the ``algorithm="contract"`` kernel: unlike
-    :func:`rank_paths` it keeps a representative of every pure cycle, as
-    the reference does.
-    """
-    from reflexiv_spark.plans.barriers import iteration_barrier
-
-    current = iteration_barrier(paths.dropDuplicates(["seq"]))
-    prev_count = current.count()
-    unchanged_windows = 0
-    for i in range(1, max_iterations + 1):
-        current = extension_round(current, k, i)
-        if i % _BARRIER_EVERY == 0:
-            current = iteration_barrier(current)
-            n = current.count()
-            if n == prev_count:
-                unchanged_windows += 1
-                if unchanged_windows >= 2 and i >= _MIN_ITERATIONS:
-                    break
-            else:
-                unchanged_windows = 0
-            prev_count = n
-    return current

@@ -6,13 +6,15 @@ Stages:
 2. reverse-complement expansion: each canonical k-mer re-emitted in both
    orientations (``DSKmerReverseComplement``, ``ReflexivDSMain.java:222``)
 3. fork/bubble pruning on forward and reflected sub-k-mers (W1/W2)
-4. randomized contraction to convergence (W3/I1/I2 — operators.extension)
+4. contraction by deterministic pointer doubling (W3/I1/I2 —
+   operators.extension.rank_paths); ``algorithm="contract"`` keeps one
+   contig per circular ring, ``"rank"`` only the anchored paths
 5. contig canonicalization + min-length filter (F5) + dedup of the
    strand-duplicate contigs (both orientations were assembled)
 
-Stages 2-4 (with the pointer-doubling rank kernel) are each written once
-over a k-mer codec (:mod:`reflexiv_spark.operators._codec`): ASCII
-strings, 2-bit packed longs (k ≤ 31) or long-block arrays (k > 31). The
+Stages 2-4 are each written once over a k-mer codec
+(:mod:`reflexiv_spark.operators._codec`): ASCII strings, 2-bit packed
+longs (k ≤ 31) or long-block arrays (k > 31). The
 ``*_packed`` / ``*_blocks`` names are that kernel's entry points over
 already-packed ids, and the pipelines reach every stage by its public
 name at call time.
@@ -42,7 +44,6 @@ from reflexiv_spark.operators.counter import (
     DEFAULT_MAX_COVERAGE,
     DEFAULT_MIN_COVERAGE,
 )
-from reflexiv_spark.operators.extension import extend_to_convergence, to_paths
 from reflexiv_spark.operators.fork import filter_forks
 
 # Reference default minimum contig length: DefaultParam.java:108.
@@ -169,6 +170,7 @@ def _assemble_ranked(
     max_iterations: int,
     min_error_coverage: int | None,
     input_canonical: bool,
+    algorithm: str,
 ) -> DataFrame:
     """Counts keyed by ``codec`` ids → expand → prune → rank → contigs,
     each stage through its public per-codec name (looked up at call
@@ -181,7 +183,8 @@ def _assemble_ranked(
         expanded, k, min_error_coverage=min_error_coverage
     )
     contracted = codec.public(extension, "rank_paths{}")(
-        pruned.select(codec.col, "count"), k, max_rounds=max_iterations
+        pruned.select(codec.col, "count"), k, max_rounds=max_iterations,
+        algorithm=algorithm,
     )
     return _finalize_contigs(contracted, min_contig)
 
@@ -201,29 +204,19 @@ def assemble_from_counts(
     k-mers (the ``count_kmers`` contract); for odd k the RC expansion
     then skips its palindrome-dedup exchange (:func:`_palindrome_free`).
 
-    ``algorithm="contract"`` (default) is the reference-parity randomized
-    contraction: pure cycles (circular genomes/plasmids) survive as a
-    rotation-dependent representative, like the reference emits.
-    ``algorithm="rank"`` is the pointer-doubling kernel
-    (:func:`reflexiv_spark.operators.extension.rank_paths`): per-round
-    shuffle of fixed-width ids instead of growing sequences, deterministic
-    log-rounds — the 100 TB path — but cycles are dropped (anchored-paths
-    semantics, identical to the SQL-oracle definition).
+    Both algorithms run the pointer-doubling kernel
+    (:func:`reflexiv_spark.operators.extension.rank_paths`, which packs
+    pure-ACGT k-mers itself): per-round shuffle of fixed-width ids,
+    deterministic log-rounds. ``algorithm="contract"`` (default) keeps
+    one contig per circular genome or plasmid, a fixed rotation of it,
+    like the reference emits a ring; ``algorithm="rank"`` drops pure
+    cycles (anchored-paths semantics, identical to the SQL-oracle
+    definition). Both give the same contigs on a cycle-free graph.
     """
-    if algorithm == "rank":
-        return _assemble_ranked(
-            STRING, kmer_counts, k, min_contig, max_iterations,
-            min_error_coverage, input_canonical,
-        )
-    if algorithm != "contract":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    expanded = expand_orientations(
-        kmer_counts, k, input_canonical=input_canonical
+    return _assemble_ranked(
+        STRING, kmer_counts, k, min_contig, max_iterations,
+        min_error_coverage, input_canonical, algorithm,
     )
-    pruned = prune_forks(expanded, k, min_error_coverage=min_error_coverage)
-    paths = to_paths(pruned.select("kmer", "count"))
-    contracted = extend_to_convergence(paths, k, max_iterations=max_iterations)
-    return _finalize_contigs(contracted, min_contig)
 
 
 def _finalize_contigs(contracted: DataFrame, min_contig: int) -> DataFrame:
@@ -268,16 +261,19 @@ def assemble_from_packed_counts(
     max_iterations: int = 150,
     min_error_coverage: int | None = None,
     input_canonical: bool = False,
+    algorithm: str = "rank",
 ) -> DataFrame:
-    """The fully-packed rank pipeline: DataFrame[kid: bigint, count] (from
+    """The fully-packed pipeline: DataFrame[kid: bigint, count] (from
     ``count_kmers_packed(decode=False)``) → contigs, with every shuffle
     from counting through the contraction loop carrying 2-bit bigint ids —
     no k-mer strings anywhere until the one decode at final path assembly.
-    Anchored-path (``algorithm="rank"``) semantics; identical output to
-    the string pipeline (tests/test_extension.py proves equality)."""
+    ``algorithm`` as in :func:`assemble_from_counts`, but defaulting to
+    the anchored-path ``"rank"`` its callers were written against;
+    identical output to the string pipeline (tests/test_extension.py
+    proves equality)."""
     return _assemble_ranked(
         PACKED, _id_barrier(packed_counts), k, min_contig, max_iterations,
-        min_error_coverage, input_canonical,
+        min_error_coverage, input_canonical, algorithm,
     )
 
 
@@ -288,15 +284,16 @@ def assemble_from_blocks_counts(
     max_iterations: int = 150,
     min_error_coverage: int | None = None,
     input_canonical: bool = False,
+    algorithm: str = "rank",
 ) -> DataFrame:
-    """The fully-packed rank pipeline for k > 31: DataFrame[kid:
-    array<long>, count] (from ``count_kmers_blocks(decode=False)``) →
-    contigs, every shuffle from counting through the contraction loop
-    carrying long-block ids — the k>31 sibling of
-    :func:`assemble_from_packed_counts`."""
+    """The fully-packed pipeline for k > 31: DataFrame[kid: array<long>,
+    count] (from ``count_kmers_blocks(decode=False)``) → contigs, every
+    shuffle from counting through the contraction loop carrying
+    long-block ids — the k>31 sibling of
+    :func:`assemble_from_packed_counts`, with the same ``algorithm``."""
     return _assemble_ranked(
         BLOCKS, _id_barrier(block_counts), k, min_contig, max_iterations,
-        min_error_coverage, input_canonical,
+        min_error_coverage, input_canonical, algorithm,
     )
 
 
@@ -319,11 +316,11 @@ def assemble(
     explicit value to disable. ``packed`` picks the k-mer codec: ASCII
     strings by default, 2-bit ids with ``packed=True`` (scalar int64 for
     k ≤ 31, long-block ``array<long>`` above — identical counts either
-    way). With ``algorithm="rank"`` the codec's ids flow straight through
-    expansion, pruning, and the contraction loop with no string decode
-    until final assembly (:func:`assemble_from_packed_counts` /
-    :func:`assemble_from_blocks_counts`); the randomized contraction
-    decodes the counts and runs on strings.
+    way). Packed ids flow straight through expansion, pruning, and the
+    contraction loop with no string decode until final assembly
+    (:func:`assemble_from_packed_counts` /
+    :func:`assemble_from_blocks_counts`), for either ``algorithm`` (see
+    :func:`assemble_from_counts`).
     """
     if min_error_coverage is None:
         min_error_coverage = 4 * min_coverage
@@ -332,14 +329,9 @@ def assemble(
         reads, k, seq_col=seq_col, min_coverage=min_coverage,
         max_coverage=max_coverage,
     )
-    kw = dict(
-        min_contig=min_contig,
-        max_iterations=max_iterations,
-        min_error_coverage=min_error_coverage,
-        input_canonical=True,
+    kernel = codec.public(sys.modules[__name__], "assemble_from{}_counts")
+    return kernel(
+        counts, k, min_contig=min_contig, max_iterations=max_iterations,
+        min_error_coverage=min_error_coverage, input_canonical=True,
+        algorithm=algorithm,
     )
-    if packed and algorithm == "rank":
-        kernel = codec.public(sys.modules[__name__], "assemble_from{}_counts")
-        return kernel(counts, k, **kw)
-    strings = counts.select(codec.decode(codec.col, k).alias("kmer"), "count")
-    return assemble_from_counts(strings, k, algorithm=algorithm, **kw)

@@ -100,18 +100,16 @@ def meta_assemble(
     With ``workdir`` set, each per-k round materializes at
     ``workdir/round_k<k>`` (Parquet + ``_SUCCESS``) and completed rounds
     are skipped on re-run — the reference's staged-resume behavior (I4).
-    ``algorithm`` picks the contraction kernel per round (``"contract"``
-    reference-parity randomized; ``"rank"`` pointer-doubling — identical
-    contigs on cycle-free graphs, anchored-path semantics otherwise).
-    ``packed=True`` (rank kernel only) carries 2-bit packed ids through
-    every round — scalar int64 for k ≤ 31, long-block ``array<long>``
-    for the k=41..95 rounds — identical contigs, ~2-4× smaller count
-    and contraction shuffles.
+    ``algorithm`` picks the cycle rule of every round's pointer-doubling
+    contraction (``"contract"`` keeps one contig per circular ring,
+    ``"rank"`` anchored paths only — identical contigs on cycle-free
+    graphs; see :func:`~reflexiv_spark.pipelines.assemble.assemble_from_counts`).
+    ``packed=True`` carries 2-bit packed ids through every round — scalar
+    int64 for k ≤ 31, long-block ``array<long>`` for the k=41..95 rounds —
+    identical contigs, ~2-4× smaller count and contraction shuffles.
     """
     if workdir is not None and spark is None:
         spark = reads.sparkSession
-    if packed and algorithm != "rank":
-        raise ValueError('packed=True requires algorithm="rank"')
 
     # Share ONE materialization of the read set across the k-ladder
     # (guide §6/§2.4; VERDICT r13 next-round #2): every rung re-counts
@@ -135,9 +133,6 @@ def meta_assemble(
                 codec, reads, prev, k, min_coverage, max_coverage, seq_col
             )
             kernel = codec.public(sys.modules[__name__], "assemble_from{}_counts")
-            # packed rungs are rank-only (checked above); only the string
-            # kernel takes an algorithm
-            extra = {} if packed else {"algorithm": algorithm}
             # _combined_counts ends in a canonical-keyed groupBy, so the
             # odd-k palindrome-dedup elision applies (OPTIMIZATION_r13 #10)
             return kernel(
@@ -146,7 +141,7 @@ def meta_assemble(
                 min_contig=k + 1,
                 min_error_coverage=4 * min_coverage,
                 input_canonical=True,
-                **extra,
+                algorithm=algorithm,
             ).select("contig_id", "seq")
 
         if workdir is not None:

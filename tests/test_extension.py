@@ -1,10 +1,11 @@
-"""Extension-loop tests: contraction rounds + end-to-end assembly goldens
-(SURVEY.md §5 items 3; FIXTURES.md §8 "full single-k assembly")."""
+"""Extension-loop tests: the pointer-doubling contraction in both cycle
+modes + end-to-end assembly goldens (SURVEY.md §5 items 3; FIXTURES.md §8
+"full single-k assembly")."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from reflexiv_spark.operators.extension import extension_round, extend_to_convergence, to_paths
+from reflexiv_spark.operators.extension import rank_paths
 from reflexiv_spark.pipelines.assemble import assemble
 from tests.conftest import random_genome, revcomp, simulate_reads
 
@@ -15,8 +16,7 @@ def test_single_linear_path_contracts(spark):
     k = 5
     kmers = sorted({g[i : i + k] for i in range(len(g) - k + 1)})
     df = spark.createDataFrame([(km, 1) for km in kmers], ["kmer", "count"])
-    paths = to_paths(df)
-    out = extend_to_convergence(paths, k, max_iterations=50)
+    out = rank_paths(df, k, max_rounds=50, algorithm="contract")
     seqs = {r["seq"] for r in out.collect()}
     assert g in seqs
     assert len(seqs) == 1
@@ -27,11 +27,9 @@ def test_extension_round_preserves_kmer_content(spark):
     k = 15
     kmers = sorted({g[i : i + k] for i in range(len(g) - k + 1)})
     df = spark.createDataFrame([(km, 1) for km in kmers], ["kmer", "count"])
-    cur = to_paths(df)
-    for i in range(1, 4):
-        cur = extension_round(cur, k, i)
-    # Every row is still a genuine substring-walk of the genome, and the
-    # union of k-mer content is unchanged.
+    cur = rank_paths(df, k, algorithm="contract")
+    # Every contig is a genuine substring-walk of the genome, and the
+    # union of contig k-mers equals the input k-mers.
     rows = [r["seq"] for r in cur.collect()]
     regenerated = set()
     for s in rows:
@@ -66,10 +64,9 @@ def test_e2e_assembly_recovers_genome(spark, glen, k):
 
 
 def test_rank_paths_matches_contraction(spark):
-    """Pointer-doubling and randomized contraction are plan-equivalent on
-    fork-free path graphs (anchored set)."""
+    """The two cycle modes (rank drops cycles, contract keeps them) give
+    the same anchored set on fork-free path graphs."""
     from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
-    from reflexiv_spark.operators.extension import rank_paths
 
     g = random_genome(600, seed=9)
     k = 15
@@ -79,7 +76,7 @@ def test_rank_paths_matches_contraction(spark):
     df = spark.createDataFrame([(km, i % 5 + 1) for i, km in enumerate(kmers)], ["kmer", "count"])
 
     ranked = rank_paths(df, k)
-    contracted = extend_to_convergence(to_paths(df), k)
+    contracted = rank_paths(df, k, algorithm="contract")
     dsts = df.select(suffix_subkmer("kmer", k).alias("__dst")).distinct()
     anchored = contracted.join(
         dsts, prefix_subkmer("seq", k) == F.col("__dst"), "left_anti"
@@ -91,8 +88,6 @@ def test_rank_paths_matches_contraction(spark):
 
 
 def test_rank_paths_drops_cycles_keeps_paths(spark):
-    from reflexiv_spark.operators.extension import rank_paths
-
     k = 5
     # pure cycle: rotations of a cyclic sequence; plus one linear path
     cyc = "ACGGTCA"  # cycle over ACGGT CGGTC GGTCA GTCAA? build rotations manually
@@ -109,8 +104,6 @@ def test_rank_paths_packed_matches_string_path(spark):
     """The 2-bit packed-long pointer representation (k ≤ 31) and the string
     fallback produce identical anchored paths; mixed-length / non-ACGT
     inputs auto-fall back and stay correct."""
-    from reflexiv_spark.operators.extension import rank_paths
-
     g = random_genome(700, seed=31)
     k = 31
     frags = [g[0:260], g[280:500], g[520:700]]
@@ -289,8 +282,6 @@ def test_rank_paths_forked_input_fails_loudly(spark):
     in-degree-2 (k-1)-mer) fans the init join out, under-counts the
     bound, and previously could terminate the contraction early with
     wrong output. It must raise instead."""
-    from reflexiv_spark.operators.extension import rank_paths
-
     # "ACG" has two predecessors: suffix("AAC") == suffix("CAC") == "AC"
     # == prefix("ACG") — an in-degree-2 fork that prune_forks would have
     # collapsed. Extended with a long tail so the un-forked path part

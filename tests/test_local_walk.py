@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import random_genome
+from tests.conftest import random_genome, revcomp
 from tests.test_codec_seam import _seam_reads
 
 
@@ -50,57 +50,125 @@ def _pruned_counts(spark, seqs, k):
     return {r.kmer: r["count"] for r in pruned.collect()}
 
 
-def _walk_oracle(counts):
+def _walk_oracle(counts, keep=False):
     """Every anchored maximal path of a fork-free k-mer graph as (seq,
-    left_cover, right_cover); cycles have no head and are dropped."""
+    left_cover, right_cover); cycles have no head and are dropped. With
+    ``keep``, a cycle is kept when its smallest k-mer is also the smallest
+    canonical k-mer over its members — of a cycle and its reverse
+    complement, the one holding the smaller k-mer — and is walked from
+    that k-mer."""
     by_prefix = {km[:-1]: km for km in counts}
     has_pred = {by_prefix[km[1:]] for km in counts if km[1:] in by_prefix}
-    out = []
-    for head in counts:
-        if head in has_pred:
-            continue
-        seq, last = head, head
-        while last[1:] in by_prefix:
-            last = by_prefix[last[1:]]
-            seq += last[-1]
-        out.append((seq, counts[head], counts[last]))
-    return sorted(out)
+
+    def walk(head):
+        path = [head]
+        while path[-1][1:] in by_prefix and by_prefix[path[-1][1:]] != head:
+            path.append(by_prefix[path[-1][1:]])
+        return path
+
+    paths = [walk(head) for head in counts if head not in has_pred]
+    left = set(counts).difference(*paths)
+    while keep and left:
+        cycle = walk(min(left))  # starts at its own smallest k-mer
+        left.difference_update(cycle)
+        if cycle[0] <= min(revcomp(km) for km in cycle):
+            paths.append(cycle)
+    return sorted(
+        (p[0] + "".join(km[-1] for km in p[1:]), counts[p[0]], counts[p[-1]])
+        for p in paths
+    )
+
+
+def _reads(case, k):
+    if case == "rc_ring":
+        # a ring that is its own reverse complement: x + revcomp(x) read
+        # circularly holds every k-mer's reverse complement
+        x = random_genome(150, seed=k)
+        ring = x + revcomp(x)
+        wrap = ring + ring[:89]
+        return [wrap[i : i + 90] for i in range(0, len(ring), 10)]
+    return _seam_reads(case, k)
+
+
+# drop-mode ids read case-k-ids; keep-mode ids add "-contract"
+_ORACLE_CASES = [
+    ("genome", 21, "packed", "rank"),
+    ("genome", 31, "packed", "rank"),
+    ("genome", 41, "hashed", "rank"),
+    ("genome", 41, "collided", "rank"),
+    ("genome", 31, "string", "rank"),
+    ("genome", 32, "hashed", "rank"),  # a palindromic 32-mer
+    ("circular", 31, "packed", "rank"),
+    ("single", 31, "packed", "rank"),
+    ("single", 41, "hashed", "rank"),
+    ("empty", 31, "packed", "rank"),
+    ("circular", 31, "packed", "contract"),
+    ("circular", 41, "hashed", "contract"),
+    ("circular", 31, "string", "contract"),
+    ("rc_ring", 31, "packed", "contract"),
+    ("single", 31, "string", "contract"),  # the N self-loop beside a path
+]
 
 
 @pytest.mark.parametrize(
-    "case,k,ids",
-    [
-        ("genome", 21, "packed"),
-        ("genome", 31, "packed"),
-        ("genome", 41, "hashed"),
-        ("genome", 41, "collided"),
-        ("genome", 31, "string"),
-        ("genome", 32, "hashed"),  # a palindromic 32-mer
-        ("circular", 31, "packed"),
-        ("single", 31, "packed"),
-        ("single", 41, "hashed"),
-        ("empty", 31, "packed"),
-    ],
+    "case,k,ids,algorithm",
+    _ORACLE_CASES,
+    ids=["-".join(map(str, c[:3] if c[3] == "rank" else c)) for c in _ORACLE_CASES],
 )
-def test_rank_paths_matches_walk_oracle(spark, gate, monkeypatch, case, k, ids):
+def test_rank_paths_matches_walk_oracle(
+    spark, gate, monkeypatch, case, k, ids, algorithm
+):
     """``rank_paths`` over each id type gives the oracle's anchored paths
     on both walks: packed longs (k ≤ 31), hashed block ids (k > 31), the
     array block ids a forced xxhash64 collision falls back to, and the
-    string kernel an N k-mer forces (its self-loop is dropped)."""
+    string kernel an N k-mer forces (its self-loop is dropped). With
+    ``algorithm="contract"`` it also gives the oracle's kept cycles: one
+    contig per ring, a ring that is its own reverse complement once, and
+    the N self-loop."""
     from reflexiv_spark.operators.extension import rank_paths
 
-    counts = _pruned_counts(spark, _seam_reads(case, k), k)
+    counts = _pruned_counts(spark, _reads(case, k), k)
     if ids == "string":
         counts["N" * k] = 1
     df = spark.createDataFrame(sorted(counts.items()), "kmer string, count int")
     if ids == "collided":
         monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
-    got = sorted(tuple(r) for r in rank_paths(df, k).collect())
-    assert got == _walk_oracle(counts)
+    keep = algorithm == "contract"
+    got = sorted(tuple(r) for r in rank_paths(df, k, algorithm=algorithm).collect())
+    assert got == _walk_oracle(counts, keep=keep)
     if case in ("genome", "single"):
         assert got
-    if case == "circular":
+    rings = [s for s, _, _ in got if "N" not in s]
+    if case == "circular" and not keep:
         assert counts and not got
+    if case in ("circular", "rc_ring") and keep:
+        assert [len(s) for s in rings] == [300 + k - 1]
+    if ids == "string" and keep:
+        assert ("N" * k, 1, 1) in got
+
+
+@pytest.mark.parametrize("k,packed", [(31, False), (41, True)])
+def test_assemble_contract_gives_one_contig_per_ring(spark, gate, k, packed):
+    """A circular genome assembles to exactly one contig of length
+    L + k - 1 holding the ring's k-mers, not one per strand."""
+    from reflexiv_spark.pipelines.assemble import assemble
+
+    size = 600
+    g = random_genome(size, seed=17)
+    wrap = g + g[:99]
+    reads = [wrap[i : i + 100] for i in range(0, size, 5)]
+    df = spark.createDataFrame([(r,) for r in reads], "seq string")
+    contigs = [
+        r.seq
+        for r in assemble(
+            df, k=k, min_coverage=2, min_contig=k, packed=packed,
+            algorithm="contract",
+        ).collect()
+    ]
+    assert len(contigs) == 1 and len(contigs[0]) == size + k - 1
+    ring = {wrap[i : i + k] for i in range(size)}
+    got = {contigs[0][i : i + k] for i in range(size)}
+    assert got in (ring, {revcomp(km) for km in ring})
 
 
 def test_fix_junctions_chain_and_cycle(spark, gate):
