@@ -42,10 +42,12 @@ def contained_row_ids(
     equal and ``D.id < d.id``).
     """
     t, i = F.col(text_col), F.col(id_col)
-    # Lazy-materialize the projected base: 6 self-join branches hang off
-    # it, and without the barrier Catalyst inlines any expensive caller
+    # Checkpoint the projected base: 6 self-join branches hang off it, and
+    # without the barrier Catalyst inlines any expensive caller
     # expressions into each branch's per-shingle lambda (recomputing them
-    # per array element). Mirrors the reference's DISK_ONLY persist before
+    # per array element). It is lazy only in part: with AQE the call runs
+    # the spread's repartition stage, and the first consumer's job the
+    # last stage. Mirrors the reference's DISK_ONLY persist before
     # its dedup fan-out (``ReflexivDSDynamicKmerDedup.java:200``).
     base = spread(
         df.select(i.alias("__id"), t.alias("__body"), F.length(t).alias("__len"))

@@ -33,12 +33,18 @@ the smallest id of either survives, and it is cut just before that id and
 walked again as a path (:func:`_walk_cycles`).
 
 Scale notes (100 TB): above the one-task gate ``_LOOP_BCAST_BYTES`` every
-round is one shuffle join of (id, pointer, offset) rows, with a lazy
-``localCheckpoint`` and one scalar probe every three rounds — replacing
-the reference's per-step SparkSession restarts + gzip-CSV barriers
-(``Pipelines.java:832-839``). A measured state under the gate is walked
-whole inside one executor task, where per-job cost, not data, would set
-the wall.
+round is one shuffle join of (id, pointer, offset) rows
+(:func:`walk_paths`), with a ``localCheckpoint`` and one scalar probe
+every three rounds — replacing the reference's per-step SparkSession
+restarts + gzip-CSV barriers (``Pipelines.java:832-839``). A measured
+state under the gate is walked whole inside one executor task
+(:func:`walk_nodes`), where per-job cost, not data, would set the wall:
+the node rows go in, each with its head and tail key, and come out with
+their pointer and offset — no init join, no decode join, no proxy ids.
+The packed pipelines' rungs and junction fixing go one step further
+under the gate and run in ONE partition from their measured input on,
+so no Exchange is planned between it and the result
+(``pipelines.assemble._id_barrier``, ``operators.fixing``).
 
 The walk is ONE kernel over a k-mer codec
 (:mod:`reflexiv_spark.operators._codec`): ASCII strings, 2-bit packed
@@ -46,9 +52,10 @@ longs (k ≤ 31) or long-block arrays (k > 31). The codec supplies the id
 column, the prefix/suffix join keys, the reverse complement and the tail
 decode; ``rank_paths_packed`` / ``rank_paths_blocks`` are its entry
 points over already-packed ids, and ``rank_paths`` picks the packed codec
-itself when its input is fixed-length pure ACGT. The walk itself
-(:func:`walk_paths`) and the final concatenation (:func:`stitch_walk`)
-are shared with junction fixing, which walks contigs instead of k-mers.
+itself when its input is fixed-length pure ACGT. Both walks
+(:func:`walk_nodes`, :func:`walk_paths`) and the final concatenation
+(:func:`stitch_walk`) are shared with junction fixing, which walks
+contigs instead of k-mers.
 """
 
 from __future__ import annotations
@@ -59,7 +66,7 @@ import sys
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from reflexiv_spark.operators._codec import (
     BLOCKS,
@@ -68,28 +75,45 @@ from reflexiv_spark.operators._codec import (
     KmerCodec,
     codec_for,
 )
+from reflexiv_spark.plans.barriers import iteration_barrier
+from reflexiv_spark.plans.partitions import count_rows, in_one_partition
 
 # Rounds per barrier + convergence probe in the shuffle walk.
 _BARRIER_EVERY = 3
 
-# One-task gate for the pointer-doubling walk: when the MEASURED state
-# size (an exact row count × a conservative per-row estimate) fits under
-# this many bytes, :func:`walk_paths` doubles every pointer in numpy inside
-# ONE executor task — one job instead of a broadcast-join job per round
-# plus a probe job every ``_BARRIER_EVERY`` rounds — and the init join and
-# final-assembly decode join are broadcasts. The gate is driven by a
-# measured count, not an estimate (reset_stats deliberately discards the
-# compounding size stats, so Catalyst sees "unknown/huge" and would never
-# broadcast on its own), and it is scale-adaptive: a 100 TB run's billions
-# of rows exceed it and take the shuffle path. 64 MB is ~1M scalar-id rows,
-# far inside one task's memory ("a few hundred MB is usually fine", far
-# from the 8 GB hard cap). The size was inherited from the old broadcast
-# gate; measured for the one-task walk at the gate itself (interleaved,
-# 3 runs per arm, local[4] on a 4-vCPU host, tools/ab_walk_gate.py), the
-# one-task walk is still the faster one: rank_paths_packed over 1M k-mers
-# 3.6-5.1 s vs 14.3-17.4 s, rank_paths_blocks (k=41) 5.5-6.0 s vs
-# 19.1-22.0 s, fix_junctions over 60k 500-base contigs 3.1-4.6 s vs
-# 9.0-10.1 s. Larger states were not measured, so the gate stays here.
+# One-task gate: when the MEASURED state size (an exact row count × a
+# conservative per-row estimate) fits under this many bytes,
+# :func:`walk_nodes` walks the whole state in numpy inside ONE executor
+# task — one job instead of a shuffle-join job per round plus a probe job
+# every ``_BARRIER_EVERY`` rounds — and a packed rung (both strands of its
+# counted k-mers) or a junction fix runs in ONE partition with no
+# Exchange. The gate is driven by a measured count, not an estimate
+# (reset_stats deliberately discards the compounding size stats), and it
+# is scale-adaptive: a 100 TB run's billions of rows exceed it and take
+# the shuffle plans. 64 MB is ~1M scalar-id walk rows, far inside one
+# task's memory ("a few hundred MB is usually fine", far from the 8 GB
+# hard cap). Measured on a 4-vCPU host, local[4], 4 shuffle partitions,
+# warm, noop sink:
+# * the walk alone, one task vs shuffle (3 interleaved runs per arm,
+#   tools/ab_walk_gate.py before rungs ran in one partition):
+#   rank_paths_packed over 1M k-mers 3.6-5.1 s vs 14.3-17.4 s,
+#   rank_paths_blocks (k=41) 5.5-6.0 s vs 19.1-22.0 s;
+# * whole rungs, one partition vs the previous plans (multi-partition
+#   expand/prune/stitch around a one-task walk; separate processes per
+#   arm, 3 interleaved pairs, second warm run of each):
+#   assemble_from_packed_counts at 1/4 of the gate (131,072 canonical
+#   k-mers) 2.5-3.0 s vs 3.0-3.2 s, at the gate (524,288) 7.2-7.9 s vs
+#   6.9-9.0 s; assemble_from_blocks_counts (k=41, 80 B rows) at 1/4
+#   (104,857) 2.6-3.9 s vs 3.7-3.8 s, at the gate (419,430) 10.3-12.1 s
+#   vs 8.3-8.8 s — one task sorts the prune windows' array keys and
+#   decodes every block alone;
+# * one partition vs the shuffle plans of the same code
+#   (tools/ab_walk_gate.py, 2 alternating runs per arm): packed rung at
+#   the gate 12.3 s vs 28.7-36.0 s, blocks rung at the gate 14.0-16.3 s
+#   vs 24.9-26.7 s, fix_junctions over 60k 500-base contigs 2.9-3.0 s vs
+#   10.4-11.8 s.
+# The blocks rung loses at the top, but a lower gate would send the same
+# states to the shuffle plans, slower still, so the gate stays here.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024
 
 def rank_paths(
@@ -139,10 +163,10 @@ def rank_paths(
     """
     keep = _keeps_cycles(algorithm)
     km = _loop_input(kmer_counts, "kmer")
-    # the lazy checkpoint sits BEFORE the packed guard so the guard's scan
-    # materializes it and every later consumer (packed projection, or the
-    # string path's pre/suc/decode-join) reads the barrier, not the
-    # upstream lineage. Packed sub-k-mer keys need a non-empty overlap.
+    # the barrier sits BEFORE the packed guard so the guard's scan and
+    # every later consumer (packed projection, or the string path's
+    # walk) read it, not the upstream lineage. Packed sub-k-mer keys need
+    # a non-empty overlap.
     packed = packed and k >= 2
     if packed:
         # The packed id is injective only for fixed-length pure-ACGT rows;
@@ -197,66 +221,56 @@ def _keeps_cycles(algorithm: str) -> bool:
 
 
 def _loop_input(counts: DataFrame, col: str) -> DataFrame:
-    # lazy barrier: three consumers (pre, suc, final join)
-    return counts.select(
-        col, F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)
+    """The walk's input DataFrame[<col>, count]: checkpointed — its
+    consumers are :func:`_rank`'s count, then the walk's node rows, or
+    pre, suc and the final join — unless it is in one partition, which a
+    checkpoint would drop (see :func:`_rank`)."""
+    km = counts.select(col, F.col("count").cast("int").alias("count"))
+    if in_one_partition(km):
+        return km
+    return km.localCheckpoint(eager=False)
 
 
 def _rank(
     codec: KmerCodec, km: DataFrame, k: int, max_rounds: int, keep: bool
 ) -> DataFrame:
     """The pointer-doubling kernel over ``codec`` ids: DataFrame[<codec.col>,
-    count] (checkpointed) → DataFrame[seq, left_cover, right_cover];
-    ``keep`` adds the kept cycles (:func:`_walk_cycles`)."""
+    count] from :func:`_loop_input` → DataFrame[seq, left_cover,
+    right_cover]; ``keep`` adds the kept cycles (:func:`_walk_cycles`).
+
+    A single-partition input is walked in its one task uncounted: its
+    caller measured it under the one-task gate and moved it there (the
+    packed pipelines' rungs, see ``pipelines.assemble._id_barrier``) or
+    chose one task for it."""
     o = k - 1
     c = codec.col
-    if codec.array_ids:
-        # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
-        # instead of payloads"): every doubling round would move TWO
-        # array<long> pointers + an offset per row (~48+16·nb B unsafe at nb
-        # blocks), but the loop only ever tests pointer EQUALITY — the block
-        # digits are not consulted until final assembly. Riding the rounds
-        # on xxhash64(kid) collapses the per-round exchange row to three
-        # longs (~4× fewer bytes at k=41, and scalar join hashing instead of
-        # array hashing), with the blocks re-attached by ONE hashed join at
-        # final assembly; under the one-task gate there are no per-round
-        # exchanges and this pass is not measured against array ids there.
-        # Correctness is gated exactly, not probabilistically: ONE
-        # materializing pass gives both the exact row count (rounds bound +
-        # one-task gate) and the injectivity witness (distinct hids ==
-        # rows); any collision — 2⁻⁶⁴ birthday odds, but checked, not
-        # assumed — falls back to the array-id loop, so the result is
-        # provably identical either way.
-        kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
-        n_km, n_hid = kmh.agg(
-            F.count(F.lit(1)).alias("n"), F.count_distinct("hid").alias("nh")
-        ).first()
-        hashed = n_hid == n_km
+    # any other input: ONE materializing count up front runs the upstream
+    # pipeline into the checkpoint and gives the walk its exact row count
+    # (state rows == km rows under the fork-free precondition) and the
+    # one-task gate its measured size
+    n_km = None if in_one_partition(km) else count_rows(km)
+    if n_km is None or fits_one_task(n_km * codec.row_bytes(k)):
+        # the whole walk in one task over the codec ids themselves: the
+        # node rows carry id and count through it, so there is no init
+        # join, no decode join and no proxy-id pass (coalesce(1) is
+        # narrow)
+        nodes = km.coalesce(1).select(
+            F.col(c).alias("kid"),
+            "count",
+            codec.prefix_key(c, k, o).alias("__pk"),
+            codec.suffix_key(c, k, o).alias("__sk"),
+        )
+        done, rest = split_walk(walk_nodes(nodes, max_rounds))
+        ids, val, row_bytes = None, "kid", codec.row_bytes(k)
     else:
-        # ONE materializing count up front: runs the whole upstream
-        # pipeline into the checkpoint and gives the loop its exact row
-        # count (state rows == km rows under the fork-free precondition),
-        # so the doubling loop skips its own count job and the one-task
-        # gate is driven by a measured size
-        n_km, hashed = km.count(), False
-    src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
-    row_bytes = 64 if hashed else codec.row_bytes(k)
-    small = fits_one_task(n_km * row_bytes)
-    pre = src.select(
-        F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
-    )
-    suc = src.select(
-        F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
-    )
-    done, rest = walk_paths(pre, suc, n_km, max_rounds, small=small, cycles=keep)
-    # decode side: loop id as "kid" next to the codec id it stands for
-    km_j = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
-    if small:
-        km_j = F.broadcast(km_j)
+        done, rest, ids, val, row_bytes = _rank_shuffle(
+            codec, km, k, n_km, max_rounds, keep
+        )
     if keep:
-        done = _walk_cycles(codec, done, rest, km_j, val, k, max_rounds, row_bytes)
-    parts = done.join(km_j, "kid").groupBy("anc").agg(
+        done = _walk_cycles(codec, done, rest, ids, val, k, max_rounds, row_bytes)
+    if ids is not None:
+        done = done.join(ids, "kid")
+    parts = done.groupBy("anc").agg(
         F.array_sort(
             F.collect_list(F.struct("off", F.col(val).alias(c), "count"))
         ).alias("xs")
@@ -273,26 +287,69 @@ def _rank(
     )
 
 
+def _rank_shuffle(
+    codec: KmerCodec, km: DataFrame, k: int, n_km: int, max_rounds: int,
+    keep: bool,
+):
+    """Above the one-task gate: the shuffle walk over ``km`` →
+    (done, rest, ids, val, row_bytes), ``ids`` the decode side mapping
+    the walk id ``kid`` to the codec id column ``val``."""
+    o = k - 1
+    c = codec.col
+    hashed = False
+    if codec.array_ids:
+        # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
+        # instead of payloads"): every doubling round would move TWO
+        # array<long> pointers + an offset per row (~48+16·nb B unsafe at nb
+        # blocks), but the loop only ever tests pointer EQUALITY — the block
+        # digits are not consulted until final assembly. Riding the rounds
+        # on xxhash64(kid) collapses the per-round exchange row to three
+        # longs (~4× fewer bytes at k=41, and scalar join hashing instead of
+        # array hashing), with the blocks re-attached by ONE hashed join at
+        # final assembly. Only this shuffle walk hashes: under the gate
+        # the one-task walk keys the block arrays directly.
+        # Correctness is gated exactly, not probabilistically: one
+        # aggregate gives the injectivity witness (distinct hids == rows);
+        # any collision — 2⁻⁶⁴ birthday odds, but checked, not assumed —
+        # falls back to the array-id loop, so the result is provably
+        # identical either way.
+        kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
+        hashed = kmh.agg(F.count_distinct("hid")).first()[0] == n_km
+    src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
+    pre = src.select(
+        F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
+    )
+    suc = src.select(
+        F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
+    )
+    done, rest = walk_paths(pre, suc, n_km, max_rounds, cycles=keep)
+    # decode side: loop id as "kid" next to the codec id it stands for
+    ids = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
+    return done, rest, ids, val, 64 if hashed else codec.row_bytes(k)
+
+
 def _walk_cycles(
-    codec: KmerCodec, done: DataFrame, rest: DataFrame, ids: DataFrame,
+    codec: KmerCodec, done: DataFrame, rest: DataFrame, ids: DataFrame | None,
     val: str, k: int, max_rounds: int, row_bytes: int,
 ) -> DataFrame:
     """``done`` plus the kept cycles of ``rest``, each cut into a path and
-    walked again → DataFrame[kid, anc, off].
+    walked again.
 
     ``rest`` holds the walk's unresolved rows with ``anc`` a per-cycle
-    label; ``ids`` maps the walk id ``kid`` to the codec id ``val``. A
-    ring sits in the graph as two cycles, one per strand, whose members
-    are each other's reverse complements. Both have the same smallest
-    canonical id min(id, revcomp(id)), and only the strand holding it has
-    it as its own smallest id, so exactly one passes; a cycle that is its
-    own reverse complement passes once. The kept cycle's smallest member
-    loses its predecessor and heads the path."""
+    label; ``ids`` maps the walk id ``kid`` to the codec id ``val``, or is
+    None when the rows carry it (the one-task walk: ``val`` is ``kid`` and
+    ``count`` rides along). A ring sits in the graph as two cycles, one
+    per strand, whose members are each other's reverse complements. Both
+    have the same smallest canonical id min(id, revcomp(id)), and only
+    the strand holding it has it as its own smallest id, so exactly one
+    passes; a cycle that is its own reverse complement passes once. The
+    kept cycle's smallest member loses its predecessor and heads the
+    path."""
     o = k - 1
     cycle = Window.partitionBy("anc")
     canon = F.least(F.col(val), codec.revcomp(val, k))
     kept = (
-        rest.join(ids, "kid")
+        (rest if ids is None else rest.join(ids, "kid"))
         .withColumns({
             "__cut": F.min(val).over(cycle),
             "__canon": F.min(canon).over(cycle),
@@ -300,27 +357,30 @@ def _walk_cycles(
         .where(F.col("__cut") == F.col("__canon"))
         .localCheckpoint(eager=False)  # the count, pre and suc
     )
-    n = kept.count()
+    n = count_rows(kept)
     if n == 0:
         return done
-    pre = kept.select(
-        "kid",
-        F.when(F.col(val) != F.col("__cut"), codec.prefix_key(val, k, o))
-        .alias("__pk"),
-    )
-    suc = kept.select(
-        F.col("kid").alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
-    )
-    cycles, _ = walk_paths(
-        pre, suc, n, max_rounds, small=fits_one_task(n * row_bytes)
-    )
+    head_key = F.when(F.col(val) != F.col("__cut"), codec.prefix_key(val, k, o))
+    if fits_one_task(n * row_bytes):
+        carried = [] if ids is not None else ["count"]
+        nodes = kept.coalesce(1).select(
+            "kid", *carried, head_key.alias("__pk"),
+            codec.suffix_key(val, k, o).alias("__sk"),
+        )
+        cycles, _ = split_walk(walk_nodes(nodes, max_rounds))
+    else:
+        pre = kept.select("kid", head_key.alias("__pk"))
+        suc = kept.select(
+            F.col("kid").alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
+        )
+        cycles, _ = walk_paths(pre, suc, n, max_rounds)
     return done.unionByName(cycles)
 
 
 def fits_one_task(state_bytes: int) -> bool:
     """The one-task gate: a walk state of ``state_bytes`` (measured rows ×
-    a per-row estimate) is small enough for :func:`walk_paths`' local
-    walk and for broadcast joins around it."""
+    a per-row estimate) is small enough for :func:`walk_nodes`, and a
+    rung or a junction fix that small runs in one partition."""
     return state_bytes <= _LOOP_BCAST_BYTES
 
 
@@ -329,39 +389,34 @@ def walk_paths(
     suc: DataFrame,
     n_rows: int,
     max_rounds: int,
-    small: bool = False,
     cycles: bool = False,
 ):
-    """Pointer-doubling walk of a fork-free path graph → (done, rest).
+    """Pointer-doubling walk of a fork-free path graph by one shuffle join
+    per round (:func:`_double_pointers`) → (done, rest); the walk for
+    states above the one-task gate (below it, :func:`walk_nodes`).
 
     ``pre``: DataFrame[kid, __pk], every node once, keyed by the join key
     of its head end; ``suc``: DataFrame[__pred, __pk], a node keyed by the
     join key of its tail end. ``n_rows`` is the exact node count (the
-    walk's round bound and fork-free check). ``small`` (see
-    :func:`fits_one_task`) broadcasts the successor map and walks the
-    whole state in ONE task (:func:`_walk_local`); otherwise every round
-    is a shuffle join (:func:`_double_pointers`).
+    walk's round bound and fork-free check: the walk raises on a state
+    row count other than ``n_rows``).
 
     Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
     head-reachable pointer and every cycle label has converged by then,
-    so surviving CYCLES cannot pin the walk at ``max_rounds``. Both walks raise on a state row
-    count other than ``n_rows`` (the fork-free guard).
+    so surviving CYCLES cannot pin the walk at ``max_rounds``.
 
     Both are DataFrame[kid, anc, off] after the walk: each node's last
     pointer and its offset from it. ``done`` holds the nodes whose walk
     reached an in-degree-0 head (``anc`` is that head); ``rest`` holds the
     others — cycle members (and self-loops) never reach one. With
     ``cycles``, a ``rest`` row's ``anc`` is instead its cycle's label: one
-    member, the same for the whole cycle. Each row doubles a running
-    minimum beside its pointer; the one-task walk always does (over row
-    positions, at no extra pass), the shuffle walk only with ``cycles``
-    (over the ids) and then runs until no label changes.
+    member, the same for the whole cycle, from a running minimum over the
+    ids doubled beside the pointer (the walk then runs until no label
+    changes).
     """
-    from reflexiv_spark.plans.barriers import iteration_barrier
-
     # each node points at its unique predecessor, or at itself (off 0)
     # when it heads a path
-    state = pre.join(F.broadcast(suc) if small else suc, "__pk", "left").select(
+    state = pre.join(suc, "__pk", "left").select(
         "kid",
         F.coalesce("__pred", F.col("kid")).alias("anc"),
         F.when(F.col("__pred").isNull(), F.lit(0))
@@ -369,36 +424,61 @@ def walk_paths(
         .cast("long")
         .alias("off"),
     )
-    rounds = min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
-    if small:
-        # coalesce(1) is narrow: no exchange, the init join runs in the
-        # walk's one task; three consumers read the lazy barrier
-        walked = iteration_barrier(
-            state.coalesce(1).mapInArrow(
-                functools.partial(_walk_local, n_rows=n_rows, rounds=rounds),
-                StructType(
-                    state.schema.fields
-                    + [StructField("__done", BooleanType(), False)]
-                ),
-            ),
-            eager=False,
-        )
-        return (
-            walked.where("__done").drop("__done"),
-            walked.where(~F.col("__done")).drop("__done"),
-        )
     if cycles:
         state = state.withColumn("lbl", F.col("kid"))
-    # the lazy barrier is materialized by the first loop probe instead of
-    # a job of its own
+    # lazy barrier: with AQE the call runs the init join's shuffle stages,
+    # and the first loop probe runs the last stage into the blocks
     state = iteration_barrier(state, eager=False)
     heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
-    state = _double_pointers(state, rounds, n_rows)
+    state = _double_pointers(state, _rounds(n_rows, max_rounds), n_rows)
     rest = state.join(heads, "anc", "left_anti")
     if cycles:
         state = state.drop("lbl")
         rest = rest.select("kid", F.col("lbl").alias("anc"), "off")
     return state.join(heads, "anc", "left_semi"), rest
+
+
+def _rounds(n_rows: int, max_rounds: int) -> int:
+    return min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
+
+
+def walk_nodes(nodes: DataFrame, max_rounds: int, prepare=None) -> DataFrame:
+    """The one-task walk: node rows in ONE partition → the same rows with
+    ``anc``, ``off`` and ``__done`` (see :func:`split_walk`).
+
+    ``nodes``: DataFrame[kid, <carried columns>, __pk, __sk], every node
+    once with the key of its head end (``__pk``; null: no predecessor)
+    and of its tail end (``__sk``). The kernel (:func:`_walk_task`)
+    links each node to the one node whose tail key is its head key and
+    doubles the pointers in numpy, so the walk is a narrow
+    ``mapInArrow`` of its input: a single-partition input plans no
+    Exchange before or after it. The carried columns ride through, and
+    ``prepare`` (Arrow table → table, run first in the task) may drop
+    rows or null head keys. Same round bound and same ``done`` /
+    ``rest`` split as :func:`walk_paths`; a ``rest`` row's ``anc`` is
+    always its cycle's label.
+    """
+    fields = [f for f in nodes.schema.fields if f.name not in ("__pk", "__sk")]
+    return nodes.mapInArrow(
+        functools.partial(_walk_task, max_rounds=max_rounds, prepare=prepare),
+        StructType(
+            fields
+            + [
+                StructField("anc", nodes.schema["kid"].dataType, False),
+                StructField("off", LongType(), False),
+                StructField("__done", BooleanType(), False),
+            ]
+        ),
+    )
+
+
+def split_walk(walked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """:func:`walk_nodes` output → (done, rest), as :func:`walk_paths`
+    returns them, carried columns included."""
+    return (
+        walked.where("__done").drop("__done"),
+        walked.where(~F.col("__done")).drop("__done"),
+    )
 
 
 def stitch_walk(xs: Column, head, tail) -> Column:
@@ -422,9 +502,10 @@ def _fork_free_error(detail: str) -> ValueError:
 
 
 def _id_keys(ids):
-    """Hashable numpy keys of an Arrow id column: the values themselves for
-    long and string ids, one fixed-width ``np.void`` per row for
-    ``array<long>`` block ids (every row holds the same block count)."""
+    """Hashable numpy keys of a null-free Arrow id column: the values
+    themselves for long and string ids, one fixed-width ``np.void`` per
+    row for ``array<long>`` block ids (every row holds the same block
+    count)."""
     import numpy as np
     import pyarrow as pa
 
@@ -434,40 +515,63 @@ def _id_keys(ids):
     return blocks.view(np.dtype((np.void, 8 * blocks.shape[1]))).ravel()
 
 
-def _walk_local(batches, n_rows: int, rounds: int):
-    """mapInArrow body: the whole (kid, anc, off) state of one task →
-    (kid, anc, off, __done), doubling row positions in numpy.
+def _valid_keys(keys):
+    """(row positions, :func:`_id_keys`) of the non-null entries of an
+    Arrow key column."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-    Same walk as :func:`_double_pointers`: at most ``rounds`` rounds,
-    stopping once no pointer moves. ``__done``: the final pointer is an
-    ``off == 0`` head. A cycle's pointers stop moving only once 2^r
-    steps is a whole number of turns round it (otherwise the walk runs
-    all ``rounds``, see :func:`walk_paths`), so the running minimum row
-    position doubled beside them covers the cycle by then: the other
-    rows take that row as their ``anc`` label. Raises on a row count
-    other than ``n_rows`` or a duplicate ``kid`` (the fork-free guard).
+    pos = np.flatnonzero(keys.is_valid().to_numpy(zero_copy_only=False))
+    return pos, _id_keys(pc.take(keys, pos))
+
+
+def _walk_task(batches, max_rounds: int, prepare=None):
+    """mapInArrow body of :func:`walk_nodes`: the node rows of one task →
+    the same rows without ``__pk`` / ``__sk``, plus ``anc``, ``off`` and
+    ``__done``, doubling row positions in numpy.
+
+    Each node points at the node whose ``__sk`` equals its ``__pk`` (off
+    1; a self-loop points at itself), or at itself (off 0) when none
+    does. Same walk as :func:`_double_pointers`: at most the
+    :func:`walk_paths` round bound, stopping once no pointer moves.
+    ``__done``: the final pointer is an ``off == 0`` head. A cycle's
+    pointers stop moving only once 2^r steps is a whole number of turns
+    round it (otherwise the walk runs every round), so the running
+    minimum row position doubled beside them covers the cycle by then:
+    the other rows take that row as their ``anc`` label. Raises on a
+    repeated ``kid`` or a head key that two nodes end in (an in-degree-2
+    key: the fork-free guard).
     """
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
-    batches = list(batches)
-    n = sum(b.num_rows for b in batches)
-    if n != n_rows:
-        raise _fork_free_error(
-            f"pointer state has {n} rows for {n_rows} input k-mers"
-        )
-    if n == 0:
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
         return
-    t = pa.Table.from_batches(batches)
+    t = pa.Table.from_batches(batches).combine_chunks()
+    if prepare is not None:
+        t = prepare(t)
+    n = t.num_rows
     kid = t.column("kid").combine_chunks()
-    index = pd.Index(_id_keys(kid))
-    if not index.is_unique:
-        raise _fork_free_error(f"pointer state repeats a node id in {n} rows")
-    ptr = index.get_indexer(_id_keys(t.column("anc").combine_chunks()))
-    off = t.column("off").to_numpy()
+    if not pd.Index(_id_keys(kid)).is_unique:
+        raise _fork_free_error(f"{n} node rows repeat a node id")
+    heads, head_keys = _valid_keys(t.column("__pk").combine_chunks())
+    tails, tail_keys = _valid_keys(t.column("__sk").combine_chunks())
+    tail_keys = pd.Index(tail_keys)
+    if not tail_keys.is_unique:
+        fan = tail_keys.duplicated(keep=False)
+        if pd.Index(head_keys).isin(tail_keys[fan]).any():
+            raise _fork_free_error("two nodes end in one node's head key")
+        tails, tail_keys = tails[~fan], tail_keys[~fan]
+    at = tail_keys.get_indexer(head_keys)
+    linked = at >= 0
+    ptr = np.arange(n)
+    ptr[heads[linked]] = tails[at[linked]]
+    off = np.zeros(n, dtype=np.int64)
+    off[heads[linked]] = 1
     lab = np.arange(n)
-    for _ in range(rounds):
+    for _ in range(_rounds(n, max_rounds)):
         nxt = ptr[ptr]
         if np.array_equal(nxt, ptr):
             break
@@ -475,10 +579,12 @@ def _walk_local(batches, n_rows: int, rounds: int):
         lab = np.minimum(lab, lab[ptr])
         ptr = nxt
     done = off[ptr] == 0
-    anc = kid.take(pa.array(np.where(done, ptr, lab)))
+    carried = [name for name in t.column_names if name not in ("__pk", "__sk")]
     yield pa.RecordBatch.from_arrays(
-        [kid, anc, pa.array(off), pa.array(done)],
-        names=["kid", "anc", "off", "__done"],
+        [t.column(name).combine_chunks() for name in carried]
+        + [kid.take(pa.array(np.where(done, ptr, lab))), pa.array(off),
+           pa.array(done)],
+        names=carried + ["anc", "off", "__done"],
     )
 
 
@@ -491,8 +597,9 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
     the bound could cut long paths short, so the first probe counts state
     rows and raises on a mismatch (the count is loop-invariant).
 
-    Exit: every ``_BARRIER_EVERY`` rounds a lazy barrier is materialized
-    by a full-scan mover count. An unconverged path pointer always moves
+    Exit: every ``_BARRIER_EVERY`` rounds a lazy barrier (with AQE its
+    call runs the rounds' shuffle stages) is completed by a full-scan
+    mover count. An unconverged path pointer always moves
     and then never moves again, while cycle movers are non-increasing, so
     two consecutive probes with equal mover counts prove every path has
     converged. Extra rounds are identity jumps for path rows.
@@ -503,8 +610,6 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
     all the way round), so the probe also counts drops and the walk
     stops on equal mover counts only once none is left.
     """
-    from reflexiv_spark.plans.barriers import iteration_barrier
-
     cycles = "lbl" in state.columns
     lbl2, relabel = [], []
     if cycles:
@@ -536,8 +641,8 @@ def _double_pointers(state: DataFrame, rounds: int, n_rows: int) -> DataFrame:
         if r % _BARRIER_EVERY == 0 or r == rounds:
             nxt = iteration_barrier(nxt, eager=False)
             # full-scan aggregate (not limit(1)): computes EVERY
-            # partition, so the lazy checkpoint materializes completely
-            # in this one job and downstream rounds reuse the blocks
+            # partition, so the checkpoint's last stage completes in this
+            # one job and downstream rounds reuse the blocks
             probe = {"m": F.count_if(F.col("__moved"))}
             if claimed_rows is not None:
                 probe["n"] = F.count(F.lit(1))

@@ -9,10 +9,15 @@ extension loop so contigs that share a *unique* junction 31-mer fuse
 (``ReflexivDSDynamicKmerFixing.java:191-257``).
 
 Spark-first: junction support is a hash aggregate; uniqueness is a fork
-filter (support == 1 at both ends); the merge is the pointer-doubling
-walk of :func:`reflexiv_spark.operators.extension.walk_paths` at contig
-granularity — log2(longest chain) rounds instead of a fixed 18 sorts, all
-in one task while the contig set fits the walk's one-task gate.
+filter (support == 1 at both ends); the merge is a pointer-doubling walk
+at contig granularity — log2(longest chain) rounds instead of a fixed 18
+sorts. While the contig set fits the one-task gate, the whole fix runs in
+ONE partition with no Exchange: the walk kernel
+(:func:`reflexiv_spark.operators.extension.walk_nodes`) counts the
+support, drops repeated contigs and walks in one task. Above the gate it
+is the shuffle walk of
+:func:`reflexiv_spark.operators.extension.walk_paths` over aggregates and
+a broadcast junction join.
 """
 
 from __future__ import annotations
@@ -23,8 +28,10 @@ from pyspark.sql import functions as F
 from reflexiv_spark.operators.extension import (
     fits_one_task,
     stitch_walk,
+    walk_nodes,
     walk_paths,
 )
+from reflexiv_spark.plans.partitions import count_rows
 
 # Reference fixes junctions with 31-mers regardless of the assembly k.
 DEFAULT_FIX_K = 31
@@ -82,26 +89,32 @@ def fix_junctions(
 
     Returns DataFrame[seq] of fixed (possibly fused) contigs.
     """
+    s = F.col(seq_col)
+    long_enough = contigs.where(F.length(s) >= fix_k)
+    # ONE measuring aggregate for the one-task gate: 64 B per state row
+    # plus each contig id twice (kid and its anc pointer), counted before
+    # repeats are dropped (an upper bound of the walk's state)
+    n, id_bytes = long_enough.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.length(s)), F.lit(0))
+    ).first()
+    if fits_one_task(64 * n + 2 * id_bytes):
+        return _fix_one_partition(contigs, fix_k, seq_col, max_rounds)
+
     support = junction_support(contigs, fix_k, seq_col)
     unique_j = support.where(
         (F.col("n_starts") == 1) & (F.col("n_ends") == 1)
     ).select(F.col("kmer").alias("__pk"))
 
     cs = (
-        contigs.where(F.length(seq_col) >= fix_k)
-        .select(F.col(seq_col).alias("kid"))
+        long_enough.select(s.alias("kid"))
         .dropDuplicates(["kid"])
-        .localCheckpoint(eager=False)  # pre, suc, and the pass-through
+        .localCheckpoint(eager=False)  # the count, pre, suc and rest
     )
-    # ONE materializing aggregate: runs the dedup into the checkpoint and
-    # hands the walk its node count (state rows == cs rows by the suc
-    # filter below; the walk re-verifies it) and the id bytes for the
-    # one-task gate: 64 B per state row plus each contig id twice (kid
-    # and its anc pointer)
-    n_cs, id_bytes = cs.agg(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.length("kid")), F.lit(0))
-    ).first()
-    small = fits_one_task(64 * n_cs + 2 * id_bytes)
+    # with AQE the lazy checkpoint's call already ran the dedup's shuffle
+    # stage; the count runs the last stage into the blocks and gives the
+    # walk its exact node count (state rows == cs rows by the suc filter
+    # below; the walk re-verifies it)
+    n_cs = count_rows(cs)
     # pre: EVERY contig, keyed by its head fix_k-mer (so every contig
     # appears in the pointer state exactly once); suc: only tails that
     # are unique junctions — a unique key is the tail of exactly one
@@ -114,22 +127,72 @@ def fix_junctions(
         )
         .join(F.broadcast(unique_j), "__pk")
     )
-    done, rest = walk_paths(pre, suc, n_cs, max_rounds, small=small)
-    parts = done.groupBy("anc").agg(
+    done, rest = walk_paths(pre, suc, n_cs, max_rounds)
+    # cycle members never reach a head — they pass through unfused
+    fused = _stitch(done.groupBy("anc"), fix_k).unionByName(
+        rest.select(F.col("kid").alias("seq"))
+    )
+    short = contigs.where(F.length(s) < fix_k).select(s.alias("seq"))
+    return fused.unionByName(short).dropDuplicates()
+
+
+def _stitch(groups, fix_k: int) -> DataFrame:
+    """One fused contig per walk head: its members in offset order, each
+    after the first without its leading junction fix_k-mer."""
+    parts = groups.agg(
         F.array_sort(F.collect_list(F.struct("off", "kid"))).alias("xs")
     )
-    fused = parts.select(
+    return parts.select(
         stitch_walk(
             F.col("xs"),
             lambda x: x["kid"],
             lambda x: F.substring(x["kid"], fix_k + 1, F.length(x["kid"])),
         ).alias("seq")
     )
-    # cycle members never reach a head — they pass through unfused
-    cycles = rest.select(F.col("kid").alias("seq"))
-    short = contigs.where(F.length(seq_col) < fix_k).select(
-        F.col(seq_col).alias("seq")
+
+
+def _fix_one_partition(
+    contigs: DataFrame, fix_k: int, seq_col: str, max_rounds: int
+) -> DataFrame:
+    """:func:`fix_junctions` in one partition: junction support, the
+    repeat drop, the walk and the stitch run in one task with no
+    Exchange (the walk kernel counts the support, :func:`_junction_ends`)."""
+    one = contigs.select(F.col(seq_col).alias("seq")).coalesce(1)
+    s = F.col("seq")
+    nodes = one.where(F.length(s) >= fix_k).select(
+        s.alias("kid"),
+        F.substring(s, 1, fix_k).alias("__pk"),
+        F.substring(s, -fix_k, fix_k).alias("__sk"),
     )
-    return (
-        fused.unionByName(cycles).unionByName(short).dropDuplicates()
+    walked = walk_nodes(nodes, max_rounds, prepare=_junction_ends)
+    # one consumer of the walk: a cycle member (never done) is a group of
+    # its own, whose stitch is the contig itself
+    fused = _stitch(
+        walked.groupBy(F.when(F.col("__done"), F.col("anc")).otherwise(F.col("kid"))),
+        fix_k,
     )
+    short = one.where(F.length(s) < fix_k)
+    return fused.unionByName(short).dropDuplicates()
+
+
+def _junction_ends(t):
+    """Arrow node table (kid, __pk, __sk) → the same with a head key kept
+    only where it is a unique junction — the head of exactly one row and
+    the tail of exactly one row, counted over every row BEFORE repeated
+    contigs are dropped (a repeated contig is no unique junction) — and
+    with each contig once."""
+    import pandas as pd
+    import pyarrow as pa
+
+    heads = pd.Series(t.column("__pk").to_numpy())
+    tails = pd.Series(t.column("__sk").to_numpy())
+    unique = (heads.map(heads.value_counts()) == 1) & (
+        heads.map(tails.value_counts()) == 1
+    )
+    t = t.set_column(
+        t.schema.get_field_index("__pk"),
+        "__pk",
+        pa.array(heads.where(unique, None), type=t.schema.field("__pk").type),
+    )
+    first = ~pd.Series(t.column("kid").to_numpy()).duplicated().to_numpy()
+    return t.filter(pa.array(first))

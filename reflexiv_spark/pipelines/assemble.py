@@ -45,6 +45,7 @@ from reflexiv_spark.operators.counter import (
     DEFAULT_MIN_COVERAGE,
 )
 from reflexiv_spark.operators.fork import filter_forks
+from reflexiv_spark.plans.partitions import count_rows
 
 # Reference default minimum contig length: DefaultParam.java:108.
 DEFAULT_MIN_CONTIG = 500
@@ -247,11 +248,29 @@ def _finalize_contigs(contracted: DataFrame, min_contig: int) -> DataFrame:
     )
 
 
-def _id_barrier(counts: DataFrame) -> DataFrame:
-    # lazy barrier: the RC expansion consumes the counts twice (forward +
-    # reflected branch); without it the Arrow-batched encode would rely on
-    # exchange reuse to run once
-    return counts.select("kid", "count").localCheckpoint(eager=False)
+def _id_barrier(codec: KmerCodec, counts: DataFrame, k: int) -> DataFrame:
+    """The packed pipelines' counted ids, checkpointed and measured.
+
+    Under the one-task gate (both strands of every k-mer: twice the
+    counted rows) the ids move to one partition: ``coalesce(1)`` is
+    narrow, a union of single-partition sides stays single-partition,
+    and a single partition satisfies every clustered distribution, so
+    expansion, both prune windows, the walk and the final aggregates plan
+    with no Exchange — the rung is one job. Joins are kept out of that
+    path: a join of two single-partition sides plans no shuffle only
+    while both size estimates are at most
+    ``spark.sql.maxSinglePartitionBytes``. Above the gate the plans are
+    the multi-partition ones.
+    """
+    # the RC expansion consumes the counts twice (forward + reflected
+    # branch); without the barrier the Arrow-batched encode would rely on
+    # exchange reuse to run once. The count materializes it: the
+    # localCheckpoint call itself already ran every shuffle stage below
+    # it, the count runs the last stage into the blocks.
+    ids = counts.select("kid", "count").localCheckpoint(eager=False)
+    if extension.fits_one_task(2 * count_rows(ids) * codec.row_bytes(k)):
+        return ids.coalesce(1)
+    return ids
 
 
 def assemble_from_packed_counts(
@@ -272,7 +291,7 @@ def assemble_from_packed_counts(
     identical output to the string pipeline (tests/test_extension.py
     proves equality)."""
     return _assemble_ranked(
-        PACKED, _id_barrier(packed_counts), k, min_contig, max_iterations,
+        PACKED, _id_barrier(PACKED, packed_counts, k), k, min_contig, max_iterations,
         min_error_coverage, input_canonical, algorithm,
     )
 
@@ -292,7 +311,7 @@ def assemble_from_blocks_counts(
     long-block ids — the k>31 sibling of
     :func:`assemble_from_packed_counts`, with the same ``algorithm``."""
     return _assemble_ranked(
-        BLOCKS, _id_barrier(block_counts), k, min_contig, max_iterations,
+        BLOCKS, _id_barrier(BLOCKS, block_counts, k), k, min_contig, max_iterations,
         min_error_coverage, input_canonical, algorithm,
     )
 

@@ -115,9 +115,10 @@ def meta_assemble(
     # (guide §6/§2.4; VERDICT r13 next-round #2): every rung re-counts
     # k-mers over the SAME reads, and without a barrier each rung's
     # counting job re-runs the full upstream (source scan + windowing/
-    # explode + validation) from scratch. The lazy checkpoint is
-    # materialized by rung 1's counting job and every later rung reads
-    # the pinned blocks. Projected to the one column the ladder
+    # explode + validation) from scratch. The checkpoint is lazy: with
+    # AQE the call itself runs any shuffle stage below it (a read has
+    # none), and rung 1's counting job runs the last stage into the
+    # blocks every later rung reads. Projected to the one column the ladder
     # consumes before it is pinned (§2.3 — the checkpoint holds seq
     # bytes only). MEMORY_AND_DISK blocks spill gracefully at scale.
     if len(set(klist)) > 1:
@@ -151,10 +152,12 @@ def meta_assemble(
         else:
             from reflexiv_spark.plans.barriers import iteration_barrier
 
-            # lazy: the next rung's counting job (or the junction-fix
-            # support scan after the last rung) materializes the rung's
-            # contigs — no dedicated eager-checkpoint job per rung
-            # (guide §1.2: job floors dominate the ladder's wall)
+            # lazy: with AQE the call runs every shuffle stage of the
+            # rung (none after the counts when it ran in one partition),
+            # and the next rung's counting job (or junction fixing's
+            # measuring scan after the last rung) runs its last stage —
+            # no eager-checkpoint job of its own per rung (guide §1.2:
+            # job floors dominate the ladder's wall)
             contigs = iteration_barrier(build(), eager=False)
 
     fixed = fix_junctions(

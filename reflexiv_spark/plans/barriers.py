@@ -20,6 +20,16 @@ astronomically wrong anyway (the true row count is ~constant across
 rounds; the squared estimate says otherwise), and the default estimate
 keeps the loop's joins on the shuffle-hash/sort-merge path — exactly
 right for the data-proportional state these loops carry.
+
+"Lazy" barriers are lazy only in part on this stack (Spark 4.1, AQE on):
+``localCheckpoint(eager=False)`` plans its query adaptively and runs every
+shuffle stage below it when it is CALLED; only the last stage waits for
+the first action (``tests/test_barriers.py`` pins it). A lazy barrier
+over a shuffle therefore costs a job at the call, and one over an
+exchange-free plan costs none. A checkpoint also drops a single-partition
+plan's partitioning when the plan was adaptive, so code that needs one
+partition after a barrier re-coalesces
+(:mod:`reflexiv_spark.plans.partitions`).
 """
 
 from __future__ import annotations

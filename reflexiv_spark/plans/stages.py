@@ -54,14 +54,18 @@ def stage(
     present), the build is skipped entirely and the barrier is re-read —
     the reference's step-resume semantics. A partial (no ``_SUCCESS``)
     output is deleted and rebuilt. The returned DataFrame reads from the
-    barrier, so downstream lineage starts at a columnar scan.
+    barrier, so downstream lineage starts at a columnar scan. A fresh
+    build is re-read with the schema it was just written with, so the
+    re-read skips Parquet's footer inference (a one-task job); a resumed
+    stage infers it.
     """
     path = f"{workdir.rstrip('/')}/{name}"
     if resume and stage_done(spark, path):
         return spark.read.parquet(path)
     delete_path(spark, path)
-    build().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    built = build()
+    built.write.mode("overwrite").parquet(path)
+    return spark.read.schema(built.schema).parquet(path)
 
 
 def write_csv(

@@ -1,11 +1,12 @@
 """The one-task walk against the shuffle walk.
 
-Under the one-task gate, ``walk_paths`` doubles every pointer in numpy
-inside one executor task; above it, every round is a shuffle join. Each
-test runs with the gate forced each way and must give the same contigs as
-a plain Python walk of the same fork-free graph, on every id type (packed
-longs, hashed and array block ids, strings) and edge input, and must keep
-the fork-free guard.
+Under the one-task gate, ``walk_nodes`` doubles every pointer in numpy
+inside one executor task, and the packed pipelines' rungs and junction
+fixing run in one partition; above it, every round of ``walk_paths`` is a
+shuffle join. Each test runs with the gate forced each way and must give
+the same contigs as a plain Python walk of the same fork-free graph, on
+every id type (packed longs, hashed and array block ids, strings) and
+edge input, and must keep the fork-free guard.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import random_genome, revcomp
+from tests.conftest import random_genome, revcomp, simulate_reads
 from tests.test_codec_seam import _seam_reads
 
 
@@ -147,6 +148,101 @@ def test_rank_paths_matches_walk_oracle(
         assert ("N" * k, 1, 1) in got
 
 
+def _rung_oracle(counts, keep):
+    """:func:`_walk_oracle` as a rung finalizes it: each contig
+    canonicalized, its two strands merged, the max cover of each end."""
+    best = {}
+    for seq, left, right in _walk_oracle(counts, keep=keep):
+        key = min(seq, revcomp(seq))
+        lo, hi = best.get(key, (0, 0))
+        best[key] = (max(lo, left), max(hi, right))
+    return sorted((s, lo, hi) for s, (lo, hi) in best.items())
+
+
+_RUNG_CASES = [
+    ("genome", 21, "packed"),
+    ("genome", 31, "packed"),
+    ("genome", 41, "blocks"),
+    ("genome", 32, "blocks"),  # even k: the palindrome dedup runs
+    ("genome", 31, "string"),
+    ("circular", 31, "packed"),
+    ("circular", 41, "blocks"),
+    ("rc_ring", 31, "packed"),
+    ("single", 31, "packed"),
+    ("single", 41, "blocks"),
+    ("empty", 31, "packed"),
+]
+
+
+@pytest.mark.parametrize("algorithm", ["rank", "contract"])
+@pytest.mark.parametrize(
+    "case,k,ids", _RUNG_CASES, ids=["-".join(map(str, c)) for c in _RUNG_CASES]
+)
+def test_rung_matches_walk_oracle(spark, gate, case, k, ids, algorithm):
+    """A whole rung — canonical counts → expand → prune → walk →
+    canonical contigs — gives the oracle's contigs on every codec and
+    both cycle rules, in one partition under the gate and on the
+    shuffle plans above it."""
+    from reflexiv_spark.operators._codec import STRING, codec_for
+    from reflexiv_spark.pipelines import assemble as asm
+
+    reads = spark.createDataFrame([(r,) for r in _reads(case, k)], "seq string")
+    counts = STRING.count(reads, k, min_coverage=1, max_coverage=None)
+    codec = codec_for(k, packed=ids != "string")
+    if codec is not STRING:
+        counts = counts.select(codec.encode("kmer", k).alias("kid"), "count")
+    rung = codec.public(asm, "assemble_from{}_counts")(
+        counts, k, min_contig=k, min_error_coverage=2, input_canonical=True,
+        algorithm=algorithm,
+    )
+    got = sorted(tuple(r) for r in rung.select("seq", "left_cover", "right_cover").collect())
+    keep = algorithm == "contract"
+    assert got == _rung_oracle(_pruned_counts(spark, _reads(case, k), k), keep)
+    if case in ("genome", "single") or (keep and case != "empty"):
+        assert got
+
+
+def test_one_partition_plans_have_no_exchange(spark, monkeypatch):
+    """Under the gate a rung (packed and blocks) and a junction fix plan
+    no Exchange of any kind after their measured input; shut, they do."""
+    from reflexiv_spark.operators import extension as ext
+    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
+    from reflexiv_spark.operators.counter_packed import count_kmers_packed
+    from reflexiv_spark.operators.fixing import fix_junctions
+    from reflexiv_spark.pipelines.assemble import (
+        assemble_from_blocks_counts,
+        assemble_from_packed_counts,
+    )
+
+    g = random_genome(1500, seed=31)
+    reads = spark.createDataFrame(
+        [(r,) for r in simulate_reads(g, read_len=100, coverage=10.0, seed=31)],
+        "seq string",
+    )
+    contigs = spark.createDataFrame(
+        [(g[i : i + 300],) for i in range(0, 1200, 269)], "seq string"
+    )
+    runs = {
+        "packed": lambda: assemble_from_packed_counts(
+            count_kmers_packed(reads, 31, min_coverage=2, decode=False), 31,
+            min_contig=32, input_canonical=True,
+        ),
+        "blocks": lambda: assemble_from_blocks_counts(
+            count_kmers_blocks(reads, 41, min_coverage=2, decode=False), 41,
+            min_contig=42, input_canonical=True,
+        ),
+        "fixing": lambda: fix_junctions(contigs),
+    }
+    for gate, exchanges in ((1 << 62, False), (-1, True)):
+        monkeypatch.setattr(ext, "_LOOP_BCAST_BYTES", gate)
+        for name, run in runs.items():
+            df = run()
+            assert df.collect(), name
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # "Exchange" also matches BroadcastExchange
+            assert ("Exchange" in plan) == exchanges, (name, plan)
+
+
 @pytest.mark.parametrize("k,packed", [(31, False), (41, True)])
 def test_assemble_contract_gives_one_contig_per_ring(spark, gate, k, packed):
     """A circular genome assembles to exactly one contig of length
@@ -192,6 +288,22 @@ def test_fix_junctions_chain_and_cycle(spark, gate):
     assert out == {fused, *cycle, short}
 
 
+def test_fix_junctions_counts_support_before_dropping_repeats(spark, gate):
+    """A repeated contig's junctions are not unique — support is counted
+    over every input row before repeats are dropped — so it fuses with
+    neither neighbour, while a unique junction beside it still fuses."""
+    from reflexiv_spark.operators.fixing import fix_junctions
+
+    js = [random_genome(31, seed=200 + i) for i in range(3)]
+    a = random_genome(40, seed=210) + js[0]
+    b = js[0] + random_genome(40, seed=211) + js[1]
+    c = js[1] + random_genome(40, seed=212) + js[2]
+    d = js[2] + random_genome(40, seed=213)
+    df = spark.createDataFrame([(s,) for s in (a, b, b, c, d)], "seq string")
+    out = sorted(r.seq for r in fix_junctions(df).collect())
+    assert out == sorted([a, b, c + d[31:]])
+
+
 def test_fix_junctions_empty(spark, gate):
     from reflexiv_spark.operators.fixing import fix_junctions
 
@@ -214,6 +326,32 @@ def test_forked_input_fails_loudly(spark, gate):
     packed = df.select(kmer_to_packed("kmer", k).alias("kid"), "count")
     with pytest.raises(Exception, match="fork-free precondition violated"):
         rank_paths_packed(packed, k).collect()
+
+
+def test_walk_nodes_fork_free_guard(spark):
+    """The one-task kernel raises on a head key two nodes end in (an
+    in-degree-2 key) and on a repeated id; two nodes ending in a key no
+    node starts from are no fork."""
+    from reflexiv_spark.operators.extension import split_walk, walk_nodes
+
+    def walk(rows):
+        nodes = spark.createDataFrame(
+            rows, "kid bigint, __pk bigint, __sk bigint"
+        ).coalesce(1)
+        done, rest = split_walk(walk_nodes(nodes, 10))
+        return sorted(tuple(r) for r in done.collect()), rest.collect()
+
+    with pytest.raises(Exception, match="fork-free precondition violated"):
+        walk([(1, None, 7), (2, None, 7), (3, 7, 8)])
+    with pytest.raises(Exception, match="fork-free precondition violated"):
+        walk([(1, None, 7), (1, None, 8)])
+    assert walk([(1, None, 7), (2, None, 7), (3, 8, 9)]) == (
+        [(1, 1, 0), (2, 2, 0), (3, 3, 0)], []
+    )
+    # a chain 1 → 2 → 3 and a self-loop 4, labelled by itself
+    done, rest = walk([(1, None, 5), (2, 5, 6), (3, 6, 7), (4, 8, 8)])
+    assert done == [(1, 1, 0), (2, 1, 1), (3, 1, 2)]
+    assert [(r.kid, r.anc) for r in rest] == [(4, 4)]
 
 
 def test_local_rank_paths_packed_job_count(spark):

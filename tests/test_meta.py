@@ -45,6 +45,46 @@ def test_stage_resume(spark, tmp_path):
     assert not stage_done(spark, f"{workdir}/s1")
 
 
+def test_stage_fresh_build_rereads_with_its_schema(spark, tmp_path):
+    """A fresh stage re-reads its barrier with the schema it just wrote:
+    the same rows and schema as a resumed (inferring) read, and one job
+    fewer than a write and an inferring re-read — no footer-inference
+    job."""
+    workdir = str(tmp_path / "stages")
+    src = spark.createDataFrame(
+        [("a", 1, [1, 2], None), ("b", None, [], 2.5)],
+        "s string, i int, xs array<bigint>, d double",
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fresh, n_fresh = jobs(
+        "test-stage-fresh", lambda: stage(spark, "s1", workdir, lambda: src)
+    )
+    resumed, _ = jobs(
+        "test-stage-resume", lambda: stage(spark, "s1", workdir, lambda: src)
+    )
+    assert fresh.schema == resumed.schema
+    assert sorted(fresh.collect()) == sorted(resumed.collect()) == sorted(
+        src.collect()
+    )
+    plain = str(tmp_path / "plain")
+
+    def write_and_infer():
+        src.write.mode("overwrite").parquet(plain)
+        return spark.read.parquet(plain)
+
+    _, n_plain = jobs("test-stage-plain", write_and_infer)
+    assert n_fresh == n_plain - 1
+
+
 def test_meta_workdir_resume(spark, tmp_path):
     genome = random_genome(1500, seed=35)
     reads = simulate_reads(genome, read_len=100, coverage=15, seed=36)

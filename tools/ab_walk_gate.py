@@ -1,27 +1,31 @@
 #!/usr/bin/env python
-"""Interleaved A/B of the one-task walk against the shuffle walk.
+"""Interleaved A/B of the one-task path against the shuffle path.
 
-``walk_paths`` walks a pointer state in one ``coalesce(1).mapInArrow``
-task when its measured size fits ``extension._LOOP_BCAST_BYTES`` and by
-one shuffle join per round above it. This script times both walks on the
-same synthetic fork-free input by forcing the gate open (``1 << 62``) or
-shut (``-1``), alternating the arm that runs first, and checks that both
-arms give the same contigs before any timing is reported.
+Under ``extension._LOOP_BCAST_BYTES`` a packed pipeline's rung runs in
+one partition (expand, prune, the ``walk_nodes`` walk and the final
+aggregates, no Exchange) and junction fixing runs in one task; above it
+they run the multi-partition plans and the ``walk_paths`` shuffle walk.
+This script times both on the same synthetic fork-free input by forcing
+the gate open (``1 << 62``) or shut (``-1``), alternating the arm that
+runs first, and checks that both arms give the same contigs before any
+timing is reported.
 
-Workloads (each a size in state rows):
+Workloads (each a size in rows):
 
-* ``packed``: ``rank_paths_packed`` at k=31 over ``--paths`` random
-  segments (one long id per k-mer, 64 B per row for the gate);
-* ``blocks``: ``rank_paths_blocks`` at k=41 (hashed ids, 64 B per row);
+* ``rung``: ``assemble_from_packed_counts`` (``--k`` ≤ 31) or
+  ``assemble_from_blocks_counts`` (``--k`` > 31) from canonical counts
+  to contigs, over ``--paths`` random segments; rows are canonical
+  k-mers, and the gate measures both strands: 2 × rows × 64 B at k ≤ 31,
+  2 × rows × 80 B at k = 41, so the gate's top is 524,288 rows at k=31;
 * ``fixing``: ``fix_junctions`` over chains of ``--contig-len``-base
   contigs that overlap by 31 bases (64 B + 2 × contig length per row).
 
-The input is checkpointed before timing, so a run times the rank or fix
-stage only (noop sink). Sessions match the benchmark's: ``local[4]``,
-4 shuffle partitions.
+The input is checkpointed before timing, so a run times the rung or fix
+only (noop sink). Sessions match the benchmark's: ``local[4]``, 4
+shuffle partitions.
 
-Usage: python tools/ab_walk_gate.py [--runs 3] [--paths 1000]
-           [--contig-len 500] packed:250000 packed:1000000 fixing:60000
+Usage: python tools/ab_walk_gate.py [--runs 3] [--paths 1000] [--k 31]
+           [--contig-len 500] rung:131072 rung:524288 fixing:60000
 """
 
 from __future__ import annotations
@@ -48,7 +52,8 @@ def _segments(n_seg: int, seg_len: int, seed: int) -> list[str]:
     return [lut[row].tobytes().decode() for row in codes]
 
 
-def _kmer_ids(spark, rows: int, n_paths: int, k: int, codec):
+def _counts(spark, rows: int, n_paths: int, k: int, codec):
+    """``rows`` distinct canonical k-mers of random segments, count 1."""
     from pyspark.sql import functions as F
 
     per_path = max(1, rows // n_paths)
@@ -59,9 +64,13 @@ def _kmer_ids(spark, rows: int, n_paths: int, k: int, codec):
             F.expr(f"transform(sequence(1, length(s) - {k - 1}), i -> substring(s, i, {k}))")
         ).alias("kmer")
     )
-    return km.select(
-        codec.encode("kmer", k).alias("kid"), F.lit(1).cast("long").alias("count")
-    ).localCheckpoint(eager=True)
+    canon = F.least("kmer", F.translate(F.reverse("kmer"), "ACGT", "TGCA"))
+    return (
+        km.select(codec.encode(canon, k).alias("kid"))
+        .groupBy("kid")
+        .agg(F.count(F.lit(1)).alias("count"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def _contigs(spark, rows: int, contig_len: int, fix_k: int = 31):
@@ -81,16 +90,15 @@ def _contigs(spark, rows: int, contig_len: int, fix_k: int = 31):
 
 
 def _job(spark, workload: str, rows: int, args):
-    from reflexiv_spark.operators import extension as ext
-    from reflexiv_spark.operators._codec import BLOCKS, PACKED
+    from reflexiv_spark.operators._codec import codec_for
     from reflexiv_spark.operators.fixing import fix_junctions
+    from reflexiv_spark.pipelines import assemble
 
-    if workload == "packed":
-        km = _kmer_ids(spark, rows, args.paths, 31, PACKED)
-        return lambda: ext.rank_paths_packed(km, 31)
-    if workload == "blocks":
-        km = _kmer_ids(spark, rows, args.paths, 41, BLOCKS)
-        return lambda: ext.rank_paths_blocks(km, 41)
+    if workload == "rung":
+        codec = codec_for(args.k, packed=True)
+        counts = _counts(spark, rows, args.paths, args.k, codec)
+        rung = codec.public(assemble, "assemble_from{}_counts")
+        return lambda: rung(counts, args.k, min_contig=args.k + 1, input_canonical=True)
     if workload == "fixing":
         cs = _contigs(spark, rows, args.contig_len)
         return lambda: fix_junctions(cs)
@@ -110,6 +118,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--paths", type=int, default=1000)
+    ap.add_argument("--k", type=int, default=31)
     ap.add_argument("--contig-len", type=int, default=500)
     ap.add_argument("cases", nargs="+", help="workload:rows")
     args = ap.parse_args()
