@@ -11,7 +11,6 @@ timings reflect steady-state execution.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -440,6 +439,7 @@ def _bench_only_queries():
 
 def main() -> None:
     import __spark_entry__ as ent
+    from perfbench.harness import release
     from reflexiv_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -449,17 +449,9 @@ def main() -> None:
     qs = {**ent.queries(), **_bench_only_queries()}
 
     def run(name: str, d: str) -> float:
-        # Release the previous runs' leaked localCheckpoint blocks BEFORE
-        # timing (r13 measurement fix, guide §1): every query's iteration
-        # barriers persist executor-local RDDs that only the JVM
-        # ContextCleaner can drop, and it only notices once Python's GC
-        # releases the py4j refs. Without this, persistent-RDD count
-        # grows monotonically across the 66-query capture (measured
-        # 7 -> 17 within six runs of one query) and later queries read
-        # ~10% slow from memory pressure — the same broad-based drift the
-        # r12 verdict spent a judge session adjudicating as contention.
-        # Timed work is unchanged: this runs outside the timed region.
-        gc.collect()
+        # drop what earlier runs left persisted (their barriers' leaked
+        # localCheckpoint blocks) before the clock starts
+        release(spark)
         t0 = time.time()
         qs[name](spark, d).write.format("noop").mode("overwrite").save()
         return time.time() - t0

@@ -94,8 +94,8 @@ _BARRIER_EVERY = 3
 # task's memory ("a few hundred MB is usually fine", far from the 8 GB
 # hard cap). Measured on a 4-vCPU host, local[4], 4 shuffle partitions,
 # warm, noop sink:
-# * the walk alone, one task vs shuffle (3 interleaved runs per arm,
-#   tools/ab_walk_gate.py before rungs ran in one partition):
+# * the walk alone, one task vs shuffle (3 interleaved runs per arm in
+#   one session, before rungs ran in one partition):
 #   rank_paths_packed over 1M k-mers 3.6-5.1 s vs 14.3-17.4 s,
 #   rank_paths_blocks (k=41) 5.5-6.0 s vs 19.1-22.0 s;
 # * whole rungs, one partition vs the previous plans (multi-partition
@@ -107,11 +107,11 @@ _BARRIER_EVERY = 3
 #   (104,857) 2.6-3.9 s vs 3.7-3.8 s, at the gate (419,430) 10.3-12.1 s
 #   vs 8.3-8.8 s — one task sorts the prune windows' array keys and
 #   decodes every block alone;
-# * one partition vs the shuffle plans of the same code
-#   (tools/ab_walk_gate.py, 2 alternating runs per arm): packed rung at
-#   the gate 12.3 s vs 28.7-36.0 s, blocks rung at the gate 14.0-16.3 s
-#   vs 24.9-26.7 s, fix_junctions over 60k 500-base contigs 2.9-3.0 s vs
-#   10.4-11.8 s.
+# * one partition vs the shuffle plans of the same code, gate forced
+#   open vs shut (tools/perf.py ab, one process per run, 3 interleaved
+#   pairs): packed rung at the gate (524,288) 9.2-9.5 s vs 20.5-27.8 s,
+#   blocks rung at the gate (419,430) 10.7-12.5 s vs 23.4-25.2 s,
+#   fix_junctions over 60k 500-base contigs 3.5-3.7 s vs 11.3-13.0 s.
 # The blocks rung loses at the top, but a lower gate would send the same
 # states to the shuffle plans, slower still, so the gate stays here.
 _LOOP_BCAST_BYTES = 64 * 1024 * 1024

@@ -68,9 +68,10 @@ def main() -> int:
     from reflexiv_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    # comma-separated queries to skip — used by the sf1.0 sweep to leave
-    # out the documented quadratic-by-design verification oracles that
-    # DuckDB cannot finish at scale (see tools/measure_sf1.py)
+    # comma-separated queries to skip in a sweep at scale
+    # (SPARK_GRAFT_CHECK_SF): the quadratic-by-design verification oracles
+    # DuckDB cannot finish there (EXCLUDE_DUCK in tools/measure_sf1.py;
+    # tools/sample_oracle_sf1.py checks sampled rows of such queries)
     exclude = set(
         filter(None, os.environ.get("SPARK_GRAFT_CHECK_EXCLUDE", "").split(","))
     )
