@@ -2,7 +2,8 @@
 """Benchmark harness: times headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+"sf": ...}, with contention evidence beside it (each query's CPU steal
+share, a CPU probe and a control query at each end of the sweep).
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver collect). A warmup pass on sf0.001 triggers JVM/codegen warmup so
@@ -439,7 +440,7 @@ def _bench_only_queries():
 
 def main() -> None:
     import __spark_entry__ as ent
-    from perfbench.harness import release
+    from perfbench.harness import cpu_probe, cpu_ticks, release, steal_share
     from reflexiv_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -512,14 +513,22 @@ def main() -> None:
             print(f"bench: control query failed: {e}", file=sys.stderr)
             return None
 
+    # Contention evidence DURING the sweep, which the two control reads
+    # bracket but cannot see: the share of the machine's CPU time the
+    # hypervisor stole while each query ran (all its runs), and a fixed
+    # pure-Python loop timed at each end of the capture.
+    probe_first = round(cpu_probe(), 4)
     control_first = control_wall()
     timings: dict[str, float] = {}
+    steal: dict[str, float] = {}
     for n in names:
+        start = cpu_ticks()
         try:
             timings[n] = round(min(run(n, sf_dir) for _ in range(n_runs)), 3)
         except Exception as e:  # noqa: BLE001
             print(f"bench: {n} failed: {e}", file=sys.stderr)
             timings[n] = -1.0
+        steal[n] = round(steal_share(start), 4)
     # deliberately-quadratic EXACTNESS BASELINES (the recall/parity
     # yardsticks for the bucketed paths — embedding_topk for ann_lsh/
     # ann_ivf/pq_topk, ngram_jaccard for minhash): kept runnable, but
@@ -534,6 +543,7 @@ def main() -> None:
     base = {k: v for k, v in timings.items() if k in BASELINES}
     total = round(sum(v for v in engine.values() if v >= 0), 3)
     control_last = control_wall()
+    probe_last = round(cpu_probe(), 4)
     if control_first is None or control_last is None:
         spread = None
         contended = None  # sentinel unavailable; capture still valid
@@ -556,6 +566,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": engine,
+        "steal_share": steal,
+        "cpu_probe_first_sec": probe_first,
+        "cpu_probe_last_sec": probe_last,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "runs": n_runs,
         "agg": "min",

@@ -32,18 +32,21 @@ ring's two strands (each other's reverse complement) only the one holding
 the smallest id of either survives, and it is cut just before that id and
 walked again as a path (:func:`_walk_cycles`).
 
-Scale notes (100 TB): above the one-task gate ``_LOOP_BCAST_BYTES`` every
-round is one shuffle join of (id, pointer, offset) rows
-(:func:`walk_paths`), with a ``localCheckpoint`` and one scalar probe
+Scale notes (100 TB): every caller walks through ONE entry point,
+:func:`walk`, over node rows — each node once with the key of its head end
+and of its tail end — and gets the same rows back with their pointer,
+offset and a done flag. Where the caller measures a state under the
+one-task gate ``_LOOP_BCAST_BYTES`` it moves it to one partition, and a
+single-partition node set is walked whole inside one executor task
+(:func:`walk_nodes`), where per-job cost, not data, would set the wall: no
+init join, no decode join, no proxy ids. Any other node set takes the
+shuffle walk (:func:`walk_paths`): every round is one shuffle join of
+(id, pointer, offset) rows, with a ``localCheckpoint`` and one scalar probe
 every three rounds — replacing the reference's per-step SparkSession
-restarts + gzip-CSV barriers (``Pipelines.java:832-839``). A measured
-state under the gate is walked whole inside one executor task
-(:func:`walk_nodes`), where per-job cost, not data, would set the wall:
-the node rows go in, each with its head and tail key, and come out with
-their pointer and offset — no init join, no decode join, no proxy ids.
-The packed pipelines' rungs and junction fixing go one step further
-under the gate and run in ONE partition from their measured input on,
-so no Exchange is planned between it and the result
+restarts + gzip-CSV barriers (``Pipelines.java:832-839``) — and array ids
+ride the rounds as xxhash64 proxies. The packed pipelines' rungs and
+junction fixing run in ONE partition from their measured input on under
+the gate, so no Exchange is planned between it and the result
 (``pipelines.assemble._id_barrier``, ``operators.fixing``).
 
 The walk is ONE kernel over a k-mer codec
@@ -52,10 +55,9 @@ longs (k ≤ 31) or long-block arrays (k > 31). The codec supplies the id
 column, the prefix/suffix join keys, the reverse complement and the tail
 decode; ``rank_paths_packed`` / ``rank_paths_blocks`` are its entry
 points over already-packed ids, and ``rank_paths`` picks the packed codec
-itself when its input is fixed-length pure ACGT. Both walks
-(:func:`walk_nodes`, :func:`walk_paths`) and the final concatenation
-(:func:`stitch_walk`) are shared with junction fixing, which walks
-contigs instead of k-mers.
+itself when its input is fixed-length pure ACGT. :func:`walk` and the
+final concatenation (:func:`stitch_walk`) are shared with junction
+fixing, which walks contigs instead of k-mers.
 """
 
 from __future__ import annotations
@@ -66,7 +68,13 @@ import sys
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from reflexiv_spark.operators._codec import (
     BLOCKS,
@@ -82,18 +90,18 @@ from reflexiv_spark.plans.partitions import count_rows, in_one_partition
 _BARRIER_EVERY = 3
 
 # One-task gate: when the MEASURED state size (an exact row count × a
-# conservative per-row estimate) fits under this many bytes,
-# :func:`walk_nodes` walks the whole state in numpy inside ONE executor
-# task — one job instead of a shuffle-join job per round plus a probe job
-# every ``_BARRIER_EVERY`` rounds — and a packed rung (both strands of its
-# counted k-mers) or a junction fix runs in ONE partition with no
-# Exchange. The gate is driven by a measured count, not an estimate
-# (reset_stats deliberately discards the compounding size stats), and it
-# is scale-adaptive: a 100 TB run's billions of rows exceed it and take
-# the shuffle plans. 64 MB is ~1M scalar-id walk rows, far inside one
-# task's memory ("a few hundred MB is usually fine", far from the 8 GB
-# hard cap). Measured on a 4-vCPU host, local[4], 4 shuffle partitions,
-# warm, noop sink:
+# conservative per-row estimate) fits under this many bytes, its caller
+# moves it to one partition and :func:`walk` walks the whole state in
+# numpy inside ONE executor task — one job instead of a shuffle-join job
+# per round plus a probe job every ``_BARRIER_EVERY`` rounds — and a
+# packed rung (both strands of its counted k-mers) or a junction fix runs
+# in ONE partition with no Exchange. The gate is driven by a measured
+# count, not an estimate (reset_stats deliberately discards the
+# compounding size stats), and it is scale-adaptive: a 100 TB run's
+# billions of rows exceed it and take the shuffle plans. 64 MB is ~1M
+# scalar-id walk rows, far inside one task's memory ("a few hundred MB
+# is usually fine", far from the 8 GB hard cap). Measured on a 4-vCPU
+# host, local[4], 4 shuffle partitions, warm, noop sink:
 # * the walk alone, one task vs shuffle (3 interleaved runs per arm in
 #   one session, before rungs ran in one partition):
 #   rank_paths_packed over 1M k-mers 3.6-5.1 s vs 14.3-17.4 s,
@@ -162,16 +170,16 @@ def rank_paths(
     string kernel; ``packed=False`` forces it.
     """
     keep = _keeps_cycles(algorithm)
-    km = _loop_input(kmer_counts, "kmer")
-    # the barrier sits BEFORE the packed guard so the guard's scan and
-    # every later consumer (packed projection, or the string path's
-    # walk) read it, not the upstream lineage. Packed sub-k-mer keys need
-    # a non-empty overlap.
+    km = kmer_counts.select("kmer", "count")
+    # Packed sub-k-mer keys need a non-empty overlap.
     packed = packed and k >= 2
     if packed:
-        # The packed id is injective only for fixed-length pure-ACGT rows;
-        # one short-circuit scan guards the fallback (limit(1) stops at the
-        # first offending row).
+        # the barrier sits BEFORE the packed guard so the guard's scan and
+        # the packed projection (or the string fallback) read it, not the
+        # upstream lineage. The packed id is injective only for
+        # fixed-length pure-ACGT rows; one short-circuit scan guards the
+        # fallback (limit(1) stops at the first offending row).
+        km = km.localCheckpoint(eager=False)
         bad = (
             km.where((F.length("kmer") != k) | F.col("kmer").rlike("[^ACGT]"))
             .limit(1)
@@ -197,8 +205,7 @@ def rank_paths_packed(
     :func:`reflexiv_spark.operators.counter_packed.count_kmers_packed`
     with ``decode=False``. End-to-end string-free: this is the 100 TB
     representation the reference carries through its whole pipeline."""
-    km = _loop_input(packed_counts, "kid")
-    return _rank(PACKED, km, k, max_rounds, _keeps_cycles(algorithm))
+    return _rank(PACKED, packed_counts, k, max_rounds, _keeps_cycles(algorithm))
 
 
 def rank_paths_blocks(
@@ -210,8 +217,7 @@ def rank_paths_blocks(
     with ``decode=False`` — the reference's long-k array-of-longs encoding
     (``ReflexivDSDynamicKmerRuduction.java:3220-3241``) carried through
     the contraction loop."""
-    km = _loop_input(block_counts, "kid")
-    return _rank(BLOCKS, km, k, max_rounds, _keeps_cycles(algorithm))
+    return _rank(BLOCKS, block_counts, k, max_rounds, _keeps_cycles(algorithm))
 
 
 def _keeps_cycles(algorithm: str) -> bool:
@@ -220,23 +226,12 @@ def _keeps_cycles(algorithm: str) -> bool:
     return algorithm == "contract"
 
 
-def _loop_input(counts: DataFrame, col: str) -> DataFrame:
-    """The walk's input DataFrame[<col>, count]: checkpointed — its
-    consumers are :func:`_rank`'s count, then the walk's node rows, or
-    pre, suc and the final join — unless it is in one partition, which a
-    checkpoint would drop (see :func:`_rank`)."""
-    km = counts.select(col, F.col("count").cast("int").alias("count"))
-    if in_one_partition(km):
-        return km
-    return km.localCheckpoint(eager=False)
-
-
 def _rank(
-    codec: KmerCodec, km: DataFrame, k: int, max_rounds: int, keep: bool
+    codec: KmerCodec, counts: DataFrame, k: int, max_rounds: int, keep: bool
 ) -> DataFrame:
     """The pointer-doubling kernel over ``codec`` ids: DataFrame[<codec.col>,
-    count] from :func:`_loop_input` → DataFrame[seq, left_cover,
-    right_cover]; ``keep`` adds the kept cycles (:func:`_walk_cycles`).
+    count] → DataFrame[seq, left_cover, right_cover]; ``keep`` adds the
+    kept cycles (:func:`_walk_cycles`).
 
     A single-partition input is walked in its one task uncounted: its
     caller measured it under the one-task gate and moved it there (the
@@ -244,35 +239,32 @@ def _rank(
     chose one task for it."""
     o = k - 1
     c = codec.col
-    # any other input: ONE materializing count up front runs the upstream
-    # pipeline into the checkpoint and gives the walk its exact row count
-    # (state rows == km rows under the fork-free precondition) and the
-    # one-task gate its measured size
-    n_km = None if in_one_partition(km) else count_rows(km)
+    km = counts.select(c, F.col("count").cast("int").alias("count"))
+    n_km = None
+    if not in_one_partition(km):
+        # any other input: checkpointed (its consumers are the count and
+        # the walk's node rows, or the shuffle walk's pre, suc and
+        # re-attach join), then ONE materializing count runs the upstream
+        # pipeline into the checkpoint and gives the walk its exact row
+        # count (state rows == km rows under the fork-free precondition)
+        # and the one-task gate its measured size
+        km = km.localCheckpoint(eager=False)
+        n_km = count_rows(km)
     if n_km is None or fits_one_task(n_km * codec.row_bytes(k)):
-        # the whole walk in one task over the codec ids themselves: the
-        # node rows carry id and count through it, so there is no init
-        # join, no decode join and no proxy-id pass (coalesce(1) is
-        # narrow)
-        nodes = km.coalesce(1).select(
-            F.col(c).alias("kid"),
-            "count",
-            codec.prefix_key(c, k, o).alias("__pk"),
-            codec.suffix_key(c, k, o).alias("__sk"),
-        )
-        done, rest = split_walk(walk_nodes(nodes, max_rounds))
-        ids, val, row_bytes = None, "kid", codec.row_bytes(k)
-    else:
-        done, rest, ids, val, row_bytes = _rank_shuffle(
-            codec, km, k, n_km, max_rounds, keep
-        )
-    if keep:
-        done = _walk_cycles(codec, done, rest, ids, val, k, max_rounds, row_bytes)
-    if ids is not None:
-        done = done.join(ids, "kid")
+        km = km.coalesce(1)  # narrow: the walk runs in this one task
+    nodes = km.select(
+        F.col(c).alias("kid"),
+        "count",
+        codec.prefix_key(c, k, o).alias("__pk"),
+        codec.suffix_key(c, k, o).alias("__sk"),
+    )
+    walked = walk(nodes, n_km, max_rounds, cycles=keep)
+    done = (
+        _walk_cycles(codec, walked, k, max_rounds) if keep else walked.where("__done")
+    )
     parts = done.groupBy("anc").agg(
         F.array_sort(
-            F.collect_list(F.struct("off", F.col(val).alias(c), "count"))
+            F.collect_list(F.struct("off", F.col("kid").alias(c), "count"))
         ).alias("xs")
     )
     xs = F.col("xs")
@@ -287,135 +279,132 @@ def _rank(
     )
 
 
-def _rank_shuffle(
-    codec: KmerCodec, km: DataFrame, k: int, n_km: int, max_rounds: int,
-    keep: bool,
-):
-    """Above the one-task gate: the shuffle walk over ``km`` →
-    (done, rest, ids, val, row_bytes), ``ids`` the decode side mapping
-    the walk id ``kid`` to the codec id column ``val``."""
+def _walk_cycles(
+    codec: KmerCodec, walked: DataFrame, k: int, max_rounds: int
+) -> DataFrame:
+    """The done rows of :func:`walk` output ``walked`` (walked with
+    ``cycles``) plus its kept cycles, each cut into a path and walked
+    again, labelled by its cycle.
+
+    A ring sits in the graph as two cycles, one per strand, whose members
+    are each other's reverse complements. Both have the same smallest
+    canonical id min(id, revcomp(id)), and only the strand holding it has
+    it as its own smallest id, so exactly one passes; a cycle that is its
+    own reverse complement passes once. The kept cycle's smallest member
+    loses its predecessor and heads the path."""
     o = k - 1
-    c = codec.col
-    hashed = False
-    if codec.array_ids:
+    # the walk runs ONCE: its output is read by the kept cycles' count
+    # and by the done rows, and a barrier drops a single partition, so
+    # a one-task walk's output moves back to one partition after it
+    one = in_one_partition(walked)
+    walked = walked.localCheckpoint(eager=False)
+    if one:
+        walked = walked.coalesce(1)
+    cycle = Window.partitionBy("anc")
+    kid = F.col("kid")
+    kept = (
+        walked.where(~F.col("__done"))
+        .withColumns({
+            "__cut": F.min(kid).over(cycle),
+            "__canon": F.min(F.least(kid, codec.revcomp("kid", k))).over(cycle),
+        })
+        .where(F.col("__cut") == F.col("__canon"))
+        .localCheckpoint(eager=False)  # the count and the walk's node rows
+    )
+    n = count_rows(kept)
+    done = walked.where("__done")
+    if n == 0:
+        return done
+    if fits_one_task(n * codec.row_bytes(k)):
+        kept = kept.coalesce(1)
+    nodes = kept.select(
+        "kid",
+        "count",
+        F.col("anc").alias("__cycle"),
+        F.when(kid != F.col("__cut"), codec.prefix_key("kid", k, o)).alias("__pk"),
+        codec.suffix_key("kid", k, o).alias("__sk"),
+    )
+    cut = walk(nodes, n, max_rounds)
+    return done.unionByName(
+        cut.select("kid", "count", F.col("__cycle").alias("anc"), "off", "__done")
+    )
+
+
+def fits_one_task(state_bytes: int) -> bool:
+    """The one-task gate: a walk state of ``state_bytes`` (measured rows ×
+    a per-row estimate) is small enough to walk in one task, and a rung
+    or a junction fix that small runs in one partition."""
+    return state_bytes <= _LOOP_BCAST_BYTES
+
+
+def walk(
+    nodes: DataFrame, n_rows: int | None, max_rounds: int, cycles: bool = False
+) -> DataFrame:
+    """Pointer-doubling walk of a fork-free graph of node rows →
+    DataFrame[kid, <carried columns>, anc, off, __done].
+
+    ``nodes``: DataFrame[kid, <carried columns>, __pk, __sk], every node
+    once with the key of its head end (``__pk``; null: no predecessor)
+    and of its tail end (``__sk``); a node's predecessor is the node whose
+    tail key is its head key. ``n_rows`` is the exact node count: the
+    shuffle walk's round bound and fork-free check (the walk raises on a
+    state row count other than ``n_rows``).
+
+    Each node comes back with its carried columns, its last pointer
+    ``anc`` and its offset ``off`` from it. ``__done``: the walk reached
+    an in-degree-0 head, and ``anc`` is that head (the head's id, or its
+    xxhash64 proxy id when the shuffle walk hashed array ids). Cycle
+    members (and self-loops) never reach one; with ``cycles``, their
+    ``anc`` is their cycle's label, one member the same for the whole
+    cycle.
+
+    A node set in ONE partition — its caller measured it under the
+    one-task gate and coalesced it — is walked in that one task
+    (:func:`walk_nodes`); any other takes the shuffle walk
+    (:func:`walk_paths`). Reading the partitioning launches no job.
+    """
+    if in_one_partition(nodes):
+        return walk_nodes(nodes, max_rounds)
+    return walk_paths(nodes, n_rows, max_rounds, cycles)
+
+
+def walk_paths(
+    nodes: DataFrame, n_rows: int, max_rounds: int, cycles: bool = False
+) -> DataFrame:
+    """The shuffle walk of :func:`walk`: one shuffle join per round
+    (:func:`_double_pointers`) over (id, pointer, offset) rows, the carried
+    columns re-attached by one join at the end.
+
+    Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
+    head-reachable pointer and every cycle label has converged by then,
+    so surviving CYCLES cannot pin the walk at ``max_rounds``. With
+    ``cycles``, the label is a running minimum over the ids doubled
+    beside the pointer (the walk then runs until no label changes).
+    """
+    key = "kid"
+    if isinstance(nodes.schema["kid"].dataType, ArrayType):
         # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
         # instead of payloads"): every doubling round would move TWO
-        # array<long> pointers + an offset per row (~48+16·nb B unsafe at nb
-        # blocks), but the loop only ever tests pointer EQUALITY — the block
-        # digits are not consulted until final assembly. Riding the rounds
-        # on xxhash64(kid) collapses the per-round exchange row to three
-        # longs (~4× fewer bytes at k=41, and scalar join hashing instead of
-        # array hashing), with the blocks re-attached by ONE hashed join at
-        # final assembly. Only this shuffle walk hashes: under the gate
-        # the one-task walk keys the block arrays directly.
+        # array<long> pointers + an offset per row (~48+16·nb B unsafe at
+        # nb blocks), but the loop only ever tests pointer EQUALITY — the
+        # block digits are not consulted until final assembly. Riding the
+        # rounds on xxhash64(kid) collapses the per-round exchange row to
+        # three longs (~4× fewer bytes at k=41, and scalar join hashing
+        # instead of array hashing), with the blocks re-attached by the
+        # final join. Only this shuffle walk hashes: the one-task walk
+        # keys the block arrays directly.
         # Correctness is gated exactly, not probabilistically: one
         # aggregate gives the injectivity witness (distinct hids == rows);
         # any collision — 2⁻⁶⁴ birthday odds, but checked, not assumed —
         # falls back to the array-id loop, so the result is provably
         # identical either way.
-        kmh = km.select(F.xxhash64(c).alias("hid"), F.col(c).alias("bid"), "count")
-        hashed = kmh.agg(F.count_distinct("hid")).first()[0] == n_km
-    src, lid, val = (kmh, "hid", "bid") if hashed else (km, c, c)
-    pre = src.select(
-        F.col(lid).alias("kid"), codec.prefix_key(val, k, o).alias("__pk")
-    )
-    suc = src.select(
-        F.col(lid).alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
-    )
-    done, rest = walk_paths(pre, suc, n_km, max_rounds, cycles=keep)
-    # decode side: loop id as "kid" next to the codec id it stands for
-    ids = src if lid == "kid" else src.select(F.col(lid).alias("kid"), val, "count")
-    return done, rest, ids, val, 64 if hashed else codec.row_bytes(k)
-
-
-def _walk_cycles(
-    codec: KmerCodec, done: DataFrame, rest: DataFrame, ids: DataFrame | None,
-    val: str, k: int, max_rounds: int, row_bytes: int,
-) -> DataFrame:
-    """``done`` plus the kept cycles of ``rest``, each cut into a path and
-    walked again.
-
-    ``rest`` holds the walk's unresolved rows with ``anc`` a per-cycle
-    label; ``ids`` maps the walk id ``kid`` to the codec id ``val``, or is
-    None when the rows carry it (the one-task walk: ``val`` is ``kid`` and
-    ``count`` rides along). A ring sits in the graph as two cycles, one
-    per strand, whose members are each other's reverse complements. Both
-    have the same smallest canonical id min(id, revcomp(id)), and only
-    the strand holding it has it as its own smallest id, so exactly one
-    passes; a cycle that is its own reverse complement passes once. The
-    kept cycle's smallest member loses its predecessor and heads the
-    path."""
-    o = k - 1
-    cycle = Window.partitionBy("anc")
-    canon = F.least(F.col(val), codec.revcomp(val, k))
-    kept = (
-        (rest if ids is None else rest.join(ids, "kid"))
-        .withColumns({
-            "__cut": F.min(val).over(cycle),
-            "__canon": F.min(canon).over(cycle),
-        })
-        .where(F.col("__cut") == F.col("__canon"))
-        .localCheckpoint(eager=False)  # the count, pre and suc
-    )
-    n = count_rows(kept)
-    if n == 0:
-        return done
-    head_key = F.when(F.col(val) != F.col("__cut"), codec.prefix_key(val, k, o))
-    if fits_one_task(n * row_bytes):
-        carried = [] if ids is not None else ["count"]
-        nodes = kept.coalesce(1).select(
-            "kid", *carried, head_key.alias("__pk"),
-            codec.suffix_key(val, k, o).alias("__sk"),
-        )
-        cycles, _ = split_walk(walk_nodes(nodes, max_rounds))
-    else:
-        pre = kept.select("kid", head_key.alias("__pk"))
-        suc = kept.select(
-            F.col("kid").alias("__pred"), codec.suffix_key(val, k, o).alias("__pk")
-        )
-        cycles, _ = walk_paths(pre, suc, n, max_rounds)
-    return done.unionByName(cycles)
-
-
-def fits_one_task(state_bytes: int) -> bool:
-    """The one-task gate: a walk state of ``state_bytes`` (measured rows ×
-    a per-row estimate) is small enough for :func:`walk_nodes`, and a
-    rung or a junction fix that small runs in one partition."""
-    return state_bytes <= _LOOP_BCAST_BYTES
-
-
-def walk_paths(
-    pre: DataFrame,
-    suc: DataFrame,
-    n_rows: int,
-    max_rounds: int,
-    cycles: bool = False,
-):
-    """Pointer-doubling walk of a fork-free path graph by one shuffle join
-    per round (:func:`_double_pointers`) → (done, rest); the walk for
-    states above the one-task gate (below it, :func:`walk_nodes`).
-
-    ``pre``: DataFrame[kid, __pk], every node once, keyed by the join key
-    of its head end; ``suc``: DataFrame[__pred, __pk], a node keyed by the
-    join key of its tail end. ``n_rows`` is the exact node count (the
-    walk's round bound and fork-free check: the walk raises on a state
-    row count other than ``n_rows``).
-
-    Round bound: ceil(log2(n_rows)) + 1 (capped at ``max_rounds``). Every
-    head-reachable pointer and every cycle label has converged by then,
-    so surviving CYCLES cannot pin the walk at ``max_rounds``.
-
-    Both are DataFrame[kid, anc, off] after the walk: each node's last
-    pointer and its offset from it. ``done`` holds the nodes whose walk
-    reached an in-degree-0 head (``anc`` is that head); ``rest`` holds the
-    others — cycle members (and self-loops) never reach one. With
-    ``cycles``, a ``rest`` row's ``anc`` is instead its cycle's label: one
-    member, the same for the whole cycle, from a running minimum over the
-    ids doubled beside the pointer (the walk then runs until no label
-    changes).
-    """
+        nodes = nodes.withColumn("__hid", F.xxhash64("kid"))
+        if nodes.agg(F.count_distinct("__hid")).first()[0] == n_rows:
+            key = "__hid"
     # each node points at its unique predecessor, or at itself (off 0)
     # when it heads a path
+    pre = nodes.select(F.col(key).alias("kid"), "__pk")
+    suc = nodes.select(F.col(key).alias("__pred"), F.col("__sk").alias("__pk"))
     state = pre.join(suc, "__pk", "left").select(
         "kid",
         F.coalesce("__pred", F.col("kid")).alias("anc"),
@@ -429,38 +418,49 @@ def walk_paths(
     # lazy barrier: with AQE the call runs the init join's shuffle stages,
     # and the first loop probe runs the last stage into the blocks
     state = iteration_barrier(state, eager=False)
-    heads = state.where(F.col("off") == 0).select(F.col("kid").alias("anc"))
+    heads = state.where(F.col("off") == 0).select(
+        F.col("kid").alias("anc"), F.lit(True).alias("__head")
+    )
     state = _double_pointers(state, _rounds(n_rows, max_rounds), n_rows)
-    rest = state.join(heads, "anc", "left_anti")
-    if cycles:
-        state = state.drop("lbl")
-        rest = rest.select("kid", F.col("lbl").alias("anc"), "off")
-    return state.join(heads, "anc", "left_semi"), rest
+    done = F.coalesce("__head", F.lit(False))
+    walked = state.join(heads, "anc", "left").select(
+        "kid",
+        F.when(done, F.col("anc")).otherwise(F.col("lbl")).alias("anc")
+        if cycles
+        else "anc",
+        "off",
+        done.alias("__done"),
+    )
+    carried = [c for c in nodes.columns if c not in ("kid", "__hid", "__pk", "__sk")]
+    if key == "kid" and not carried:
+        return walked
+    # one join re-attaches the carried columns and, for proxy ids, the ids
+    ids = nodes.select(*dict.fromkeys([key, "kid", *carried]))
+    return (
+        walked.withColumnRenamed("kid", key)
+        .join(ids, key)
+        .select("kid", *carried, "anc", "off", "__done")
+    )
 
 
 def _rounds(n_rows: int, max_rounds: int) -> int:
     return min(max_rounds, max(1, math.ceil(math.log2(max(n_rows, 2))) + 1))
 
 
-def walk_nodes(nodes: DataFrame, max_rounds: int, prepare=None) -> DataFrame:
-    """The one-task walk: node rows in ONE partition → the same rows with
-    ``anc``, ``off`` and ``__done`` (see :func:`split_walk`).
+def walk_nodes(nodes: DataFrame, max_rounds: int) -> DataFrame:
+    """The one-task walk of :func:`walk`: node rows in ONE partition →
+    the same rows with ``anc``, ``off`` and ``__done``.
 
-    ``nodes``: DataFrame[kid, <carried columns>, __pk, __sk], every node
-    once with the key of its head end (``__pk``; null: no predecessor)
-    and of its tail end (``__sk``). The kernel (:func:`_walk_task`)
-    links each node to the one node whose tail key is its head key and
-    doubles the pointers in numpy, so the walk is a narrow
-    ``mapInArrow`` of its input: a single-partition input plans no
-    Exchange before or after it. The carried columns ride through, and
-    ``prepare`` (Arrow table → table, run first in the task) may drop
-    rows or null head keys. Same round bound and same ``done`` /
-    ``rest`` split as :func:`walk_paths`; a ``rest`` row's ``anc`` is
-    always its cycle's label.
+    The kernel (:func:`_walk_task`) links each node to the one node whose
+    tail key is its head key and doubles the pointers in numpy, so the
+    walk is a narrow ``mapInArrow`` of its input: a single-partition input
+    plans no Exchange before or after it. The carried columns ride
+    through. Same round bound as :func:`walk_paths`; a row that is not
+    done always has its cycle's label as ``anc``.
     """
     fields = [f for f in nodes.schema.fields if f.name not in ("__pk", "__sk")]
     return nodes.mapInArrow(
-        functools.partial(_walk_task, max_rounds=max_rounds, prepare=prepare),
+        functools.partial(_walk_task, max_rounds=max_rounds),
         StructType(
             fields
             + [
@@ -469,15 +469,6 @@ def walk_nodes(nodes: DataFrame, max_rounds: int, prepare=None) -> DataFrame:
                 StructField("__done", BooleanType(), False),
             ]
         ),
-    )
-
-
-def split_walk(walked: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """:func:`walk_nodes` output → (done, rest), as :func:`walk_paths`
-    returns them, carried columns included."""
-    return (
-        walked.where("__done").drop("__done"),
-        walked.where(~F.col("__done")).drop("__done"),
     )
 
 
@@ -525,7 +516,7 @@ def _valid_keys(keys):
     return pos, _id_keys(pc.take(keys, pos))
 
 
-def _walk_task(batches, max_rounds: int, prepare=None):
+def _walk_task(batches, max_rounds: int):
     """mapInArrow body of :func:`walk_nodes`: the node rows of one task →
     the same rows without ``__pk`` / ``__sk``, plus ``anc``, ``off`` and
     ``__done``, doubling row positions in numpy.
@@ -550,8 +541,6 @@ def _walk_task(batches, max_rounds: int, prepare=None):
     if not batches:
         return
     t = pa.Table.from_batches(batches).combine_chunks()
-    if prepare is not None:
-        t = prepare(t)
     n = t.num_rows
     kid = t.column("kid").combine_chunks()
     if not pd.Index(_id_keys(kid)).is_unique:

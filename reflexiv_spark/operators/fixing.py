@@ -8,29 +8,23 @@ correction, and run through ~18 rounds of the standard sort+merge
 extension loop so contigs that share a *unique* junction 31-mer fuse
 (``ReflexivDSDynamicKmerFixing.java:191-257``).
 
-Spark-first: junction support is a hash aggregate; uniqueness is a fork
-filter (support == 1 at both ends); the merge is a pointer-doubling walk
-at contig granularity — log2(longest chain) rounds instead of a fixed 18
-sorts. While the contig set fits the one-task gate, the whole fix runs in
-ONE partition with no Exchange: the walk kernel
-(:func:`reflexiv_spark.operators.extension.walk_nodes`) counts the
-support, drops repeated contigs and walks in one task. Above the gate it
-is the shuffle walk of
-:func:`reflexiv_spark.operators.extension.walk_paths` over aggregates and
-a broadcast junction join.
+Spark-first: junction support is a count over contig ends; uniqueness is
+a fork filter (support == 1 at both ends); the merge is the pointer-
+doubling walk of :func:`reflexiv_spark.operators.extension.walk` at
+contig granularity — log2(longest chain) rounds instead of a fixed 18
+sorts — the same walk contig extension runs over k-mers. One body serves
+every size: the support is counted by windows over contig ends, so while
+the contig set fits the one-task gate it runs in ONE partition with no
+Exchange (the walk in one task); above the gate the same plans are
+multi-partition and the walk is the shuffle walk.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from reflexiv_spark.operators.extension import (
-    fits_one_task,
-    stitch_walk,
-    walk_nodes,
-    walk_paths,
-)
+from reflexiv_spark.operators.extension import fits_one_task, stitch_walk, walk
 from reflexiv_spark.plans.partitions import count_rows
 
 # Reference fixes junctions with 31-mers regardless of the assembly k.
@@ -89,51 +83,58 @@ def fix_junctions(
 
     Returns DataFrame[seq] of fixed (possibly fused) contigs.
     """
-    s = F.col(seq_col)
-    long_enough = contigs.where(F.length(s) >= fix_k)
+    src = contigs.select(F.col(seq_col).alias("seq"))
+    s = F.col("seq")
     # ONE measuring aggregate for the one-task gate: 64 B per state row
     # plus each contig id twice (kid and its anc pointer), counted before
     # repeats are dropped (an upper bound of the walk's state)
-    n, id_bytes = long_enough.agg(
+    n, id_bytes = src.where(F.length(s) >= fix_k).agg(
         F.count(F.lit(1)), F.coalesce(F.sum(F.length(s)), F.lit(0))
     ).first()
-    if fits_one_task(64 * n + 2 * id_bytes):
-        return _fix_one_partition(contigs, fix_k, seq_col, max_rounds)
-
-    support = junction_support(contigs, fix_k, seq_col)
-    unique_j = support.where(
-        (F.col("n_starts") == 1) & (F.col("n_ends") == 1)
-    ).select(F.col("kmer").alias("__pk"))
-
-    cs = (
-        long_enough.select(s.alias("kid"))
-        .dropDuplicates(["kid"])
-        .localCheckpoint(eager=False)  # the count, pre, suc and rest
+    one = fits_one_task(64 * n + 2 * id_bytes)
+    if one:
+        src = src.coalesce(1)  # narrow: the whole fix runs in this one task
+    ends = src.where(F.length(s) >= fix_k).select(
+        s.alias("kid"),
+        F.substring(s, 1, fix_k).alias("__pk"),
+        F.substring(s, -fix_k, fix_k).alias("__sk"),
     )
-    # with AQE the lazy checkpoint's call already ran the dedup's shuffle
-    # stage; the count runs the last stage into the blocks and gives the
-    # walk its exact node count (state rows == cs rows by the suc filter
-    # below; the walk re-verifies it)
-    n_cs = count_rows(cs)
-    # pre: EVERY contig, keyed by its head fix_k-mer (so every contig
-    # appears in the pointer state exactly once); suc: only tails that
-    # are unique junctions — a unique key is the tail of exactly one
-    # contig, so the left join below matches at most one predecessor.
-    pre = cs.select("kid", F.substring("kid", 1, fix_k).alias("__pk"))
-    suc = (
-        cs.select(
-            F.col("kid").alias("__pred"),
-            F.substring("kid", -fix_k, fix_k).alias("__pk"),
+    # a head key stays only where it is a unique junction — the head of
+    # exactly one contig and the tail of exactly one — counted over every
+    # contig BEFORE repeats are dropped (a repeated contig is no unique
+    # junction). Window counts over the head keys (rows with a kid) and
+    # the tail keys, not a join: in one partition they plan no Exchange.
+    by_key = Window.partitionBy("__key")
+    keys = ends.select("kid", "__sk", F.col("__pk").alias("__key")).unionByName(
+        ends.select(
+            F.lit(None).cast("string").alias("kid"),
+            F.lit(None).cast("string").alias("__sk"),
+            F.col("__sk").alias("__key"),
         )
-        .join(F.broadcast(unique_j), "__pk")
     )
-    done, rest = walk_paths(pre, suc, n_cs, max_rounds)
-    # cycle members never reach a head — they pass through unfused
-    fused = _stitch(done.groupBy("anc"), fix_k).unionByName(
-        rest.select(F.col("kid").alias("seq"))
+    unique = (F.count("kid").over(by_key) == 1) & (
+        F.count(F.lit(1)).over(by_key) == 2
     )
-    short = contigs.where(F.length(s) < fix_k).select(s.alias("seq"))
-    return fused.unionByName(short).dropDuplicates()
+    nodes = (
+        keys.withColumn("__pk", F.when(unique, F.col("__key")))
+        .where(F.col("kid").isNotNull())
+        .select("kid", "__pk", "__sk")
+        .distinct()  # a repeated contig repeats its keys too
+    )
+    n_nodes = None
+    if not one:
+        # the count, then the shuffle walk's pre and suc; the count gives
+        # the walk its exact node count (the walk re-verifies it)
+        nodes = nodes.localCheckpoint(eager=False)
+        n_nodes = count_rows(nodes)
+    walked = walk(nodes, n_nodes, max_rounds)
+    # one consumer of the walk: a cycle member (never done) is a group of
+    # its own, whose stitch is the contig itself
+    fused = _stitch(
+        walked.groupBy(F.when(F.col("__done"), F.col("anc")).otherwise(F.col("kid"))),
+        fix_k,
+    )
+    return fused.unionByName(src.where(F.length(s) < fix_k)).dropDuplicates()
 
 
 def _stitch(groups, fix_k: int) -> DataFrame:
@@ -149,50 +150,3 @@ def _stitch(groups, fix_k: int) -> DataFrame:
             lambda x: F.substring(x["kid"], fix_k + 1, F.length(x["kid"])),
         ).alias("seq")
     )
-
-
-def _fix_one_partition(
-    contigs: DataFrame, fix_k: int, seq_col: str, max_rounds: int
-) -> DataFrame:
-    """:func:`fix_junctions` in one partition: junction support, the
-    repeat drop, the walk and the stitch run in one task with no
-    Exchange (the walk kernel counts the support, :func:`_junction_ends`)."""
-    one = contigs.select(F.col(seq_col).alias("seq")).coalesce(1)
-    s = F.col("seq")
-    nodes = one.where(F.length(s) >= fix_k).select(
-        s.alias("kid"),
-        F.substring(s, 1, fix_k).alias("__pk"),
-        F.substring(s, -fix_k, fix_k).alias("__sk"),
-    )
-    walked = walk_nodes(nodes, max_rounds, prepare=_junction_ends)
-    # one consumer of the walk: a cycle member (never done) is a group of
-    # its own, whose stitch is the contig itself
-    fused = _stitch(
-        walked.groupBy(F.when(F.col("__done"), F.col("anc")).otherwise(F.col("kid"))),
-        fix_k,
-    )
-    short = one.where(F.length(s) < fix_k)
-    return fused.unionByName(short).dropDuplicates()
-
-
-def _junction_ends(t):
-    """Arrow node table (kid, __pk, __sk) → the same with a head key kept
-    only where it is a unique junction — the head of exactly one row and
-    the tail of exactly one row, counted over every row BEFORE repeated
-    contigs are dropped (a repeated contig is no unique junction) — and
-    with each contig once."""
-    import pandas as pd
-    import pyarrow as pa
-
-    heads = pd.Series(t.column("__pk").to_numpy())
-    tails = pd.Series(t.column("__sk").to_numpy())
-    unique = (heads.map(heads.value_counts()) == 1) & (
-        heads.map(tails.value_counts()) == 1
-    )
-    t = t.set_column(
-        t.schema.get_field_index("__pk"),
-        "__pk",
-        pa.array(heads.where(unique, None), type=t.schema.field("__pk").type),
-    )
-    first = ~pd.Series(t.column("kid").to_numpy()).duplicated().to_numpy()
-    return t.filter(pa.array(first))

@@ -80,6 +80,10 @@ def _walk_oracle(counts, keep=False):
     )
 
 
+# k-mers in the single path of the "giant" case
+GIANT = 10_000
+
+
 def _reads(case, k):
     if case == "rc_ring":
         # a ring that is its own reverse complement: x + revcomp(x) read
@@ -88,6 +92,10 @@ def _reads(case, k):
         ring = x + revcomp(x)
         wrap = ring + ring[:89]
         return [wrap[i : i + 90] for i in range(0, len(ring), 10)]
+    if case == "giant":
+        # one component: a single path of GIANT k-mers per strand
+        g = random_genome(GIANT + k - 1, seed=k)
+        return [g[i : i + 100] for i in range(0, len(g) - 50, 50)]
     return _seam_reads(case, k)
 
 
@@ -99,6 +107,8 @@ _ORACLE_CASES = [
     ("genome", 41, "collided", "rank"),
     ("genome", 31, "string", "rank"),
     ("genome", 32, "hashed", "rank"),  # a palindromic 32-mer
+    ("genome", 63, "hashed", "rank"),  # three blocks: 31 + 31 + 1 bases
+    ("giant", 41, "hashed", "rank"),
     ("circular", 31, "packed", "rank"),
     ("single", 31, "packed", "rank"),
     ("single", 41, "hashed", "rank"),
@@ -137,8 +147,10 @@ def test_rank_paths_matches_walk_oracle(
     keep = algorithm == "contract"
     got = sorted(tuple(r) for r in rank_paths(df, k, algorithm=algorithm).collect())
     assert got == _walk_oracle(counts, keep=keep)
-    if case in ("genome", "single"):
+    if case in ("genome", "single", "giant"):
         assert got
+    if case == "giant":
+        assert max(len(s) for s, _, _ in got) == GIANT + k - 1
     rings = [s for s, _, _ in got if "N" not in s]
     if case == "circular" and not keep:
         assert counts and not got
@@ -164,6 +176,8 @@ _RUNG_CASES = [
     ("genome", 31, "packed"),
     ("genome", 41, "blocks"),
     ("genome", 32, "blocks"),  # even k: the palindrome dedup runs
+    ("genome", 63, "blocks"),  # three blocks: 31 + 31 + 1 bases
+    ("giant", 31, "packed"),
     ("genome", 31, "string"),
     ("circular", 31, "packed"),
     ("circular", 41, "blocks"),
@@ -198,8 +212,10 @@ def test_rung_matches_walk_oracle(spark, gate, case, k, ids, algorithm):
     got = sorted(tuple(r) for r in rung.select("seq", "left_cover", "right_cover").collect())
     keep = algorithm == "contract"
     assert got == _rung_oracle(_pruned_counts(spark, _reads(case, k), k), keep)
-    if case in ("genome", "single") or (keep and case != "empty"):
+    if case in ("genome", "single", "giant") or (keep and case != "empty"):
         assert got
+    if case == "giant":
+        assert [len(s) for s, _, _ in got] == [GIANT + k - 1]
 
 
 def test_one_partition_plans_have_no_exchange(spark, monkeypatch):
@@ -267,15 +283,19 @@ def test_assemble_contract_gives_one_contig_per_ring(spark, gate, k, packed):
     assert got in (ring, {revcomp(km) for km in ring})
 
 
-def test_fix_junctions_chain_and_cycle(spark, gate):
-    """A 12-contig junction chain fuses into one contig and a 3-contig
-    junction cycle passes through unfused, on both walks."""
+@pytest.mark.parametrize("n_chain", [12, 200])
+def test_fix_junctions_chain_and_cycle(spark, gate, n_chain):
+    """A junction chain (12 contigs, and 200: one giant component) fuses
+    into one contig and a 3-contig junction cycle passes through
+    unfused, on both walks."""
     from reflexiv_spark.operators.fixing import fix_junctions
 
-    js = [random_genome(31, seed=60 + i) for i in range(11)]
+    # seeds apart: random_genome(31, s) is a prefix of random_genome(40, s)
+    js = [random_genome(31, seed=1000 + i) for i in range(n_chain - 1)]
     ends = [random_genome(40, seed=80)] + js + [random_genome(40, seed=81)]
     chain = [
-        ends[i] + random_genome(30, seed=90 + i) + ends[i + 1] for i in range(12)
+        ends[i] + random_genome(30, seed=2000 + i) + ends[i + 1]
+        for i in range(n_chain)
     ]
     ks = [random_genome(31, seed=s) for s in (45, 46, 47)]
     cycle = [ks[i] + random_genome(40, seed=48 + i) + ks[(i + 1) % 3] for i in range(3)]
@@ -286,6 +306,38 @@ def test_fix_junctions_chain_and_cycle(spark, gate):
     out = {r.seq for r in fix_junctions(df, max_rounds=12).collect()}
     fused = chain[0] + "".join(c[31:] for c in chain[1:])
     assert out == {fused, *cycle, short}
+
+
+def test_contract_walks_each_node_set_once(spark, monkeypatch, tmp_path):
+    """Under the gate ``algorithm="contract"`` runs the one-task kernel
+    once over the k-mers and once over the kept ring: the walk's output
+    is read by the kept cycles' count and by the final aggregate, and
+    must not be computed for each."""
+    from reflexiv_spark.operators import extension as ext
+    from reflexiv_spark.pipelines.assemble import assemble
+
+    log = tmp_path / "walks"
+    orig = ext._walk_task
+
+    def spy(batches, **kw):
+        batches = list(batches)
+        with open(log, "a") as f:
+            f.write(f"{sum(b.num_rows for b in batches)}\n")
+        yield from orig(iter(batches), **kw)
+
+    monkeypatch.setattr(ext, "_walk_task", spy)
+    ring, line = random_genome(3000, seed=1), random_genome(2000, seed=2)
+    wrap = ring + ring[:99]
+    reads = [wrap[i : i + 100] for i in range(0, 3000, 5)]
+    reads += [line[i : i + 100] for i in range(0, 1901, 5)]
+    df = spark.createDataFrame([(r,) for r in reads], "seq string")
+    contigs = assemble(
+        df, k=31, min_coverage=2, min_contig=31, packed=True, algorithm="contract"
+    ).collect()
+    assert sorted(len(r.seq) for r in contigs) == [1990, 3030]
+    walks = [int(n) for n in log.read_text().split()]
+    # every k-mer of both strands once, then one strand of the ring
+    assert len(walks) == 2 and walks[1] == 3000 and walks[0] > 2 * 3000, walks
 
 
 def test_fix_junctions_counts_support_before_dropping_repeats(spark, gate):
@@ -332,13 +384,15 @@ def test_walk_nodes_fork_free_guard(spark):
     """The one-task kernel raises on a head key two nodes end in (an
     in-degree-2 key) and on a repeated id; two nodes ending in a key no
     node starts from are no fork."""
-    from reflexiv_spark.operators.extension import split_walk, walk_nodes
+    from reflexiv_spark.operators.extension import walk_nodes
 
     def walk(rows):
         nodes = spark.createDataFrame(
             rows, "kid bigint, __pk bigint, __sk bigint"
         ).coalesce(1)
-        done, rest = split_walk(walk_nodes(nodes, 10))
+        walked = walk_nodes(nodes, 10)
+        done = walked.where("__done").drop("__done")
+        rest = walked.where(~F.col("__done")).drop("__done")
         return sorted(tuple(r) for r in done.collect()), rest.collect()
 
     with pytest.raises(Exception, match="fork-free precondition violated"):

@@ -74,3 +74,26 @@ def test_override_values_parse_to_int_float_or_string(perf):
     for bad in ("m.x", "attr=1", ".x=1", "m.=1"):
         with pytest.raises(ValueError):
             perf.parse_override(bad)
+
+
+@pytest.mark.parametrize(
+    "target,k", [("rung:600", 31), ("rung:600", 41), ("fixing:150", 31)]
+)
+def test_gate_open_and_shut_give_one_digest(
+    spark, perf, monkeypatch, tmp_path, target, k
+):
+    """``perf.py``'s synthetic gate A/B targets build, and give the same
+    digest through the one-partition plans (gate forced open) and the
+    shuffle plans (forced shut)."""
+    from types import SimpleNamespace
+
+    from reflexiv_spark.operators import extension as ext
+
+    args = SimpleNamespace(k=k, paths=4, contig_len=80)
+    digests = []
+    for gate in (1 << 62, -1):
+        monkeypatch.setattr(ext, "_LOOP_BCAST_BYTES", gate)
+        job = perf._job(spark, target, args, str(tmp_path / f"input{gate}"))
+        digests.append(perf.digest(job()))
+    assert digests[0] == digests[1], digests
+    assert not digests[0].startswith("0:")
